@@ -3,5 +3,5 @@
 set -euo pipefail
 SF="$1"; Q="$2"; CPUS="${3:-32}"
 cd "$(dirname "$0")/.."
-OPENS="--add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/jdk.internal.ref=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
+. scripts/jvm_opens.sh
 SPARK_GRAFT_CPUS="$CPUS" java -Xmx80g $OPENS -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.tools.StageTrace "$SF" "$Q"

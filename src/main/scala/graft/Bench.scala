@@ -1,23 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Tungsten page size is derived from heap/cores when unset: on a
-      // large-heap local[32] driver (the harness runs with ~90g) it
-      // hits the 64MB cap and every small task allocates+zeroes 64MB
-      // pages — measured 6× slowdown on the shuffle-heavy queries
-      // (q30 35s -> 5.8s at 90g). Pin a sane page size for the
-      // benchmark's task sizes; real clusters with normal executor
-      // heaps derive ~the same value on their own.
-      .config("spark.buffer.pageSize", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Untimed warmup: exercise scan/agg/sort codegen + JIT once so the
     // first measured query doesn't absorb session initialization, and
     // touch each input table once so no measured query pays the
@@ -91,6 +76,10 @@ object Bench {
       Thread.sleep(100)
     }
 
+    // Queries that threw in any pass (warmup included): their timings
+    // measure a failure, not speed, so stdout names them.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+
     def runPass(tag: String): Seq[(String, Double)] = {
       passStats(s"$tag-begin")
       val out = runPassInner(tag)
@@ -103,8 +92,9 @@ object Bench {
       val t0 = System.nanoTime()
       System.err.println(f"[bench-trace] $tag $name start at ${(t0 - benchT0) / 1e9}%.2f")
       try { fn(spark, sfDir).count() } catch {
-        case t: Throwable => // visible in the trace: a ~0s timing is a FAILURE, not speed
+        case t: Throwable =>
           System.err.println(s"[bench-trace] $tag $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
+          failed += name
           -1L
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
@@ -190,7 +180,8 @@ object Bench {
     }
     val writeTotal = medians.collect { case (k, v) if writeQueries(k) => v }.sum
     val readTotal = total - writeTotal
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"pass_totals":$pt,"spread_pct":${f"$spreadPct%.1f"},"read_total":${f"$readTotal%.3f"},"write_total":${f"$writeTotal%.3f"}}""")
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"pass_totals":$pt,"spread_pct":${f"$spreadPct%.1f"},"read_total":${f"$readTotal%.3f"},"write_total":${f"$writeTotal%.3f"},"failed":$failedJson}""")
     spark.stop()
   }
 }

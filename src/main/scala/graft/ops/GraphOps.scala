@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,90 +21,27 @@ object GraphOps {
       .select(least(col("s"), col("t")).as("a"), greatest(col("s"), col("t")).as("b"))
       .distinct()
 
-  /** Per-JVM scratch root for bucketed adjacency tables — same
-    * lifecycle contract as the interop round-trip root: writers run in
-    * overwrite mode against stable names, the directory dies with the
-    * JVM. Driver-local default, correct for local masters; a cluster
-    * deployment points this at shared storage (where the adjacency
-    * write happens once at ingestion, not per job).
-    */
-  private lazy val adjScratch: String = {
-    val d = Files.createTempDirectory("graft_graph_adj")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
-    d.toString
-  }
-
-  /** Materialize the symmetrized adjacency as a BUCKETED, bucket-sorted
-    * table on the vertex key — the layout every round of an iterative
-    * graph loop then joins/aggregates against with ZERO exchange and
-    * zero sort on the edge side (the q179 co-location machinery applied
-    * to iteration). This replaces the round-1..5 `repartition.persist`
-    * idiom: an InMemoryRelation also keeps its partitioning, but it
-    * keeps it in EXECUTOR MEMORY — at 100 TB the adjacency does not fit
-    * in storage memory, and a spilled/evicted cache silently recomputes
-    * the symmetrize-shuffle per round. A bucketed table is the
-    * disk-native form of the same layout: columnar, pruned reads, the
-    * partitioning+ordering recorded in the catalog, amortized across
-    * every round (and, at ingestion time, every JOB).
-    *
-    * One file per bucket: the writer repartitions by the bucket
-    * expression first, so bucket-side sort order is preserved at scan
-    * time (multi-file buckets forfeit the sorted-scan contract).
-    */
-  private def bucketedSym(e: DataFrame, tag: String): DataFrame = {
-    val spark = e.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
-    val name = s"graft_adj_$tag"
-    e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .repartition(n, col("a"))
-      .write.mode("overwrite")
-      .bucketBy(n, "a").sortBy("a")
-      .option("path", s"$adjScratch/$tag")
-      .saveAsTable(name)
-    spark.table(name)
-  }
-
-  /** Session conf flag: "true" → iterative loops land their
-    * symmetrized adjacency as a persistent BUCKETED table
-    * ([[bucketedSym]] — the ingestion-time layout a production
-    * deployment amortizes across jobs); anything else → the same
-    * layout held as a PINNED in-session frame ([[pinnedSym]]).
-    */
-  val BucketedAdjacencyFlag = "spark.graft.bucketedAdjacency"
-
-  /** The [[bucketedSym]] layout without the table landing: symmetrize,
-    * hash-partition and sort on the vertex key, then pin
+  /** The adjacency layout every iterative round joins against:
+    * symmetrize, hash-partition and sort on the vertex key, then pin
     * ([[Pin]]: localCheckpoint, or reliable checkpoint under
     * [[Pin.Flag]]). `Dataset.checkpoint` PRESERVES the physical plan's
     * outputPartitioning and outputOrdering in the resulting LogicalRDD,
-    * so every round's join/aggregate on `a` still plans with ZERO
-    * exchange and zero sort on the adjacency side — identical
-    * round-shape to the bucketed table, minus the parquet encode,
-    * file commit, catalog round-trip and per-round columnar re-scan
-    * (measured r10: the landing owned ~2–4 s of each graph query at
-    * bench scale). Unlike a `persist` (the layout idiom this family
-    * rejected in r8), checkpoint blocks are the frame's SOURCE, not a
-    * cache: under memory pressure they spill to disk rather than
-    * silently evict-and-recompute the symmetrize shuffle per round.
-    * The durability trade is [[Pin]]'s documented contract (executor
-    * loss kills the loop; flip [[Pin.Flag]] for reliable checkpoints);
-    * deployments that want the adjacency as a persistent artifact
-    * flip [[BucketedAdjacencyFlag]] and get the r9 table landing
-    * unchanged.
+    * so every round's join/aggregate on `a` plans with ZERO exchange
+    * and zero sort on the adjacency side, with no parquet encode, file
+    * commit, catalog round-trip or per-round columnar re-scan (measured
+    * r10: landing the adjacency as a bucketed table owned ~2–4 s of
+    * each graph query at bench scale). Unlike a `persist` (the layout
+    * idiom this family rejected in r8), checkpoint blocks are the
+    * frame's SOURCE, not a cache: under memory pressure they spill to
+    * disk rather than silently evict-and-recompute the symmetrize
+    * shuffle per round. The durability trade is [[Pin]]'s documented
+    * contract (executor loss kills the loop; flip [[Pin.Flag]] for
+    * reliable checkpoints).
     */
   private def pinnedSym(e: DataFrame): DataFrame =
     Pin.pinPartitioned(
       e.union(e.select(col("b").as("a"), col("a").as("b"))),
       parts = Seq(col("a")), sortBy = Seq(col("a")))
-
-  /** The adjacency layout every iterative round joins against:
-    * bucketed table or pinned frame by [[BucketedAdjacencyFlag]] —
-    * same partitioning+ordering contract either way.
-    */
-  private def symLayout(e: DataFrame, tag: String): DataFrame =
-    if (e.sparkSession.conf.getOption(BucketedAdjacencyFlag)
-      .exists(_.equalsIgnoreCase("true"))) bucketedSym(e, tag)
-    else pinnedSym(e)
 
   /** Per-vertex triangle counts by degree-ordered orientation (the
     * node-iterator++ / compact-forward algorithm): orient every edge
@@ -253,14 +188,14 @@ object GraphOps {
       scale: Long = 1000000000L,
   ): DataFrame = {
     // The symmetrized edge list is the streamed side of one join PER
-    // ITERATION, always on the same key: land it ONCE as a bucketed,
-    // bucket-sorted table ([[bucketedSym]]) so every iteration's
+    // ITERATION, always on the same key: pin it ONCE partitioned and
+    // sorted on that key ([[pinnedSym]]) so every iteration's
     // sort-merge join reads the layout exchange-free and sort-free,
     // and the per-iteration shuffle carries ranks (|V| rows), never
     // edges.
-    val sym = symLayout(canon(edges, srcCol, dstCol), "pr")
+    val sym = pinnedSym(canon(edges, srcCol, dstCol))
     // deg: |V| rows, referenced every iteration — freeze it once (the
-    // groupBy rides the bucketing, so this costs no exchange)
+    // groupBy rides the pinned layout, so this costs no exchange)
     val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
       .pinLineage(eager = true)
     var pr = deg.select(col("v"), lit(scale).as("pr"), col("deg"))
@@ -312,7 +247,7 @@ object GraphOps {
       seedCol: String,
       maxHops: Int = 20,
   ): DataFrame = {
-    val sym = symLayout(canon(edges, srcCol, dstCol), "bfs")
+    val sym = pinnedSym(canon(edges, srcCol, dstCol))
     var frontier = seeds.select(col(seedCol).as("v")).distinct()
       .join(sym.select(col("a").as("v")), Seq("v"), "left_semi")
       .pinLineage(eager = true)
@@ -361,10 +296,10 @@ object GraphOps {
     * oscillation on bipartite-ish structures is cut off by the round
     * budget rather than chased to a fixpoint.
     *
-    * Scale: the symmetrized adjacency persists pre-partitioned and
+    * Scale: the symmetrized adjacency is pinned pre-partitioned and
     * pre-sorted on the join key (the [[pageRankFixed]] layout-reuse
     * idiom), so each round costs one edge⋈label join whose streamed
-    * side reuses the cached layout plus two map-side-combined
+    * side reuses the pinned layout plus two map-side-combined
     * aggregates; the per-round shuffle carries (v, label) pairs
     * bounded by |E|, never the graph re-derived.
     *
@@ -377,10 +312,10 @@ object GraphOps {
       dstCol: String,
       rounds: Int = 3,
   ): DataFrame = {
-    val sym = symLayout(canon(edges, srcCol, dstCol), "lpa")
+    val sym = pinnedSym(canon(edges, srcCol, dstCol))
     var labels = sym.select(col("a").as("v")).distinct().withColumn("lbl", col("v"))
     for (_ <- 1 to rounds) {
-      // join on `a` (rides the bucketing — the labels side, |V| rows,
+      // join on `a` (rides the pinned layout — the labels side, |V| rows,
       // is the only exchange), collect toward `b`: by symmetry of sym
       // this delivers exactly each vertex's multiset of neighbor
       // labels, same as joining on b and grouping by a.
@@ -414,7 +349,7 @@ object GraphOps {
     * longest deletion chain, small for real heavy-tailed graphs).
     *
     * Scale (r11 — DELTA-FRONTIER form, guide §2.4/§5): the symmetrized
-    * adjacency lands ONCE ([[symLayout]]) and is NEVER filtered or
+    * adjacency is pinned ONCE ([[pinnedSym]]) and is NEVER filtered or
     * re-derived; the full degree aggregate runs ONCE (it rides the
     * layout — a directed row (a,b) exists per endpoint, so count-by-a
     * IS the degree). Each round then maintains the surviving degrees
@@ -445,7 +380,7 @@ object GraphOps {
       rounds: Int,
       broadcastRailRows: Long = 4000000L,
   ): DataFrame = {
-    val adj = symLayout(canon(edges, srcCol, dstCol), "kcore")
+    val adj = pinnedSym(canon(edges, srcCol, dstCol))
     // the one full recount; lazy pin — the round's probe materializes it
     var deg = Pin.pinAligned(
       adj.groupBy(col("a").as("v")).agg(count(lit(1)).as("dg")), eager = false)

@@ -112,8 +112,12 @@ object Pin {
     * a clone per pin call (loops pin every round) accumulates
     * listeners that every subsequent job in the JVM fans events
     * through — measured as a 10–25% drag on UNRELATED queries after a
-    * few hundred pins. Weak keys: a retired parent session releases
-    * its clone. */
+    * few hundred pins. The weak keys free only this map's entry: the
+    * clone stays reachable through its listener-bus registration, so
+    * a per-parent clone is never fully reclaimed. An application that
+    * creates many short-lived sessions and pins once in each keeps one
+    * clone (and one listener) per such session for the JVM's life.
+    */
   private val cloneCache =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]
 
@@ -122,30 +126,30 @@ object Pin {
     * caller's session. The clone shares the SparkContext (so blocks,
     * broadcasts and the checkpoint RDD are the same), but its SQLConf
     * is private: no session-global conf mutation is observable by any
-    * concurrent query. Runtime conf the materialization depends on
-    * ([[Flag]], shuffle partitions) is re-copied from the caller on
-    * every pin, so caller-side conf changes stay visible; two threads
-    * pinning concurrently with DIFFERENT shuffle-partition settings
-    * would race on the shared clone conf — graft's loop operators pin
-    * sequentially within a query, and cross-query isolation (the
-    * point of the clone) is unaffected.
+    * concurrent query. On every pin the clone's runtime conf is synced
+    * to the caller's (every non-static entry set or unset to match),
+    * so whatever the caller set — broadcast thresholds, join and
+    * codegen switches, [[Flag]] — governs the materialization too. The sync and
+    * the planning hold the clone's lock, so a pin always plans under
+    * one consistent snapshot of its caller's conf.
     */
   private def pinNonAdaptive(df: DataFrame, eager: Boolean): DataFrame = {
     import org.apache.spark.sql.graftshim.DatasetShim
+    import org.apache.spark.sql.internal.SQLConf
     val spark = df.sparkSession
     val clone = cloneCache.synchronized {
       cloneCache.computeIfAbsent(spark, s => s.newSession())
     }
-    clone.conf.set("spark.sql.adaptive.enabled", "false")
-    // keep plan-affecting session conf the materialization relies on
-    Seq(Flag, "spark.sql.shuffle.partitions").foreach { k =>
-      spark.conf.getOption(k) match {
-        case Some(v) => clone.conf.set(k, v)
-        case None => clone.conf.unset(k)
-      }
+    val pinned = clone.synchronized {
+      val cloneConf = clone.sessionState.conf
+      def runtime(m: Map[String, String]) = m.filter { case (k, _) => !SQLConf.isStaticConfigKey(k) }
+      val want = runtime(spark.sessionState.conf.getAllConfs) +
+        (SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false")
+      val have = runtime(cloneConf.getAllConfs)
+      (have.keySet -- want.keySet).foreach(cloneConf.unsetConf)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) cloneConf.setConfString(k, v) }
+      Pin(DatasetShim.ofRows(clone, df.queryExecution.analyzed), eager)
     }
-    val bound = DatasetShim.ofRows(clone, df.queryExecution.analyzed)
-    val pinned = Pin(bound, eager)
     DatasetShim.ofRows(spark, pinned.queryExecution.analyzed)
   }
 

@@ -29,14 +29,7 @@ object EndToEnd {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_e2e").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     // ---- 1. extract (S1-S3): events become the payload; the logical

@@ -29,14 +29,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     materialize(spark, src, out, factor)
     spark.stop()
   }

@@ -3,25 +3,16 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage anatomy of one registered query: wall time, task count,
   * input/shuffle volumes and the first line of the stage's call site —
   * the evidence `.explain` can't give (WHERE the wall clock went).
-  * runMain graft.tools.StageTrace <sfDir> <queryName> [cpus]
+  * runMain graft.tools.StageTrace <sfDir> <queryName> (cores: SPARK_GRAFT_CPUS)
   */
 object StageTrace {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.buffer.pageSize", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     case class St(id: Int, wallMs: Long, tasks: Int, inRec: Long, shrRec: Long,
         shwRec: Long, shwBytes: Long, spill: Long, gcMs: Long, site: String)

@@ -15,11 +15,6 @@ import graft.functions.EtlFunctions
   * [[Warehouse.enforcePrimaryKey]]) since Spark tables have no
   * constraint engine. Money lands as both micros (lossless int64,
   * the storage form) and currency decimal (the serving form, X8).
-  *
-  * Bucketing: both facts hash-bucket by `customer_id` so fact⋈fact and
-  * fact⋈dim-by-customer joins co-locate — at 100 TB this removes the
-  * dominant shuffle from every reconciliation/rollup join between the
-  * two grains. The bucketed-join test proves the Exchange disappears.
   */
 object FactTables {
 
@@ -162,20 +157,4 @@ object FactTables {
         case None => spark.conf.unset(key)
       }
     }
-
-  /** Write a fact table bucketed on customer_id (co-located joins). */
-  def writeBucketed(df: DataFrame, tableName: String, buckets: Int = 16): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, "customer_id")
-      .sortBy("customer_id")
-      .format("parquet")
-      .saveAsTable(tableName)
-
-  /** Join two same-bucketed facts on customer_id. With matching bucket
-    * specs Spark plans a sort-merge join with NO shuffle exchange on
-    * either side — the point of bucketing.
-    */
-  def bucketedJoin(spark: SparkSession, left: String, right: String): DataFrame =
-    spark.table(left).as("l").join(spark.table(right).as("r"), Seq("customer_id"))
 }

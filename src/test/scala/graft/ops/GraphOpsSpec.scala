@@ -302,21 +302,6 @@ class GraphOpsSpec extends SparkSpec {
       s"the returned frame must not re-shuffle anything:\n$plan")
   }
 
-  test("kCorePeel under the bucketed-adjacency flag lands the table and peels identically") {
-    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
-    spark.conf.set(GraphOps.BucketedAdjacencyFlag, "true")
-    try {
-      val out = GraphOps.kCorePeel(g.toDF("a", "b"), "a", "b", k = 2, rounds = 3)
-      assert(out.as[(Long, Long)].collect().toMap == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-      // the r9 persistent layout is still what the loop builds on
-      assert(spark.catalog.tableExists("graft_adj_kcore"),
-        "the bucketed adjacency table must land under the flag")
-      val plan = finalPlanStr(out)
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"the returned frame must not re-shuffle anything under the bucketed layout either:\n$plan")
-    } finally spark.conf.unset(GraphOps.BucketedAdjacencyFlag)
-  }
-
   test("labelPropagation round: the edge⋈labels join rides the pinned layout (no exchange under it)") {
     val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (1L, 5L))
     val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -329,8 +314,7 @@ class GraphOpsSpec extends SparkSpec {
       // ONE exchange in the whole round — the post-join argmax shuffle
       // (|V|·labels rows). The join reads the pinned adjacency on
       // both sides with zero exchange (the checkpoint-captured
-      // HashPartitioning + sort order — the bucketed-table contract
-      // without the landing); round 1's neighbor-label count even
+      // HashPartitioning + sort order); round 1's neighbor-label count even
       // rides the subset-partitioning rule (lbl ≡ join key).
       val n = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(n <= 1, s"expected ≤1 shuffle in a round, found $n:\n$plan")

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** [[Widen.widened]] — the scale-adaptive parallelism floor for
   * scan-fused hot expressions. The contract under test: narrow
@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `.rdd` probe would execute stages under AQE), or streaming pass
   * through UNTOUCHED.
   */
-class WidenSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("widen-spec")
-    .getOrCreate()
+class WidenSpec extends SparkSpec {
 
   test("narrow frame is widened to the session shuffle parallelism") {
     val one = spark.range(0, 100, 1, numPartitions = 1).toDF("id")

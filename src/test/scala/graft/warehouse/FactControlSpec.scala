@@ -3,7 +3,6 @@ package graft.warehouse
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -99,28 +98,6 @@ class FactTablesSpec extends SparkSpec {
         .where(col("date") === lit("2024-01-02").cast("date"))
       assert(pruned.count() == 2L)
     } finally spark.sql("DROP TABLE IF EXISTS graft_cat_test")
-  }
-
-  test("bucketed fact⋈fact join on customer_id plans with NO shuffle exchange") {
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
-      def fact(n: Int): DataFrame =
-        (1 to n).map(i => (s"c${i % 7}", i.toLong, Date.valueOf("2024-01-01"), i.toLong))
-          .toDF("customer_id", "campaign_id", "date", "impressions")
-      FactTables.writeBucketed(fact(500), "fact_a", buckets = 4)
-      FactTables.writeBucketed(fact(300), "fact_b", buckets = 4)
-      val joined = FactTables.bucketedJoin(spark, "fact_a", "fact_b")
-      joined.count() // force planning through AQE
-      val shuffles = joined.queryExecution.executedPlan.collect {
-        case s: ShuffleExchangeLike => s
-      }
-      assert(shuffles.isEmpty, s"expected shuffle-free bucketed join, got:\n${joined.queryExecution.executedPlan}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.sql("DROP TABLE IF EXISTS fact_a")
-      spark.sql("DROP TABLE IF EXISTS fact_b")
-    }
   }
 }
 
