@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Index-sizing statistics without a table scan. The ANN/clustering
@@ -50,12 +50,12 @@ object CorpusStats {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    // One listStatus per directory, not listFiles(recursive): without
+    // native Hadoop that forks an `ls` per file for its permissions.
+    def walk(dir: Path): Iterator[FileStatus] =
+      fs.listStatus(dir).iterator.flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st))
     // data files only — skip _SUCCESS/_metadata/.crc and hidden dirs
-    val it = fs.listFiles(p, true)
-    val files = Iterator
-      .continually(if (it.hasNext) Some(it.next()) else None)
-      .takeWhile(_.isDefined)
-      .flatten
+    val files = walk(p)
       .filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")

@@ -1,11 +1,16 @@
 package graft.sink
 
-import graft.ops.Pin.PinOps
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ConfShim
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.model.PartitionKey
 
@@ -13,12 +18,29 @@ import graft.model.PartitionKey
   * docs/raw_sink_contract.md:15-31; writers raw_sink_local.py:11-48,
   * raw_sink_object.py:27-133).
   *
-  * Layout (identical key scheme to the reference):
+  * Layout (the reference's key scheme, with Spark's partition-path
+  * escaping applied to every value):
   * {{{
   * <root>/source=<s>/customer_id=<c>/query_name=<q>/logical_date=<d>/run_id=<r>/
   *     part-*.parquet          # payload (K1) — parquet, not JSONL: columnar wins
   *     _SEAL.json              # metadata, written LAST (K2): the seal
+  * <root>/_manifest/part-*.parquet   # the read index: one SealRow per sealed run
   * }}}
+  * Every directory name is built by one function, [[RawSink.runDirPath]],
+  * with `ExternalCatalogUtils.escapePathName` — the escaping Spark's
+  * `partitionBy` applies to the payload — so a seal always sits beside
+  * its payload. A minted run id `2024-02-01T00:00:00.000Z` therefore
+  * lives in `run_id=2024-02-01T00%3A00%3A00.000Z`; readers of the
+  * reference layout that walk the tree themselves must unescape
+  * `run_id` (and any other value) with `unescapePathName`, as
+  * [[listRuns]] and the repair walk do.
+  *
+  * Roots written before this layout sealed a minted run into the
+  * unescaped sibling `run_id=2024-02-01T00:00:00.000Z` (the payload
+  * was always escaped), as do the reference's own writers. They need
+  * no migration: the K3 check, [[isSealed]] and [[readSeal]] look at
+  * that sibling too ([[RawSink.sealDirs]]), the repair walk reads each
+  * seal from the directory it found it in, and vacuum deletes both.
   *
   * Semantics carried over exactly:
   *  - metadata-last seal: a partition is invisible/incomplete until
@@ -33,15 +55,24 @@ import graft.model.PartitionKey
   * Scale: the payload write is one distributed `partitionBy` job (all
   * logical partitions of a run in a single pass — no per-partition
   * driver loop like the reference's nested query×customer iteration,
-  * SURVEY §3.1). Seals are written EXECUTOR-SIDE from the distributed
-  * per-partition counts (no driver collect in the write path), and a
-  * seal MANIFEST table at `<root>/_manifest` indexes every sealed
-  * (key, run_id) so the read side joins one small parquet table
-  * instead of recursively listing millions of directories. A sink
-  * written without a manifest (e.g. by the reference) still reads —
-  * [[sealedRuns]] falls back to listing — and [[repairManifest]]
-  * reconciles the index from the directory tree after a crash between
-  * seal and manifest append.
+  * SURVEY §3.1). The K3 check and the seal writes run EXECUTOR-SIDE,
+  * as RDD jobs over the run's seal rows.
+  *
+  * The seal MANIFEST at `<root>/_manifest` is the read index:
+  * [[readAll]], [[authoritativeRows]] and [[sealedRuns]] read exactly
+  * the run directories it lists — no recursive listing of the tree, no
+  * schema inference (the payload schema is the one this instance wrote,
+  * or one inference per instance), and partition columns read as the
+  * strings in the directory names. Driver bound: the manifest is
+  * collected, one [[RawSink.SealRow]] per sealed run, and reused while
+  * the listing of `_manifest` is unchanged. That is fewer entries than
+  * the file index of a whole-tree read, which also covers unsealed and
+  * superseded payload.
+  *
+  * A sink written without a manifest (e.g. by the reference) still
+  * reads — [[sealedRuns]] falls back to a `listStatus` walk of the
+  * tree — and [[repairManifest]] reconciles the index from the tree
+  * after a crash between seal and manifest append.
   */
 final class RawSink(spark: SparkSession, root: String) {
   import RawSink._
@@ -49,49 +80,52 @@ final class RawSink(spark: SparkSession, root: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hadoopConf)
 
-  private def runDir(key: PartitionKey, runId: String): Path =
-    new Path(
-      s"$root/source=${key.source}/customer_id=${key.customerId}" +
-        s"/query_name=${key.queryName}/logical_date=${key.logicalDate}/run_id=$runId"
-    )
+  /** The collected manifest, with the `_manifest` listing it was read at. */
+  @volatile private var manifestCache: (Seq[String], Seq[SealRow]) = (Nil, Nil)
+  /** Payload columns (key columns excluded) of the frames this instance wrote. */
+  @volatile private var payloadSchema: Option[StructType] = None
 
-  def isSealed(key: PartitionKey, runId: String): Boolean =
-    fs.exists(new Path(runDir(key, runId), SealFile))
+  private def runDir(key: PartitionKey, runId: String): Path =
+    runDirPath(root, key.source, key.customerId, key.queryName, key.logicalDate, runId)
+
+  /** The run's seal file, wherever [[RawSink.sealDirs]] finds one. */
+  private def sealPath(key: PartitionKey, runId: String): Option[Path] =
+    sealDirs(root, Tuple5RowCase(key.source, key.customerId, key.queryName, key.logicalDate, runId))
+      .iterator.map(new Path(_, SealFile)).find(fs.exists)
+
+  def isSealed(key: PartitionKey, runId: String): Boolean = sealPath(key, runId).nonEmpty
 
   /** K1+K2: write all logical partitions present in `df` under one
     * `run_id`, then seal each. `df` must carry the four key columns
     * plus payload columns. Throws if any targeted (key, run_id) is
     * already sealed (K3) — checked before any byte is written.
     *
-    * Every per-partition step runs on executors: the K3 pre-check, the
-    * seal writes (metadata-last, after the payload job completes), and
-    * the manifest append. The returned Seq is a convenience collect of
-    * the run's own seal rows (one per logical partition of THIS run) —
-    * callers working at million-partition scale should use
-    * [[sealedRuns]] instead.
+    * The run's seal rows (one per logical partition of THIS run) are
+    * collected once; the K3 pre-check and the metadata-last seal
+    * writes run executor-side as RDD jobs over them, and the manifest
+    * append is one small write. An empty `df` writes nothing.
     */
   def writeRun(df: DataFrame, runId: String, schemaVersion: String = "v1"): Seq[SealedPartition] = {
     import spark.implicits._
-    // Distinct logical partitions + record counts, computed
-    // distributedly; checkpointed so the three small jobs below reuse
-    // the aggregation instead of re-scanning the payload.
     val seals = df
       .groupBy(PartitionKey.columns.map(col): _*)
       .agg(count(lit(1)).as("record_count"))
       .withColumn("run_id", lit(runId))
       .withColumn("schema_version", lit(schemaVersion))
-      .pinLineage()
       .as[SealRow]
+      .collect()
+      .toSeq
+    if (seals.isEmpty) return Nil
 
     // K3, distributedly: any targeted (key, run_id) already sealed?
-    val confFactory = org.apache.spark.sql.graftshim.ConfShim.confFactory(hadoopConf)
+    val confFactory = ConfShim.confFactory(hadoopConf)
     val rootStr = root
-    val clash = seals
+    val clash = rowRdd(seals)
       .mapPartitions { it =>
         val conf = confFactory()
-        it.filter(s => RawSink.sealExists(conf, rootStr, s))
+        it.filter(s => RawSink.sealExists(conf, rootStr, s)).take(1)
       }
-      .take(1)
+      .collect()
     if (clash.nonEmpty)
       throw new IllegalStateException(
         s"refusing overwrite: partition ${clash.head} is sealed (raw_sink_contract)")
@@ -102,21 +136,25 @@ final class RawSink(spark: SparkSession, root: String) {
       .partitionBy(PartitionKey.columns :+ "run_id": _*)
       .mode("append") // append is safe: the run_id dir is exclusively ours
       .parquet(root)
+    notePayloadSchema(df.schema)
 
-    // Metadata-last seals, executor-side. create(overwrite=false) makes
-    // each seal an atomic claim; a task RETRY hitting its own seal is
-    // idempotent (identical deterministic content), while foreign seals
-    // were excluded by the K3 check above.
-    seals.foreachPartition { (it: Iterator[SealRow]) =>
+    // Metadata-last seals, executor-side. Each seal is an atomic claim;
+    // a task RETRY hitting its own seal is idempotent (identical
+    // deterministic content), while foreign seals were excluded by the
+    // K3 check above.
+    rowRdd(seals).foreachPartition { (it: Iterator[SealRow]) =>
       val conf = confFactory()
       it.foreach(s => RawSink.writeSealFile(conf, rootStr, s))
     }
 
-    // Index the new seals in the manifest (one small distributed append).
-    seals.toDF().write.mode("append").parquet(manifestDir)
-
-    seals.collect().map(_.toSealedPartition).toSeq
+    // Index the new seals in the manifest, after every seal landed.
+    writeManifest(seals, "append")
+    seals.map(_.toSealedPartition)
   }
+
+  /** Driver-side rows as an RDD, for the small executor-side jobs. */
+  private def rowRdd[T: scala.reflect.ClassTag](rows: Seq[T]) =
+    spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, spark.sparkContext.defaultParallelism)))
 
   /** Maintenance: rewrite each logical partition's AUTHORITATIVE rows
     * (the J3 ledger gate) as ONE file per partition under a new sealed
@@ -159,68 +197,65 @@ final class RawSink(spark: SparkSession, root: String) {
     *    then delete nothing for that key, or it would destroy the
     *    last validated data (run r1) while the key is mid-retry.
     *
-    * Returns the number of run directories removed, and rewrites the
-    * manifest to the survivors. OFFLINE maintenance: the manifest
+    * Returns the number of run directories removed. The manifest is
+    * rewritten to the survivors BEFORE any directory is deleted: a
+    * crash between the two steps leaves unindexed orphans, which no
+    * reader sees and the next vacuum (after its repair step) removes —
+    * never index rows pointing at deleted directories, which the
+    * path-driven reads would fail on. OFFLINE maintenance: the manifest
     * rewrite is not atomic for concurrent readers — run it in the
     * same maintenance window as any VACUUM.
     */
   def vacuumSuperseded(states: DataFrame, keepRuns: Int = 1): Long = {
     require(keepRuns >= 1, "keepRuns must be >= 1")
     repairManifest(): Unit // make the index authoritative before editing it
-    val manifest = manifestFiles() match {
-      case Some(files) => spark.read.parquet(files: _*)
+    val manifest = manifestRows() match {
+      case Some(rows) => rows
       case None => return 0L // empty sink
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(PartitionKey.columns.map(col): _*)
-      .orderBy(col("run_id").desc)
-    val auth = states
+    import spark.implicits._
+    // each key's validated run (the oldest, should `states` repeat a
+    // key); keys with no validated run contribute NO victims
+    val authority = states
       .where(col("status") === graft.model.PartitionState.Success &&
         col("current_run_id").isNotNull)
-      .select(PartitionKey.columns.map(col) :+ col("current_run_id").as("__auth_run"): _*)
-    // pinned: the manifest rewrite below replaces the files this derives from
-    val victims = manifest
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") > keepRuns)
-      .drop("__rk")
-      // inner join: keys with no validated run contribute NO victims
-      .join(auth, PartitionKey.columns)
-      .where(col("run_id") < col("__auth_run"))
-      .drop("__auth_run")
-      .pinLineage()
-    val n = victims.count()
-    if (n > 0) {
-      val confFactory = org.apache.spark.sql.graftshim.ConfShim.confFactory(hadoopConf)
+      .select(PartitionKey.columns.map(col) :+ col("current_run_id"): _*)
+      .as[(String, String, String, java.sql.Date, String)]
+      .collect()
+      .groupMapReduce(t => (t._1, t._2, t._3, t._4))(_._5)((a, b) => if (a < b) a else b)
+    val victims = manifest.groupBy(_.key).toSeq.flatMap { case (key, runs) =>
+      val older = runs.sortBy(_.run_id)(Ordering[String].reverse).drop(keepRuns)
+      authority.get(key).fold(Seq.empty[SealRow])(auth => older.filter(_.run_id < auth))
+    }
+    if (victims.nonEmpty) {
+      val gone = victims.map(_.id).toSet
+      writeManifest(manifest.filterNot(s => gone(s.id)), "overwrite")
+      val confFactory = ConfShim.confFactory(hadoopConf)
       val rootStr = root
-      import spark.implicits._
-      victims.as[RawSink.SealRow].foreachPartition { (it: Iterator[RawSink.SealRow]) =>
+      rowRdd(victims.map(_.id)).foreachPartition { (it: Iterator[Tuple5RowCase]) =>
         val conf = confFactory()
-        it.foreach { s =>
-          val dir = RawSink.runDirPath(rootStr, s)
-          dir.getFileSystem(conf).delete(dir, true): Unit
+        it.foreach { r =>
+          RawSink.sealDirs(rootStr, r).foreach(dir => dir.getFileSystem(conf).delete(dir, true): Unit)
         }
       }
-      val survivors = spark.read.parquet(manifestFiles().get: _*)
-        .join(victims.select(RawSink.Tuple5Row.schema.fieldNames.map(col): _*),
-          RawSink.Tuple5Row.schema.fieldNames.toSeq, "left_anti")
-        .pinLineage()
-      survivors.write.mode("overwrite").parquet(manifestDir)
     }
-    n
+    victims.size.toLong
   }
 
   private def manifestDir: String = s"$root/$ManifestDir"
 
+  private def writeManifest(rows: Seq[SealRow], mode: String): Unit =
+    spark.createDataset(rows)(Encoders.product[SealRow])
+      .coalesce(1)
+      .write.mode(mode).parquet(manifestDir)
+
   /** S5: read one seal back (driver-side; seals are tiny). */
-  def readSeal(key: PartitionKey, runId: String): Option[String] = {
-    val p = new Path(runDir(key, runId), SealFile)
-    if (!fs.exists(p)) None
-    else {
+  def readSeal(key: PartitionKey, runId: String): Option[String] =
+    sealPath(key, runId).map { p =>
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
     }
-  }
 
   /** S6: discover run_ids for a logical partition, ascending (ISO run
     * ids sort lexicographically == chronologically, T5).
@@ -233,38 +268,45 @@ final class RawSink(spark: SparkSession, root: String) {
         .filter(_.isDirectory)
         .map(_.getPath.getName)
         .filter(_.startsWith("run_id="))
-        .map(_.stripPrefix("run_id="))
+        .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix("run_id=")))
+        .distinct
         .sorted
         .toSeq
   }
 
   /** S4/S6: read the whole sink with partition columns recovered. Only
     * *sealed* runs are visible — the read-side half of the metadata-last
-    * contract (an unsealed partial write is never observable).
+    * contract (an unsealed partial write is never observable): the scan
+    * covers exactly the run directories the manifest lists.
     */
   def readAll(): DataFrame = {
-    // An unwritten sink reads as empty (key columns only) rather than
-    // throwing — mirrors listRuns' missing-directory behavior.
-    if (!fs.exists(new Path(root)) || !fs.listFiles(new Path(root), true).hasNext)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), RawSink.Tuple5Row.schema)
-    // Partition-column type inference would read a numeric-looking
-    // customer_id dir as long — and a post-hoc cast back to string is
-    // LOSSY ("007" → 7 → "7", breaking the seal join). Disable
-    // inference for this read so directory strings survive verbatim,
-    // then cast only logical_date (string→date is lossless for the
-    // contract's ISO dates).
-    val confKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "false")
+    val dirs = sealedIds().map(r => fs.makeQualified(runDirPath(root, r))).distinct
+    if (payloadSchema.isEmpty && dirs.nonEmpty)
+      notePayloadSchema(spark.read.parquet(dirs.head.toString).schema)
+    val dataSchema = payloadSchema.getOrElse(StructType(Nil))
+    // String-typed partition columns keep directory values verbatim: a
+    // numeric-looking customer_id "007" must not become 7. Only
+    // logical_date is cast (string→date is lossless for ISO dates).
+    val readSchema = StructType(dataSchema.fields ++ RunIdColumns.map(StructField(_, StringType)))
     val df =
-      try spark.read.option("basePath", root).parquet(root)
-      finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
+      if (dirs.isEmpty)
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), readSchema)
+      else {
+        val index = new InMemoryFileIndex(
+          spark, dirs, Map("basePath" -> fs.makeQualified(new Path(root)).toString),
+          Some(readSchema))
+        spark.baseRelationToDataFrame(HadoopFsRelation(
+          index, index.partitionSchema, dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
       }
     df.withColumn("logical_date", col("logical_date").cast("date"))
-      .join(sealedRunsDf(), PartitionKey.columns :+ "run_id", "left_semi")
+  }
+
+  private def notePayloadSchema(written: StructType): Unit = synchronized {
+    val known = payloadSchema.map(_.fields.toSeq).getOrElse(Nil)
+    val added = written.fields.toSeq
+      .filterNot(f => RunIdColumns.contains(f.name) || known.exists(_.name == f.name))
+      .map(_.copy(nullable = true))
+    payloadSchema = Some(StructType(known ++ added))
   }
 
   /** J3: the consumer gate — only rows whose (key, run_id) is the
@@ -300,11 +342,9 @@ final class RawSink(spark: SparkSession, root: String) {
       .drop("__rn")
   }
 
-  /** All sealed (key, run_id) tuples as a DataFrame. Reads the
-    * `_manifest` parquet index when present (one small columnar scan,
-    * regardless of partition count); falls back to a recursive
-    * directory listing for manifest-less sinks (reference-written
-    * trees, or pre-manifest layouts).
+  /** All sealed (key, run_id) tuples as a (driver-local) DataFrame: the
+    * manifest's rows when the index exists, else a `listStatus` walk of
+    * the tree (reference-written trees, or pre-manifest layouts).
     *
     * Once a manifest exists it is authoritative: a MANIFEST-UNAWARE
     * writer (the reference Python sink) sealing runs into the same
@@ -314,100 +354,93 @@ final class RawSink(spark: SparkSession, root: String) {
     * `writeRun` always appends the index).
     */
   def sealedRuns(): DataFrame =
-    manifestFiles() match {
-      case Some(files) =>
-        spark.read.parquet(files: _*).select(Tuple5Row.schema.fieldNames.map(col): _*)
-      case None => listedSealedRuns()
-    }
+    spark.createDataset(sealedIds())(Encoders.product[Tuple5RowCase]).toDF()
 
-  /** Manifest part files, if the index exists and is non-empty. Listed
-    * explicitly because the `_`-prefixed manifest dir is (by design)
-    * hidden from Spark's data-file discovery — the same convention that
-    * keeps it out of [[readAll]]'s recursive payload read.
+  private def sealedIds(): Seq[Tuple5RowCase] =
+    manifestRows().map(_.map(_.id)).getOrElse(listedSealedRuns().map(_._1))
+
+  /** The collected manifest, if the index exists and is non-empty.
+    * Re-read (one small scan with the known schema) only when the
+    * listing of `_manifest` — path, length, mtime of every part file —
+    * changed since the last read. The `_`-prefixed manifest dir is
+    * hidden from Spark's data-file discovery by the same convention
+    * that keeps `_SEAL.json` out of the payload scan.
     */
-  private def manifestFiles(): Option[Seq[String]] = {
-    val dir = new Path(manifestDir)
-    if (!fs.exists(dir)) None
+  private def manifestRows(): Option[Seq[SealRow]] = {
+    val parts =
+      try fs.listStatus(new Path(manifestDir))
+          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    if (parts.isEmpty) None
     else {
-      val parts = fs.listStatus(dir)
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString).toSeq
-      if (parts.isEmpty) None else Some(parts)
+      val listing = parts.map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}").sorted.toSeq
+      val (seen, rows) = manifestCache
+      if (seen == listing) Some(rows)
+      else {
+        val read = spark.read.schema(ManifestSchema).parquet(parts.map(_.getPath.toString).toSeq: _*)
+          .as(Encoders.product[SealRow]).collect().toSeq
+        manifestCache = (listing, read)
+        Some(read)
+      }
     }
   }
-
-  private def sealedRunsDf(): DataFrame = sealedRuns()
 
   /** Reconcile the manifest with the directory tree: any sealed run dir
     * missing from the index (crash between seal write and manifest
     * append) is re-appended. Idempotent; returns the number of repaired
-    * rows. The listing path is the expensive O(directories) walk — this
-    * is a recovery tool, not a hot path.
+    * rows. The walk is O(directories) `listStatus` calls — a recovery
+    * tool, not a hot path.
     */
   def repairManifest(): Long = {
-    val listed = listedSealedRuns()
-    val known = manifestFiles() match {
-      case Some(files) =>
-        spark.read.parquet(files: _*).select(Tuple5Row.schema.fieldNames.map(col): _*)
-      case None => listed.limit(0)
-    }
-    val missing = listed.join(known, Tuple5Row.schema.fieldNames.toSeq, "left_anti")
-    val n = missing.count()
-    if (n > 0) {
-      // seal JSON carries record_count/schema_version; re-read executor-side
-      val confFactory = org.apache.spark.sql.graftshim.ConfShim.confFactory(hadoopConf)
-      val rootStr = root
-      import spark.implicits._
-      missing
-        .as[Tuple5RowCase]
+    val indexed = manifestRows().getOrElse(Nil).map(_.id).toSet
+    val missing = listedSealedRuns().filterNot { case (id, _) => indexed(id) }
+    if (missing.nonEmpty) {
+      // seal JSON carries record_count/schema_version; re-read
+      // executor-side from the directory the walk found the seal in
+      val confFactory = ConfShim.confFactory(hadoopConf)
+      val rows = rowRdd(missing)
         .mapPartitions { it =>
           val conf = confFactory()
-          it.map(t => RawSink.readSealRow(conf, rootStr, t))
+          it.map { case (id, dir) => RawSink.readSealRow(conf, new Path(dir), id) }
         }
-        .toDF()
-        .write.mode("append").parquet(manifestDir)
+        .collect()
+      writeManifest(rows.toSeq, "append")
     }
-    n
+    missing.size.toLong
   }
 
-  /** Driver-side recursive listing of sealed runs (fallback/repair path). */
-  private def listedSealedRuns(): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows =
-      if (!fs.exists(new Path(root))) Seq.empty
-      else {
-        val it = fs.listFiles(new Path(root), true)
-        Iterator
-          .continually(it)
-          .takeWhile(_.hasNext)
-          .map(_.next())
-          .filter(_.getPath.getName == SealFile)
-          .filterNot(_.getPath.toString.contains(s"/$ManifestDir/"))
+  /** Driver-side walk of sealed runs (fallback/repair path): each run's
+    * address and the directory its seal was found in (escaped, or the
+    * unescaped sibling of [[RawSink.sealDirs]]). One `listStatus` per
+    * directory level. Not `listFiles(recursive)`, which without native
+    * Hadoop forks an `ls` per file for its permissions.
+    */
+  private def listedSealedRuns(): Seq[(Tuple5RowCase, String)] = {
+    val base = new Path(root)
+    if (!fs.exists(base)) return Nil
+    val runDirs = RunIdColumns.foldLeft(Seq(base -> List.empty[String])) { case (dirs, column) =>
+      dirs.flatMap { case (dir, values) =>
+        fs.listStatus(dir).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$column="))
           .map { st =>
-            val dir = st.getPath.getParent
-            def part(p: Path, prefix: String): String = {
-              var cur = p
-              while (cur != null && !cur.getName.startsWith(prefix)) cur = cur.getParent
-              require(cur != null, s"missing $prefix in ${st.getPath}")
-              cur.getName.stripPrefix(prefix)
-            }
-            (
-              part(dir, "source="),
-              part(dir, "customer_id="),
-              part(dir, "query_name="),
-              java.sql.Date.valueOf(part(dir, "logical_date=")),
-              part(dir, "run_id="),
-            )
+            val value = ExternalCatalogUtils.unescapePathName(st.getPath.getName.stripPrefix(s"$column="))
+            st.getPath -> (value :: values)
           }
-          .toSeq
       }
-    spark.createDataFrame(rows.map(Tuple5Row.tupled).asJava, Tuple5Row.schema)
+    }
+    runDirs.collect {
+      case (dir, List(run, date, query, customer, source)) if fs.exists(new Path(dir, SealFile)) =>
+        Tuple5RowCase(source, customer, query, java.sql.Date.valueOf(date), run) -> dir.toString
+    }.distinctBy(_._1)
   }
 }
 
 object RawSink {
   val SealFile = "_SEAL.json"
   val ManifestDir = "_manifest"
+
+  /** Directory levels of a run, in layout order. */
+  private val RunIdColumns: Seq[String] = PartitionKey.columns :+ "run_id"
 
   final case class SealedPartition(
       key: PartitionKey,
@@ -430,8 +463,13 @@ object RawSink {
       SealedPartition(
         PartitionKey(source, customer_id, query_name, logical_date),
         run_id, schema_version, record_count)
+    private[sink] def key = (source, customer_id, query_name, logical_date)
+    private[sink] def id = Tuple5RowCase(source, customer_id, query_name, logical_date, run_id)
   }
 
+  private val ManifestSchema: StructType = Encoders.product[SealRow].schema
+
+  /** One sealed run's address: its logical partition key and run id. */
   private[sink] case class Tuple5RowCase(
       source: String,
       customer_id: String,
@@ -440,16 +478,38 @@ object RawSink {
       run_id: String,
   )
 
-  private[sink] def runDirPath(root: String, s: SealRow): Path =
-    new Path(
-      s"$root/source=${s.source}/customer_id=${s.customer_id}" +
-        s"/query_name=${s.query_name}/logical_date=${s.logical_date}/run_id=${s.run_id}")
+  /** THE address of a run directory: each level is `column=value`
+    * with Spark's partition-path escaping, exactly as `partitionBy`
+    * names the payload directories.
+    */
+  private[sink] def runDirPath(
+      root: String, source: String, customerId: String, queryName: String,
+      logicalDate: java.sql.Date, runId: String): Path =
+    new Path(root + RunIdColumns.zip(Seq(source, customerId, queryName, logicalDate.toString, runId))
+      .map { case (c, v) => "/" + ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString)
+
+  private[sink] def runDirPath(root: String, r: Tuple5RowCase): Path =
+    runDirPath(root, r.source, r.customer_id, r.query_name, r.logical_date, r.run_id)
+
+  private[sink] def runDirPath(root: String, s: SealRow): Path = runDirPath(root, s.id)
+
+  /** Every directory a run's seal may sit in: its address
+    * ([[runDirPath]]), then, when escaping changed a value, the
+    * unescaped sibling that earlier graft roots and the reference's
+    * writers sealed into. Checked in this order; vacuum deletes both.
+    */
+  private[sink] def sealDirs(root: String, r: Tuple5RowCase): Seq[Path] = {
+    val values = Seq(r.source, r.customer_id, r.query_name, r.logical_date.toString, r.run_id)
+    val unescaped = new Path(root + RunIdColumns.zip(values).map { case (c, v) => s"/$c=$v" }.mkString)
+    Seq(runDirPath(root, r), unescaped).distinct
+  }
 
   private[sink] def sealExists(
-      conf: org.apache.hadoop.conf.Configuration, root: String, s: SealRow): Boolean = {
-    val p = new Path(runDirPath(root, s), SealFile)
-    p.getFileSystem(conf).exists(p)
-  }
+      conf: org.apache.hadoop.conf.Configuration, root: String, s: SealRow): Boolean =
+    sealDirs(root, s.id).exists { dir =>
+      val p = new Path(dir, SealFile)
+      p.getFileSystem(conf).exists(p)
+    }
 
   /** Schemes whose FileSystems are OBJECT STORES: (a) an in-progress
     * create is INVISIBLE until close (a PUT materializes whole objects
@@ -461,8 +521,8 @@ object RawSink {
   private val ObjectStoreSchemes =
     Set("s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos", "swift")
 
-  /** Executor-side metadata-last seal write. `overwrite = false` makes
-    * the create an atomic claim. An already-present seal is tolerated
+  /** Executor-side metadata-last seal write. The write is an atomic
+    * claim of the seal path. An already-present seal is tolerated
     * ONLY when its content is byte-identical to what this task would
     * write — that is a task retry re-claiming its own deterministic
     * output. A differing seal (another writer's run with the same
@@ -479,8 +539,10 @@ object RawSink {
     * — but a bare exists-check has a TOCTOU window; each backend gets
     * the strongest primitive it actually offers):
     *
-    *  - POSIX `file:` — hard-link publish: `link(2)` fails EEXIST
-    *    atomically in the kernel.
+    *  - POSIX `file:` — hard-link publish: the complete seal is written
+    *    to a temp file with NIO (no Hadoop create: no checksum file, no
+    *    forked `chmod`), then `link(2)` claims the seal path, failing
+    *    EEXIST atomically in the kernel.
     *  - HDFS-like (default) — write-temp-then-rename: rename without
     *    overwrite is atomic at the NameNode and rejects an existing
     *    destination.
@@ -508,6 +570,7 @@ object RawSink {
     val json =
       s"""{"record_count":${s.record_count},"schema_version":"${s.schema_version}",""" +
         s""""run_id":"${s.run_id}","sealed":true}"""
+    val bytes = json.getBytes(StandardCharsets.UTF_8)
     def existingMatches(): Boolean = {
       val in = fs.open(sealPath)
       val existing =
@@ -520,6 +583,7 @@ object RawSink {
         throw new IllegalStateException(
           s"seal conflict at $sealPath: existing seal differs from this run's " +
             "(concurrent writers sharing a run_id violate the run-fence contract)")
+    def tmpName = s"$SealFile.tmp-${java.util.UUID.randomUUID()}"
     if (ObjectStoreSchemes.contains(fs.getScheme)) {
       // Conditional-put claim: whole-object PUT-if-absent. A partial
       // write materializes nothing on an object store, so there is no
@@ -531,7 +595,7 @@ object RawSink {
       val claimed =
         try {
           val out = fs.create(sealPath, false)
-          try out.write(json.getBytes(StandardCharsets.UTF_8))
+          try out.write(bytes)
           finally out.close()
           true
         } catch {
@@ -542,42 +606,36 @@ object RawSink {
             false
         }
       if (!claimed) verifyOrThrow()
-      return
-    }
-    // Write-temp-then-rename: a bare create-then-write would let a task
-    // that died mid-write leave a PARTIAL seal which every retry then
-    // misreads as a foreign conflict. The rename publishes the complete
-    // file atomically; if a seal already exists the rename loses and we
-    // content-check it (complete by construction — only whole files are
-    // ever renamed in).
-    val tmp = new Path(dir, s"$SealFile.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    try {
-      // The publish must be an atomic EXCLUSIVE claim of the final
-      // path. POSIX-backed FileSystems (RawLocal/Local) implement
-      // rename as renameTo, which silently REPLACES an existing
-      // destination — an exists() pre-check alone leaves a TOCTOU
-      // window where two racing writers both see "absent" and the
-      // second clobbers the first without either calling
-      // verifyOrThrow. On file: schemes the claim is therefore
-      // link(2) (createLink fails with EEXIST atomically in the
-      // kernel); HDFS/object-store FileSystems keep the tmp+rename
-      // claim, whose no-replace semantics ARE atomic there (the
-      // NameNode/store rejects an existing destination).
-      val claimed =
-        if (fs.getScheme == "file") {
-          val nioDst = java.nio.file.Paths.get(fs.makeQualified(sealPath).toUri.getPath)
-          val nioTmp = java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath)
-          try { java.nio.file.Files.createLink(nioDst, nioTmp); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else fs.rename(tmp, sealPath)
-      if (!claimed) verifyOrThrow()
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => verifyOrThrow()
-    } finally {
-      if (fs.exists(tmp)) fs.delete(tmp, false)
+    } else if (fs.getScheme == "file") {
+      // POSIX rename silently REPLACES an existing destination, so the
+      // publish is link(2): createLink fails with EEXIST atomically in
+      // the kernel. The temp file makes the published seal complete by
+      // construction — a task that died mid-write leaves only a temp.
+      val nioSeal = java.nio.file.Paths.get(fs.makeQualified(sealPath).toUri.getPath)
+      val nioTmp = nioSeal.resolveSibling(tmpName)
+      java.nio.file.Files.write(nioTmp, bytes, java.nio.file.StandardOpenOption.CREATE_NEW)
+      try {
+        try java.nio.file.Files.createLink(nioSeal, nioTmp)
+        catch { case _: java.nio.file.FileAlreadyExistsException => verifyOrThrow() }
+      } finally java.nio.file.Files.deleteIfExists(nioTmp): Unit
+    } else {
+      // Write-temp-then-rename: a bare create-then-write would let a
+      // task that died mid-write leave a PARTIAL seal which every retry
+      // then misreads as a foreign conflict. Rename without overwrite is
+      // an atomic exclusive claim here (the NameNode rejects an existing
+      // destination); if it loses we content-check the winner (complete
+      // by construction — only whole files are ever renamed in).
+      val tmp = new Path(dir, tmpName)
+      val out = fs.create(tmp, true)
+      try out.write(bytes)
+      finally out.close()
+      try {
+        if (!fs.rename(tmp, sealPath)) verifyOrThrow()
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => verifyOrThrow()
+      } finally {
+        if (fs.exists(tmp)) fs.delete(tmp, false)
+      }
     }
   }
 
@@ -585,10 +643,12 @@ object RawSink {
     * schema_version back out of the seal JSON (tiny, one per dir).
     */
   private[sink] def readSealRow(
-      conf: org.apache.hadoop.conf.Configuration, root: String, t: Tuple5RowCase): SealRow = {
-    val dir = new Path(
-      s"$root/source=${t.source}/customer_id=${t.customer_id}" +
-        s"/query_name=${t.query_name}/logical_date=${t.logical_date}/run_id=${t.run_id}")
+      conf: org.apache.hadoop.conf.Configuration, root: String, t: Tuple5RowCase): SealRow =
+    readSealRow(conf, runDirPath(root, t), t)
+
+  /** [[readSealRow]] from the seal in `dir`, wherever the walk found it. */
+  private[sink] def readSealRow(
+      conf: org.apache.hadoop.conf.Configuration, dir: Path, t: Tuple5RowCase): SealRow = {
     val p = new Path(dir, SealFile)
     val in = p.getFileSystem(conf).open(p)
     val json =
@@ -599,28 +659,5 @@ object RawSink {
     SealRow(
       t.source, t.customer_id, t.query_name, t.logical_date,
       field("record_count").toLong, t.run_id, field("schema_version"))
-  }
-
-  private[sink] case class Tuple5Row(
-      source: String,
-      customer_id: String,
-      query_name: String,
-      logical_date: java.sql.Date,
-      run_id: String,
-  )
-  private[sink] object Tuple5Row {
-    val tupled: ((String, String, String, java.sql.Date, String)) => org.apache.spark.sql.Row = {
-      case (a, b, c, d, e) => org.apache.spark.sql.Row(a, b, c, d, e)
-    }
-    val schema: org.apache.spark.sql.types.StructType = {
-      import org.apache.spark.sql.types._
-      StructType(Seq(
-        StructField("source", StringType),
-        StructField("customer_id", StringType),
-        StructField("query_name", StringType),
-        StructField("logical_date", DateType),
-        StructField("run_id", StringType),
-      ))
-    }
   }
 }

@@ -13,8 +13,8 @@ import graft.sink.RawSink
   * metadata-last seal into effectively-once delivery:
   *
   *  - a batch REPLAYED after a crash (same batchId) skips every
-  *    partition its earlier attempt already sealed (anti-join against
-  *    the seal manifest, executor-side) and re-writes only the
+  *    partition its earlier attempt already sealed (the sink's seal
+  *    manifest decides; an anti-join drops them) and re-writes only the
   *    remainder — sealed data is never duplicated, unsealed partial
   *    data was never reader-visible (K2) and is simply overwritten by
   *    the retry under the same fence;
@@ -35,11 +35,13 @@ object StreamingIngest {
     */
   def ingestBatch(sink: RawSink, runPrefix: String)(df: DataFrame, batchId: Long): Unit = {
     val runId = f"${runPrefix}_$batchId%012d"
-    // replay safety: drop partitions this run already sealed
+    // replay safety: drop partitions this run already sealed. The
+    // sealed runs are the sink's collected manifest rows (a local
+    // relation, so a first attempt's anti-join plans away); an empty
+    // remainder writes nothing inside writeRun.
     val sealedKeys = sink.sealedRuns().where(col("run_id") === runId)
       .select(PartitionKey.columns.map(col): _*)
-    val remaining = df.join(sealedKeys, PartitionKey.columns, "left_anti")
-    if (remaining.take(1).nonEmpty) sink.writeRun(remaining, runId): Unit
+    sink.writeRun(df.join(sealedKeys, PartitionKey.columns, "left_anti"), runId): Unit
   }
 
   /** Attach the sink to a streaming frame; caller picks trigger /

@@ -22,7 +22,8 @@ import graft.warehouse.Warehouse
   * layers: it exercises run fencing, metadata-last seal, count
   * validation, LWW ledger upsert, full-outer reconcile,
   * replace-by-partition publish, and the consumer gate in one pass,
-  * then prints a JSON summary line per stage.
+  * then prints a JSON summary line per stage, each with the stage's
+  * wall time in milliseconds (`"ms"`).
   */
 object EndToEnd {
   def main(args: Array[String]): Unit = {
@@ -31,6 +32,12 @@ object EndToEnd {
       else java.nio.file.Files.createTempDirectory("graft_e2e").toString
     val spark = graft.GraftSession.local()
     import spark.implicits._
+    // One JSON line per stage; "ms" is the wall time since the previous line.
+    var stageStart = System.nanoTime()
+    def stage(json: String): Unit = {
+      println(json.stripSuffix("}") + s""","ms":${(System.nanoTime() - stageStart) / 1000000}}""")
+      stageStart = System.nanoTime()
+    }
 
     // ---- 1. extract (S1-S3): events become the payload; the logical
     //      partition is (source, customer=user bucket, query, day).
@@ -45,7 +52,7 @@ object EndToEnd {
       )
     val sink = new RawSink(spark, s"$work/raw")
     val seals = sink.writeRun(payload, run1.runId)
-    println(s"""{"stage":"extract","partitions":${seals.size},"rows":${seals.map(_.recordCount).sum}}""")
+    stage(s"""{"stage":"extract","partitions":${seals.size},"rows":${seals.map(_.recordCount).sum}}""")
 
     // ---- 2. validate (A6) → ledger upsert (D1/D2): recount each sealed
     //      partition from the sink and mark success/failed.
@@ -73,7 +80,7 @@ object EndToEnd {
     ledger.upsert(validated)
     val statusCounts = StateStore.observe.statusCounts(ledger.snapshot())
       .as[(String, Long)].collect().toMap
-    println(s"""{"stage":"validate","status_counts":"${statusCounts.mkString(",")}"}""")
+    stage(s"""{"stage":"validate","status_counts":"${statusCounts.mkString(",")}"}""")
     require(statusCounts.getOrElse(PartitionState.Failed, 0L) == 0L, "validation failed partitions")
     // Content expectations beside the A6 recount: the declarative gate
     // (graft.ops.Expectations — q226's engine) over the run's payload.
@@ -88,7 +95,7 @@ object EndToEnd {
     val gate = expectations
       .select(col("rule"), col("n_violations"), col("pass"))
       .as[(String, Long, Boolean)].collect()
-    println(s"""{"stage":"expectations","rules":"${gate.map(g => s"${g._1}=${g._2}").mkString(",")}"}""")
+    stage(s"""{"stage":"expectations","rules":"${gate.map(g => s"${g._1}=${g._2}").mkString(",")}"}""")
     require(gate.forall(_._3), s"expectation gate failed: ${gate.filterNot(_._3).mkString(",")}")
 
     // ---- 3. reconcile + publish (J1/J2, D3) against an empty pointer set.
@@ -96,10 +103,10 @@ object EndToEnd {
       new java.util.ArrayList[org.apache.spark.sql.Row](), graft.model.Schemas.warehousePointer)
     val plan = Warehouse.reconcile(ledger.snapshot(), pointers0)
     val actions = plan.groupBy("action").count().as[(String, Long)].collect().toMap
-    println(s"""{"stage":"reconcile","actions":"${actions.mkString(",")}"}""")
+    stage(s"""{"stage":"reconcile","actions":"${actions.mkString(",")}"}""")
     Warehouse.publish(spark, plan, sink.readAll(), s"$work/curated")
     val pointers1 = Warehouse.nextPointers(pointers0, plan, Timestamp.from(Instant.parse("2024-02-01T01:00:00Z")))
-    println(s"""{"stage":"publish","pointers":${pointers1.count()},"curated_rows":${spark.read.parquet(s"$work/curated").count()}}""")
+    stage(s"""{"stage":"publish","pointers":${pointers1.count()},"curated_rows":${spark.read.parquet(s"$work/curated").count()}}""")
 
     // ---- 4. supersede one partition with run2 and re-publish: only that
     //      partition's rows change (replace-by-partition).
@@ -118,14 +125,14 @@ object EndToEnd {
     val plan2 = Warehouse.reconcile(ledger.snapshot(), pointers1)
     val replaceN = plan2.where(col("action") === Warehouse.Action.Replace).count()
     Warehouse.publish(spark, plan2, sink.readAll(), s"$work/curated")
-    println(s"""{"stage":"supersede","replaced":$replaceN}""")
+    stage(s"""{"stage":"supersede","replaced":$replaceN}""")
 
     // ---- 5. consumer preview (J3 + T4): gate on the ledger, sample 3
     //      rows per partition.
     val gated = sink.authoritativeRows(ledger.snapshot())
     val runsVisible = gated.select("run_id").distinct().as[String].collect().sorted.toSeq
     val sample = sink.preview(ledger.snapshot(), 3, "event_id")
-    println(s"""{"stage":"consume","visible_rows":${gated.count()},"sampled":${sample.count()},"runs":"${runsVisible.mkString(",")}"}""")
+    stage(s"""{"stage":"consume","visible_rows":${gated.count()},"sampled":${sample.count()},"runs":"${runsVisible.mkString(",")}"}""")
     require(runsVisible.contains(run2.runId), "superseding run must be visible")
 
     // ---- 6. serve (K5 + warehouse_tables.sql): daily facts built from
@@ -146,7 +153,7 @@ object EndToEnd {
     graft.warehouse.FactTables.registerPartitioned(
       fact, "e2e_fact_campaign_daily", Some(s"$work/serving/fact_campaign_daily"))
     val served = spark.table("e2e_fact_campaign_daily")
-    println(s"""{"stage":"serve","fact_rows":${served.count()},"dates":${served.select("date").distinct().count()}}""")
+    stage(s"""{"stage":"serve","fact_rows":${served.count()},"dates":${served.select("date").distinct().count()}}""")
 
     // ---- 7. maintain: compact the (now fragmented) authoritative rows
     //      into one file per partition as a new sealed+validated run,
@@ -166,9 +173,9 @@ object EndToEnd {
     val removed = sink.vacuumSuperseded(ledger.snapshot(), keepRuns = 1)
     val after = sink.authoritativeRows(ledger.snapshot())
     require(after.count() == servedBefore, "maintenance must not change served rows")
-    println(s"""{"stage":"maintain","compacted_partitions":${compacted.size},"runs_removed":$removed}""")
+    stage(s"""{"stage":"maintain","compacted_partitions":${compacted.size},"runs_removed":$removed}""")
 
-    println(s"""{"stage":"done","work_dir":"$work"}""")
+    stage(s"""{"stage":"done","work_dir":"$work"}""")
     spark.stop()
   }
 }

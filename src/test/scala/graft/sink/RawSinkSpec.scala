@@ -1,13 +1,21 @@
 package graft.sink
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Date
+import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graftshim.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.model.{PartitionKey, PartitionState}
+import graft.model.{PartitionKey, PartitionState, RunContext}
 
 /** A local FileSystem that ANSWERS as an object store (`getScheme` =
   * "s3a") so the seal writer's conditional-put branch runs against
@@ -19,6 +27,26 @@ import graft.model.{PartitionKey, PartitionState}
 class FakeObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "s3a"
   override def getUri: java.net.URI = java.net.URI.create("s3a:///")
+}
+
+/** [[FakeS3FileSystem]] under its own scheme, whose run-directory
+  * deletes succeed while [[CrashingDeleteFs.deletesLeft]] lasts and
+  * then throw: a vacuum that dies between deleting one superseded run
+  * and the next. Writes (and the committer's `_temporary` cleanup) are
+  * never affected.
+  */
+class CrashingDeleteFs extends FakeS3FileSystem {
+  override def getScheme: String = "crashfs"
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    if (f.getName.startsWith("run_id=") && !f.toString.contains("/_temporary/") &&
+        CrashingDeleteFs.deletesLeft.getAndDecrement() <= 0)
+      throw new java.io.IOException(s"simulated crash before deleting $f")
+    else super.delete(f, recursive)
+}
+
+object CrashingDeleteFs {
+  val deletesLeft = new AtomicInteger(Int.MaxValue)
 }
 
 class RawSinkSpec extends SparkSpec {
@@ -34,6 +62,40 @@ class RawSinkSpec extends SparkSpec {
 
   private def key(date: String, customer: String = "c1") =
     PartitionKey("google_ads", customer, "campaign_daily", Date.valueOf(date))
+
+  private def success(date: String, run: String): DataFrame =
+    Seq(("google_ads", "c1", "campaign_daily", Date.valueOf(date), PartitionState.Success, run))
+      .toDF("source", "customer_id", "query_name", "logical_date", "status", "current_run_id")
+
+  private def filesUnder(root: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
+    finally walk.close()
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched from this
+    * thread (tagged by a job group, so jobs of other threads never count).
+    */
+  private def jobsLaunchedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"rawsink-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count guard")
+    try {
+      val result = body
+      ListenerBusShim.drain(sc)
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("writeRun writes payload, seals metadata-last, records counts") {
     val root = freshRoot()
@@ -302,5 +364,135 @@ class RawSinkSpec extends SparkSpec {
     assert(m == Set((Date.valueOf("2024-01-01"), 3L), (Date.valueOf("2024-01-02"), 2L)))
     // idempotent
     assert(sink.repairManifest() == 0)
+  }
+
+  test("minted run ids: the seal sits beside its payload, listRuns unescapes, vacuum frees the payload") {
+    val root = freshRoot()
+    val sink = new RawSink(spark, root)
+    // RunContext ids carry ':' — escaped to %3A in partitionBy directories
+    val runs = Seq("2024-02-01", "2024-02-02", "2024-02-03")
+      .map(d => RunContext.mint(Instant.parse(s"${d}T07:00:00Z")).runId)
+    runs.zip(Seq(3, 4, 5)).foreach { case (r, n) => sink.writeRun(payload("2024-01-01", n), r) }
+    val files = filesUnder(root).filterNot(_.toString.contains(s"/${RawSink.ManifestDir}/"))
+    val payloadDirs = files.filter(_.getFileName.toString.startsWith("part-")).map(_.getParent).toSet
+    val sealDirs = files.filter(_.getFileName.toString == RawSink.SealFile).map(_.getParent).toSet
+    assert(payloadDirs.size == 3, s"one payload directory per run: $payloadDirs")
+    assert(sealDirs == payloadDirs, s"seals $sealDirs must sit in the payload directories $payloadDirs")
+    assert(sink.listRuns(key("2024-01-01")) == runs)
+    assert(runs.forall(sink.isSealed(key("2024-01-01"), _)))
+    assert(sink.readAll().count() == 12)
+
+    // the third run is validated: the first two are superseded, and
+    // every file they wrote goes with them
+    assert(sink.vacuumSuperseded(success("2024-01-01", runs(2))) == 2L)
+    val removedDays = Seq("2024-02-01T07", "2024-02-02T07")
+    val leftovers = filesUnder(root).map(_.toString).filter(f => removedDays.exists(f.contains))
+    assert(leftovers.isEmpty, s"files of removed runs left on disk: $leftovers")
+    assert(sink.listRuns(key("2024-01-01")) == Seq(runs(2)))
+    assert(sink.readAll().count() == 5)
+    assert(sink.repairManifest() == 0L)
+  }
+
+  test("seals in unescaped run directories (earlier layout): K3, isSealed, repair and vacuum find them") {
+    val root = freshRoot()
+    val runs = Seq("2024-02-01", "2024-02-02", "2024-02-03")
+      .map(d => RunContext.mint(Instant.parse(s"${d}T07:00:00Z")).runId)
+    val writer = new RawSink(spark, root)
+    runs.zip(Seq(3, 4, 5)).foreach { case (r, n) => writer.writeRun(payload("2024-01-01", n), r) }
+    // the earlier layout, by hand: each seal sits in the unescaped
+    // sibling `run_id=…T07:00:00.000Z` of its escaped payload directory
+    val keyDir = Paths.get(root, "source=google_ads", "customer_id=c1",
+      "query_name=campaign_daily", "logical_date=2024-01-01")
+    runs.foreach { r =>
+      val escaped = keyDir.resolve("run_id=" + ExternalCatalogUtils.escapePathName(r))
+      assert(escaped.getFileName.toString.contains("%3A"))
+      val raw = Files.createDirectory(keyDir.resolve(s"run_id=$r"))
+      Files.move(escaped.resolve(RawSink.SealFile), raw.resolve(RawSink.SealFile))
+    }
+    val sink = new RawSink(spark, root)
+    assert(sink.listRuns(key("2024-01-01")) == runs)
+    assert(runs.forall(sink.isSealed(key("2024-01-01"), _)))
+    assert(sink.readSeal(key("2024-01-01"), runs(0)).exists(_.contains("\"record_count\":3")))
+    // K3 still refuses a re-write of a sealed run
+    intercept[IllegalStateException](sink.writeRun(payload("2024-01-01", 1), runs(0)))
+    // the index is lost: repair re-reads every seal from where it lies
+    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(root, RawSink.ManifestDir).toFile)
+    assert(sink.readAll().count() == 12)
+    assert(sink.repairManifest() == 3L)
+    assert(sink.sealedRuns().select("run_id").as[String].collect().sorted.toSeq == runs)
+    assert(spark.read.parquet(Paths.get(root, RawSink.ManifestDir).toString)
+      .select("record_count").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L))
+    // vacuum removes both directories of each superseded run
+    val states = success("2024-01-01", runs(2))
+    assert(sink.vacuumSuperseded(states) == 2L)
+    val removedDays = Seq("2024-02-01T07", "2024-02-02T07")
+    val leftovers = filesUnder(root).map(_.toString).filter(f => removedDays.exists(f.contains))
+    assert(leftovers.isEmpty, s"files of removed runs left on disk: $leftovers")
+    // the next vacuum's repair step still runs
+    assert(sink.vacuumSuperseded(states) == 0L)
+    assert(sink.listRuns(key("2024-01-01")) == Seq(runs(2)))
+    assert(sink.readAll().count() == 5)
+  }
+
+  test("vacuum crash after the manifest rewrite leaves only unindexed orphans; reads still answer") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.crashfs.impl", classOf[CrashingDeleteFs].getName)
+    conf.set("fs.crashfs.impl.disable.cache", "true")
+    val root = s"crashfs:${freshRoot()}"
+    try {
+      val sink = new RawSink(spark, root)
+      sink.writeRun(payload("2024-01-01", 3), "r1")
+      sink.writeRun(payload("2024-01-01", 4), "r2")
+      sink.writeRun(payload("2024-01-01", 5), "r3")
+      val states = success("2024-01-01", "r3")
+      // r1 and r2 are victims; the process dies after deleting one of them
+      CrashingDeleteFs.deletesLeft.set(1)
+      intercept[Exception](sink.vacuumSuperseded(states))
+      CrashingDeleteFs.deletesLeft.set(Int.MaxValue)
+      val afterCrash = sink.listRuns(key("2024-01-01"))
+      assert(afterCrash.size == 2 && afterCrash.last == "r3",
+        s"one superseded run deleted, one left as an orphan: $afterCrash")
+      // the index already lists only the survivor: every reader answers
+      for (reader <- Seq(sink, new RawSink(spark, root))) {
+        assert(reader.sealedRuns().select("run_id").as[String].collect().toSeq == Seq("r3"))
+        assert(reader.readAll().count() == 5)
+        assert(reader.authoritativeRows(states).count() == 5)
+      }
+      // the next vacuum re-indexes the orphan in its repair step and removes it
+      assert(sink.vacuumSuperseded(states) == 1L)
+      assert(sink.listRuns(key("2024-01-01")) == Seq("r3"))
+      assert(sink.readAll().count() == 5)
+    } finally {
+      CrashingDeleteFs.deletesLeft.set(Int.MaxValue)
+      conf.unset("fs.crashfs.impl")
+      conf.unset("fs.crashfs.impl.disable.cache")
+    }
+  }
+
+  test("job-count guard: readAll reads the manifest at most once and infers no schema; writeRun's jobs are pinned") {
+    val root = freshRoot()
+    val sink = new RawSink(spark, root)
+    val threePartitions = payload("2024-01-01", 2).unionByName(payload("2024-01-02", 3))
+      .unionByName(payload("2024-01-01", 4, customer = "c2"))
+    val (seals, writeJobs) = jobsLaunchedBy(sink.writeRun(threePartitions, "r1"))
+    assert(seals.size == 3)
+    // the seal-row collect (shuffle map stage + result), the K3 check,
+    // the payload write, the seal writes, the manifest append
+    assert(writeJobs == 6, s"writeRun of a 3-partition run launched $writeJobs jobs")
+    // no action below: only what building the frame costs is counted
+    assert(jobsLaunchedBy(sink.readAll())._2 == 1, "manifest changed since the last read: one manifest read")
+    assert(jobsLaunchedBy(sink.readAll())._2 == 0, "manifest unchanged: no job at all")
+    assert(jobsLaunchedBy(sink.authoritativeRows(success("2024-01-01", "r1")))._2 == 0)
+    // the streaming replay decision reads the collected manifest rows
+    assert(jobsLaunchedBy(sink.sealedRuns().where(col("run_id") === "r9").isEmpty) == (true, 0))
+    assert(sink.readAll().count() == 9)
+    sink.writeRun(payload("2024-01-03", 1), "r2")
+    assert(jobsLaunchedBy(sink.readAll())._2 == 1)
+    assert(jobsLaunchedBy(sink.readAll())._2 == 0)
+    // an instance that never wrote infers the payload schema once
+    val reader = new RawSink(spark, root)
+    assert(jobsLaunchedBy(reader.readAll())._2 == 2, "manifest read + one schema inference")
+    assert(jobsLaunchedBy(reader.readAll())._2 == 0)
+    assert(reader.readAll().agg(sum("metric")).head().getLong(0) == 3L + 6L + 10L + 1L)
   }
 }
