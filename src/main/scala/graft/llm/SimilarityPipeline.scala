@@ -168,25 +168,23 @@ object SimilarityPipeline {
     *    vector via the native codegen'd [[VectorFunctions.cosine]];
     *  - update: posexplode the assigned embeddings → per-(cell, dim)
     *    mean → re-assemble arrays with `array_sort(collect_list)`.
-    * Centroids are localCheckpoint'ed per iteration (k tiny rows) so
-    * the lineage does not stack across iterations.
+    * The iterations run on [[graft.ops.Rounds.fixed]] (k tiny rows
+    * pinned per iteration).
     */
   def kmeansCentroids(corpus: DataFrame, cells: Int, iters: Int = 3): DataFrame = {
     require(cells > 0 && iters >= 1)
     val emb = corpus.select(col("vec_id"), col("embedding"))
-    // init needs no checkpoint: consumed exactly once (iteration 1's
-    // assignment); every later iteration starts from a checkpointed
-    // centroid table.
-    var centroids = emb
+    val seeds = emb
       .withColumn("__h", xxhash64(col("vec_id")))
       .orderBy("__h")
       .limit(cells)
       .select(
         (row_number().over(Window.orderBy("__h")) - 1).as("cell"),
         col("embedding").as("centroid"))
-    for (_ <- 1 to iters) {
-      val assigned = assignCells(emb, centroids)
-      val updated = assigned
+    // a cell can lose all members; its centroid simply drops out
+    // (fewer live cells — harmless, assignment is argmax over live)
+    graft.ops.Rounds.fixed(seeds, iters) { centroids =>
+      assignCells(emb, centroids)
         .join(emb, "vec_id")
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("cell", "pos")
@@ -196,11 +194,7 @@ object SimilarityPipeline {
         .select(
           col("cell"),
           transform(col("pm"), x => x.getField("m").cast("float")).as("centroid"))
-      // a cell can lose all members; its centroid simply drops out
-      // (fewer live cells — harmless, assignment is argmax over live)
-      centroids = updated.pinLineage()
     }
-    centroids
   }
 
   /** Argmax-cosine cell assignment of `emb` (vec_id, embedding) against
@@ -296,42 +290,50 @@ object SimilarityPipeline {
   def kmeansCentroidsFp(
       fp: DataFrame, cells: Int, iters: Int, centScale: Long = 1000000L): DataFrame = {
     require(cells > 0 && iters >= 1)
-    var cents = fp
-      .orderBy("vec_id")
-      .limit(cells)
+    graft.ops.Rounds.fixed(seedsFp(fp, cells, "cell", "cent"), iters)(
+      cents => lloydUpdateFp(fp, assignCellsFp(fp, cents), centScale))
+  }
+
+  /** The `n` lowest-vec_id fp vectors as (`idCol` 0..n−1, `vecCol`) —
+    * the deterministic seeds of every fixed-point quantizer.
+    */
+  private def seedsFp(fp: DataFrame, n: Int, idCol: String, vecCol: String): DataFrame =
+    fp.orderBy("vec_id")
+      .limit(n)
       .select(
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int").as("cell"),
-        col("q").as("cent"))
-    for (_ <- 1 to iters) {
-      val means = assignCellsFp(fp, cents)
-        .join(fp, "vec_id")
-        .select(col("cell"), posexplode(col("q")).as(Seq("i", "v")))
-        .groupBy("cell", "i")
-        .agg(sum("v").as("s"), count(lit(1)).as("nc"))
-        // truncated integer mean via abs/negate so Spark `div` (trunc)
-        // and DuckDB `//` agree regardless of their negative-operand
-        // conventions — both see non-negative operands only
-        .select(col("cell"), col("i"),
-          when(col("s") < 0, -expr("(-s) div nc")).otherwise(expr("s div nc")).as("m"))
-      val norms = means
-        .groupBy("cell")
-        .agg(sum(col("m") * col("m")).as("n2"))
-        .select(col("cell"), graft.ops.Exact.isqrt(col("n2")).as("r"))
-      val updated = means
-        .join(norms, "cell")
-        .select(col("cell"), col("i"),
-          when(col("r") === 0, col("m"))
-            .otherwise(
-              when(col("m") < 0, -expr(s"((-m) * $centScale) div r"))
-                .otherwise(expr(s"(m * $centScale) div r"))).as("c"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("ic"))
-        .select(col("cell"), transform(col("ic"), x => x.getField("c")).as("cent"))
-      val next = updated.pinLineage() // eager: reads (and retires) the old cents
-      graft.ops.Pin.unpin(cents)
-      cents = next
-    }
-    cents
+        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int").as(idCol),
+        col("q").as(vecCol))
+
+  /** One exact-integer Lloyd update: the truncated integer mean of each
+    * cell's members under `assigned = (vec_id, cell)`, normalized to a
+    * `centScale`-scaled unit vector via [[graft.ops.Exact.isqrt]].
+    * Returns (cell, cent); empty cells drop out.
+    */
+  private def lloydUpdateFp(fp: DataFrame, assigned: DataFrame, centScale: Long): DataFrame = {
+    val means = assigned
+      .join(fp, "vec_id")
+      .select(col("cell"), posexplode(col("q")).as(Seq("i", "v")))
+      .groupBy("cell", "i")
+      .agg(sum("v").as("s"), count(lit(1)).as("nc"))
+      // truncated integer mean via abs/negate so Spark `div` (trunc)
+      // and DuckDB `//` agree regardless of their negative-operand
+      // conventions — both see non-negative operands only
+      .select(col("cell"), col("i"),
+        when(col("s") < 0, -expr("(-s) div nc")).otherwise(expr("s div nc")).as("m"))
+    val norms = means
+      .groupBy("cell")
+      .agg(sum(col("m") * col("m")).as("n2"))
+      .select(col("cell"), graft.ops.Exact.isqrt(col("n2")).as("r"))
+    means
+      .join(norms, "cell")
+      .select(col("cell"), col("i"),
+        when(col("r") === 0, col("m"))
+          .otherwise(
+            when(col("m") < 0, -expr(s"((-m) * $centScale) div r"))
+              .otherwise(expr(s"(m * $centScale) div r"))).as("c"))
+      .groupBy("cell")
+      .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("ic"))
+      .select(col("cell"), transform(col("ic"), x => x.getField("c")).as("cent"))
   }
 
   /** Argmax-integer-dot assignment of `fp = (vec_id, q)` against
@@ -524,48 +526,11 @@ object SimilarityPipeline {
       centScale: Long = 1000000L): (DataFrame, DataFrame, DataFrame) = {
     require(cells > 0 && iters >= 1)
     val g = math.max(1L, graft.ops.Exact.isqrtLong(cells.toLong)).toInt
-    val coarse = fp
-      .orderBy("vec_id")
-      .limit(g)
-      .select(
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int").as("gcell"),
-        col("q").as("gcent"))
-      .pinLineage()
-    var cents = fp
-      .orderBy("vec_id")
-      .limit(cells)
-      .select(
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int").as("cell"),
-        col("q").as("cent"))
-      .pinLineage()
+    val coarse = seedsFp(fp, g, "gcell", "gcent").pinLineage()
     // one probed assignment pass against the CURRENT fine centroids
     def assign(c: DataFrame): DataFrame = probedAssignFp(fp, c, coarse)
-    for (_ <- 1 to iters) {
-      val means = assign(cents)
-        .join(fp, "vec_id")
-        .select(col("cell"), posexplode(col("q")).as(Seq("i", "v")))
-        .groupBy("cell", "i")
-        .agg(sum("v").as("s"), count(lit(1)).as("nc"))
-        .select(col("cell"), col("i"),
-          when(col("s") < 0, -expr("(-s) div nc")).otherwise(expr("s div nc")).as("m"))
-      val norms = means
-        .groupBy("cell")
-        .agg(sum(col("m") * col("m")).as("n2"))
-        .select(col("cell"), graft.ops.Exact.isqrt(col("n2")).as("r"))
-      val next = means
-        .join(norms, "cell")
-        .select(col("cell"), col("i"),
-          when(col("r") === 0, col("m"))
-            .otherwise(
-              when(col("m") < 0, -expr(s"((-m) * $centScale) div r"))
-                .otherwise(expr(s"(m * $centScale) div r"))).as("c"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("ic"))
-        .select(col("cell"), transform(col("ic"), x => x.getField("c")).as("cent"))
-        .pinLineage() // eager: reads (and retires) the old cents
-      graft.ops.Pin.unpin(cents)
-      cents = next
-    }
+    val cents = graft.ops.Rounds.fixed(seedsFp(fp, cells, "cell", "cent"), iters)(
+      c => lloydUpdateFp(fp, assign(c), centScale))
     (assign(cents), cents, coarse)
   }
 
@@ -1265,58 +1230,6 @@ object SimilarityPipeline {
         ((col("s") - col("n") * col("mi") * col("mj")) / (col("n") - 1)).as("c"))
   }
 
-  /** One dominant eigenvector of a (i, j, c) matrix frame by power
-    * iteration: v ← normalize(C·v), `iters` times from the uniform
-    * 1/√d start. Every iterate is d rows; the matvec is one equijoin
-    * on j (the d-row iterate BROADCASTS — the cov frame never
-    * re-shuffles per round, at any d that fits a task) + a map-side-
-    * combined sum; the norm is a 1-row anchor
-    * (the q79 idiom). localCheckpoint per round pins lineage — the
-    * kmeans pattern, so 15 rounds cost 15 tiny jobs, not an
-    * exponentially nested plan.
-    */
-  def powerIteration(cov: DataFrame, iters: Int = 15): DataFrame = {
-    // The covariance frame is DIMENSION-sized (d² rows — KBs to MBs at
-    // any real d), but a 32-partition layout makes every iteration
-    // stage launch 32 near-empty tasks; at ~3ms task overhead × ~6
-    // stages per pin that IS the measured cost of the loop. One
-    // partition ⇒ one task per stage.
-    val covLocal = cov.coalesce(1)
-    val d = covLocal.select(col("i")).distinct()
-    val dn = d.agg(count(lit(1)).as("dn")) // 1-row dimension anchor
-    var v = d.crossJoin(dn)
-      .select(col("i"), (lit(1.0) / sqrt(col("dn"))).as("v"))
-      .pinLineage()
-    for (it <- 1 to iters) {
-      val w = covLocal
-        .join(broadcast(v.select(col("i").as("j"), col("v").as("vj"))), Seq("j"))
-        .groupBy("i")
-        .agg(sum(col("c") * col("vj")).as("w"))
-      val norm = w.agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-      // Rank-deficient guard: on a zero covariance (or a deflation
-      // that zeroed the residual — e.g. a corpus of exact duplicates)
-      // w ≡ 0 and the norm is 0; under ANSI this divide would THROW.
-      // A zero vector is the honest degenerate axis: projections
-      // collapse to 0 and the grid consumers' cell-0 fallback keeps
-      // their recall contract.
-      v = w.crossJoin(norm) // 1-row norm anchor
-        .select(col("i"),
-          (col("w") / when(col("nrm") > 0, col("nrm")).otherwise(lit(1.0))).as("v"))
-      // pin every 3rd round (and the last). Measured alternatives at
-      // bench scale: pin EVERY round = 30 eager jobs (slowest); NO
-      // pins = the broadcast input of round k lazily re-executes the
-      // whole k-1 prefix — exponential blowup, >300s. The loop cost
-      // is a per-round fixed floor (codegen + scheduling of ~6 tiny
-      // stages), amortized over corpus size: the 16× probe moved the
-      // whole query 1.1×.
-      if (it % 3 == 0 || it == iters) v = v.pinLineage()
-    }
-    // ±v are both eigenvectors; pin the sign (non-negative loading
-    // sum) so downstream projections are orientation-stable.
-    val sgn = v.agg(when(sum(col("v")) >= 0, 1.0).otherwise(-1.0).as("sgn"))
-    v.crossJoin(sgn).select(col("i"), (col("v") * col("sgn")).as("v"))
-  }
-
   /** Top-2 axes of a covariance frame by BLOCK orthogonal iteration
     * (r7 — replaces the power-iterate-then-deflate-then-power-iterate
     * form): both iterates ride ONE matvec join per round (the cov
@@ -1329,13 +1242,21 @@ object SimilarityPipeline {
     * second eigenvector at the standard subspace-iteration rate — and
     * the d²-row DEFLATED MATRIX the old form materialized and
     * checkpointed per call is gone, which at bench scale halved the
-    * loop's fixed-cost stage count. Rank-deficient guard as in
-    * [[powerIteration]]: zero norms yield the honest zero axis.
+    * loop's fixed-cost stage count. Rank-deficient guard: on a zero
+    * covariance (or a corpus of exact duplicates) w ≡ 0 and the norm
+    * is 0 — under ANSI the divide would THROW — so zero norms yield
+    * the honest zero axis: projections collapse to 0 and the grid
+    * consumers' cell-0 fallback keeps their recall contract.
     * Returns the d-row (i, a1, a2) loading table, both signs pinned
     * (non-negative loading sum).
     */
   def topTwoAxes(cov: DataFrame, iters: Int = 15): DataFrame = {
-    val covLocal = cov.coalesce(1) // d² rows; one task per stage (see powerIteration)
+    // The covariance frame is DIMENSION-sized (d² rows — KBs to MBs at
+    // any real d), but a 32-partition layout makes every iteration
+    // stage launch 32 near-empty tasks; at ~3ms task overhead × ~6
+    // stages per pin that IS the measured cost of the loop. One
+    // partition ⇒ one task per stage.
+    val covLocal = cov.coalesce(1)
     val d = covLocal.select(col("i")).distinct()
     val dn = d.agg(count(lit(1)).as("dn"))
     def safeDiv(x: Column, n: Column): Column =
@@ -1360,8 +1281,8 @@ object SimilarityPipeline {
       // projection. Anchoring norm/dot/norm as three SEPARATE
       // crossJoins of nested aggregates multiplies the unpinned
       // subplan ~8× per round — measured 10× slower across the pin
-      // cadence; one anchor keeps the doubling at the powerIteration
-      // rate the cadence was tuned for.
+      // cadence; one anchor keeps the doubling at the one-axis power
+      // iteration's rate the cadence was tuned for.
       val st = w.agg(
         sum(col("w1") * col("w1")).as("s11"),
         sum(col("w1") * col("w2")).as("s12"),
@@ -1376,7 +1297,13 @@ object SimilarityPipeline {
               col("s22") - when(col("s11") > 0, col("s12") * col("s12") / col("s11"))
                 .otherwise(lit(0.0)),
               lit(0.0)))).as("v2"))
-      // pin cadence: the powerIteration rule (every 3rd + last)
+      // pin every 3rd round (and the last). Measured alternatives at
+      // bench scale: pin EVERY round = 30 eager jobs (slowest); NO
+      // pins = the broadcast input of round k lazily re-executes the
+      // whole k-1 prefix — exponential blowup, >300s. The loop cost
+      // is a per-round fixed floor (codegen + scheduling of ~6 tiny
+      // stages), amortized over corpus size: the 16× probe moved the
+      // whole query 1.1×.
       if (it % 3 == 0 || it == iters) vs = vs.pinLineage()
     }
     val sgn = vs.agg(

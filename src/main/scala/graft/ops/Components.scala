@@ -21,10 +21,9 @@ import graft.ops.Pin.PinOps
   * are short-diameter (near-dup similarity is transitive-ish), so
   * this converges in a handful of rounds. The driver only runs the
   * loop and a 1-row convergence probe per round; all data stays
-  * distributed. Each round pins the label frame ([[Pin]]: localCheckpoint, or reliable checkpoint under [[Pin.Flag]]): without
-  * it the plan lineage doubles per iteration and planning time, not
-  * data, becomes the bottleneck (the iterative-algorithm analog of the
-  * q41 cascade's materialization barrier).
+  * distributed. The rounds run on [[Rounds.iterate]], which pins each
+  * round's label frame (the iterative-algorithm analog of the q41
+  * cascade's materialization barrier).
   *
   * At larger diameters the classic large-star/small-star alternation
   * (Kiveris et al., "Connected Components in MapReduce and Beyond")
@@ -47,48 +46,30 @@ object Components {
     val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
       .pinLineage(eager = true) // edges are re-joined every round
-    var labels = sym.select(col("a").as("v")).distinct()
-      .withColumn("comp", col("v"))
-      .pinLineage(eager = true)
     // Convergence probe: per-vertex labels only ever DECREASE (min of
     // a set containing the old label), so the exact label sum is
     // strictly monotone in every changing round — sum equality ⇔ no
-    // label moved. One 1-row aggregate over the already-checkpointed
-    // frame, replacing the old prop⋈labels comparison join (one fewer
-    // shuffle job per round; at bench scale the per-round fixed costs
-    // ARE the operator's cost). DECIMAL(38,0): exact at any vertex-id
-    // magnitude and order-independent.
+    // label moved. One 1-row aggregate over the pinned frame, replacing
+    // the old prop⋈labels comparison join (one fewer shuffle job per
+    // round; at bench scale the per-round fixed costs ARE the
+    // operator's cost). DECIMAL(38,0): exact at any vertex-id magnitude
+    // and order-independent.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val r = df.agg(
         sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
-    var prevSum = labelSum(labels)
-    var round = 0
-    var done = false
-    while (!done && round < maxIter) {
-      // lazy checkpoint: the probe aggregate below is the round's ONE
-      // action — it materializes the checkpoint blocks and reads the
-      // 1-row sum in the same job (eager=true would run the plan twice
-      // per round, and per-round fixed costs are this operator's cost)
-      val prop = sym.join(labels, col("a") === col("v"))
-        .select(col("b").as("v"), col("comp"))
-        .union(labels.select(col("v"), col("comp")))
-        .groupBy("v").agg(min(col("comp")).as("comp"))
-        .pinLineage(eager = false)
-      val s = labelSum(prop)
-      // round t is materialized (the probe was its action): release
-      // round t−1's blocks now — bounds live pinned storage to ~2
-      // label generations instead of one per round
-      labels.unpin()
-      labels = prop
-      done = s.compareTo(prevSum) == 0
-      prevSum = s
-      round += 1
-    }
-    require(done, s"connectedComponents did not converge in $maxIter rounds " +
+    val out = Rounds.iterate(
+        sym.select(col("a").as("v")).distinct().withColumn("comp", col("v")), maxIter)(labelSum) {
+      (labels, _) =>
+        sym.join(labels, col("a") === col("v"))
+          .select(col("b").as("v"), col("comp"))
+          .union(labels.select(col("v"), col("comp")))
+          .groupBy("v").agg(min(col("comp")).as("comp"))
+    }((prev, s) => prev.exists(_.compareTo(s) == 0))
+    require(out.stopped, s"connectedComponents did not converge in $maxIter rounds " +
       "(diameter larger than expected — raise maxIter or use connectedComponentsStar)")
-    labels
+    out.state
   }
 
   /** Connected components by alternating large-star/small-star
@@ -109,9 +90,8 @@ object Components {
     *
     * Both steps are one groupBy + one equijoin on the edge frame —
     * shuffle-bounded by the CURRENT edge set, which only shrinks
-    * toward one edge per non-minimum vertex. Rounds checkpoint (the
-    * same lineage rule as the propagation loop); the driver runs only
-    * the loop and a fixed-point probe.
+    * toward one edge per non-minimum vertex. Rounds run on
+    * [[Rounds.iterate]] with a 1-row fixed-point probe.
     */
   def connectedComponentsStar(
       edges: DataFrame,
@@ -159,34 +139,20 @@ object Components {
     // equal only at the fixed point: one 1-row aggregate per round
     // instead of the previous count + anti-join pair (the propagation
     // loop's label-sum trick). The non-negativity the argument needs
-    // is checked once, on the same initial aggregate, for free.
+    // is checked on the same aggregate, for free; with it every
+    // canonical edge sums to ≥ 1, so a zero sum is the empty edge set.
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     def edgeSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum((col("a") + col("b")).cast(dec38))).head()
+      val r = df.agg(sum((col("a") + col("b")).cast(dec38)), min(col("a"))).head()
+      require(r.isNullAt(1) || r.get(1).asInstanceOf[Number].longValue() >= 0L,
+        "connectedComponentsStar's fixpoint probe requires non-negative vertex ids")
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
-    var e = canon(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
-      .pinLineage(eager = false) // the init aggregate materializes it
-    val init = e.agg(
-      sum((col("a") + col("b")).cast(dec38)),
-      min(col("a")), count(lit(1))).head()
-    require(init.getLong(2) == 0L || init.get(1).asInstanceOf[Number].longValue() >= 0L,
-      "connectedComponentsStar's fixpoint probe requires non-negative vertex ids")
-    var prevSum = if (init.isNullAt(0)) java.math.BigDecimal.ZERO else init.getDecimal(0)
-    var round = 0
-    var done = init.getLong(2) == 0L
-    while (!done && round < maxIter) {
-      // lazy checkpoint + probe-as-materializer: one action per round
-      // (same rule as the propagation loop)
-      val next = canon(smallStar(largeStar(e))).pinLineage(eager = false)
-      val s = edgeSum(next)
-      done = s.compareTo(prevSum) == 0
-      e.unpin() // superseded round's blocks — see the propagation loop
-      e = next
-      prevSum = s
-      round += 1
-    }
-    require(done, s"connectedComponentsStar did not converge in $maxIter rounds")
+    val out = Rounds.iterate(canon(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))), maxIter)(
+      edgeSum)((e, _) => canon(smallStar(largeStar(e))))(
+      (prev, s) => s.signum == 0 || prev.exists(_.compareTo(s) == 0))
+    require(out.stopped, s"connectedComponentsStar did not converge in $maxIter rounds")
+    val e = out.state
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
     val labels = sym.groupBy("a").agg(min(col("b")).as("mb"))
       .select(col("a").as("v"), least(col("a"), col("mb")).as("comp"))

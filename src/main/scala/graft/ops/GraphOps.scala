@@ -167,8 +167,7 @@ object GraphOps {
     * float-PageRank reproducibility problem (parallel sum order
     * changes ranks) is defined away. Fixed iteration count keeps the
     * operator a pure dataflow (one declarative plan, no convergence
-    * probe); [[Components]] owns the data-dependent-iteration
-    * pattern.
+    * probe); [[Rounds]] owns the data-dependent-iteration pattern.
     *
     * Each iteration is one edge⋈rank equijoin + one map-side-combined
     * groupBy — shuffle ∝ edges, the minimum a message-passing round
@@ -221,20 +220,16 @@ object GraphOps {
     * first discovery IS its minimum distance (uniform edge weights)
     * and no relaxation/min-merge pass is ever needed.
     *
-    * Loop hygiene (the q122 frame-reuse lesson): each round's frontier
-    * is checkpointed EAGERLY — it is read twice (emptiness probe +
-    * next round's expansion join) and the probe rides the
-    * materialization; the accumulated distance frame checkpoints
-    * LAZILY (the q120 rule — it is only read next round, so its pin
-    * materializes as part of that round's single job). Per round the
-    * shuffle carries one frontier expansion (≤ |E| rows) and the
-    * anti-join against distances — never the whole graph re-derived.
-    *
-    * Termination is the empty frontier — a limit-1 probe on the
-    * already-materialized checkpoint, not a count. `maxHops` bounds
-    * adversarial diameters (a path graph degenerates to one round per
-    * vertex; for such graphs run [[Components.connectedComponentsStar]]
-    * -style doubling instead).
+    * The rounds run on [[Rounds.iterate]] over ONE pinned frame of
+    * (v, d): frontier and distances together. Round k expands the
+    * rows at the deepest level, and its probe — that deepest level —
+    * is also the stop test: a round that reaches no new vertex leaves
+    * it unchanged. Per round the shuffle carries one frontier
+    * expansion (≤ |E| rows) and the anti-join against distances —
+    * never the whole graph re-derived. `maxHops` bounds adversarial
+    * diameters (a path graph degenerates to one round per vertex; for
+    * such graphs run [[Components.connectedComponentsStar]]-style
+    * doubling instead).
     *
     * @return (v, d) — reached vertices only; seeds outside the edge
     *         set are dropped (the vertex-universe rule).
@@ -248,34 +243,19 @@ object GraphOps {
       maxHops: Int = 20,
   ): DataFrame = {
     val sym = pinnedSym(canon(edges, srcCol, dstCol))
-    var frontier = seeds.select(col(seedCol).as("v")).distinct()
+    val seeded = seeds.select(col(seedCol).as("v")).distinct()
       .join(sym.select(col("a").as("v")), Seq("v"), "left_semi")
-      .pinLineage(eager = true)
-    var dist = frontier.withColumn("d", lit(0L))
-    var k = 0
-    var done = frontier.isEmpty
-    while (!done && k < maxHops) {
-      k += 1
+      .withColumn("d", lit(0L))
+    // −1: no seed is a vertex of the graph
+    def deepest(dist: DataFrame): Long =
+      dist.agg(coalesce(max(col("d")), lit(-1L))).head().getLong(0)
+    Rounds.iterate(seeded, maxHops, aligned = true)(deepest) { (dist, k) =>
       val next = sym
-        .join(frontier.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+        .join(dist.where(col("d") === k).select(col("v").as("a")), Seq("a"), "left_semi")
         .select(col("b").as("v")).distinct()
         .join(dist, Seq("v"), "left_anti")
-        .pinLineage(eager = true) // probed + expanded next round
-      // For k ≥ 2 the eager action above ALSO materialized the lazy
-      // dist(k−1) pin (it reads dist), so the superseded frontier —
-      // from then on referenced only by plans backed by their own
-      // blocks — can release its blocks. NOT at k = 1: dist(0) is a
-      // plain projection that keeps reading the seed frontier's RDD
-      // until dist(1) materializes.
-      if (k >= 2) frontier.unpin()
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.union(next.withColumn("d", lit(k.toLong)))
-          .pinLineage(eager = false) // pinned by next round's job
-        frontier = next
-      }
-    }
-    dist
+      dist.union(next.withColumn("d", lit(k + 1)))
+    }((prev, k) => k < 0 || prev.contains(k)).state
   }
 
   /** Deterministic synchronous label propagation (fixed `rounds`):
@@ -342,8 +322,8 @@ object GraphOps {
     * synchronous peels, so every surviving (vertex, degree) pair is a
     * pure function of the graph. Once a round drops nothing the peel
     * is at ITS fixpoint — the true k-core — and remaining rounds are
-    * no-ops; the loop detects that with a 1-row probe on the
-    * materialized degree frame and exits early (identical result,
+    * no-ops; the loop ([[Rounds.iterate]]) detects that with its 1-row
+    * probe, the peel layer's size, and exits early (identical result,
     * fewer jobs). Production use runs rounds = a diameter rail (each
     * round only cascades one deletion "layer", so depth needed =
     * longest deletion chain, small for real heavy-tailed graphs).
@@ -381,28 +361,13 @@ object GraphOps {
       broadcastRailRows: Long = 4000000L,
   ): DataFrame = {
     val adj = pinnedSym(canon(edges, srcCol, dstCol))
-    // the one full recount; lazy pin — the round's probe materializes it
-    var deg = Pin.pinAligned(
-      adj.groupBy(col("a").as("v")).agg(count(lit(1)).as("dg")), eager = false)
-    var prevDeg: Option[DataFrame] = None
-    var stable = false
-    for (_ <- 1 to rounds if !stable) {
-      val dead = deg.where(col("dg") < k).select("v")
-      // ONE job per round: materializes this round's lazy degree
-      // checkpoint and reads the layer size off it
-      val nDead = dead.count()
-      // deg is now backed by its own blocks — release round t−1's
-      prevDeg.foreach(Pin.unpin)
-      prevDeg = None
-      if (nDead == 0L) stable = true
-      else {
-        val layer =
-          if (nDead <= broadcastRailRows) broadcast(dead) else dead
-        prevDeg = Some(deg)
-        deg = Pin.pinAligned(peelRound(adj, deg, layer, k), eager = false)
-      }
-    }
-    deg.select(col("v"), col("dg").as("deg"))
+    def dead(deg: DataFrame): DataFrame = deg.where(col("dg") < k).select("v")
+    // the one full recount; each round's probe is its peel layer's size
+    Rounds.iterate(
+        adj.groupBy(col("a").as("v")).agg(count(lit(1)).as("dg")), rounds, aligned = true)(
+      dead(_).count()) { (deg, nDead) =>
+      peelRound(adj, deg, if (nDead <= broadcastRailRows) broadcast(dead(deg)) else dead(deg), k)
+    }((_, nDead) => nDead == 0L).state.select(col("v"), col("dg").as("deg"))
   }
 
   /** One peel round's DELTA degree update: survivors (dg ≥ k) keep

@@ -2,11 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage pinning for iterative loops ([[Components]], [[GraphOps]],
-  * [[Ranks]]): every round must cut the plan lineage or planning time
-  * doubles per iteration. The DEFAULT is `localCheckpoint` — executor
-  * block storage, no extra I/O, the right call on a healthy cluster
-  * and in local mode.
+/** Lineage pinning for iterative loops (run through [[Rounds]]) and
+  * for frames a plan reads more than once: every loop round must cut
+  * the plan lineage or planning time doubles per iteration. The
+  * DEFAULT is `localCheckpoint` — executor block storage, no extra
+  * I/O, the right call on a healthy cluster and in local mode.
   *
   * The escape hatch: `localCheckpoint` blocks live on executors, so on
   * a real multi-executor cluster LOSING an executor mid-loop kills the
@@ -89,21 +89,21 @@ object Pin {
     val spark = df.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     val rp = df.repartition(n, parts: _*)
-    pinNonAdaptive(if (sortBy.isEmpty) rp else rp.sortWithinPartitions(sortBy: _*), eager = true)
+    pinAligned(if (sortBy.isEmpty) rp else rp.sortWithinPartitions(sortBy: _*))
   }
 
   /** Pin `df` keeping WHATEVER partitioning its plan already carries
     * (no repartition) — the [[pinPartitioned]] capture rule for frames
     * that are ALREADY laid out right by lineage (e.g. an aggregate or
-    * join keyed like the pinned frame it reads): plan non-adaptively
-    * in a cloned session so the checkpoint records HashPartitioning
-    * instead of AQE's Unknown, and the next round's join/aggregate on
-    * the same key stays exchange-free. `eager = false` supports the
-    * loop idiom where the round's single probe action materializes
-    * the checkpoint.
+    * join keyed like the pinned frame it reads): the checkpoint is
+    * planned in the non-adaptive clone ([[onClone]]) so it records
+    * HashPartitioning instead of AQE's Unknown, and the next round's
+    * join/aggregate on the same key stays exchange-free. The checkpoint
+    * scan is rebound to the caller's session.
     */
   def pinAligned(df: DataFrame, eager: Boolean = true): DataFrame =
-    pinNonAdaptive(df, eager)
+    org.apache.spark.sql.graftshim.DatasetShim.ofRows(
+      df.sparkSession, onClone(df)(Pin(_, eager)).queryExecution.analyzed)
 
   /** ONE non-adaptive clone per caller session, created lazily and
     * reused for every pin. Memoization is load-bearing, not a nicety:
@@ -121,26 +121,25 @@ object Pin {
   private val cloneCache =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]
 
-  /** Materialize the checkpoint under a CLONED session with adaptive
-    * execution off, then rebind the resulting checkpoint scan to the
-    * caller's session. The clone shares the SparkContext (so blocks,
-    * broadcasts and the checkpoint RDD are the same), but its SQLConf
-    * is private: no session-global conf mutation is observable by any
-    * concurrent query. On every pin the clone's runtime conf is synced
-    * to the caller's (every non-static entry set or unset to match),
-    * so whatever the caller set — broadcast thresholds, join and
-    * codegen switches, [[Flag]] — governs the materialization too. The sync and
-    * the planning hold the clone's lock, so a pin always plans under
-    * one consistent snapshot of its caller's conf.
+  /** Apply `f` to `df` rebound to its session's non-adaptive clone. The
+    * clone shares the SparkContext (so blocks, broadcasts and checkpoint
+    * RDDs are the same), but its SQLConf is private: no session-global
+    * conf mutation is observable by any concurrent query. First the
+    * clone's runtime conf is synced to the caller's (every non-static
+    * entry set or unset to match), so whatever the caller set —
+    * broadcast thresholds, join and codegen switches, [[Flag]] —
+    * governs `f`'s plans too. The sync and `f` hold the clone's lock,
+    * so `f` always plans under one consistent snapshot of its caller's
+    * conf.
     */
-  private def pinNonAdaptive(df: DataFrame, eager: Boolean): DataFrame = {
+  private[ops] def onClone[T](df: DataFrame)(f: DataFrame => T): T = {
     import org.apache.spark.sql.graftshim.DatasetShim
     import org.apache.spark.sql.internal.SQLConf
     val spark = df.sparkSession
     val clone = cloneCache.synchronized {
       cloneCache.computeIfAbsent(spark, s => s.newSession())
     }
-    val pinned = clone.synchronized {
+    clone.synchronized {
       val cloneConf = clone.sessionState.conf
       def runtime(m: Map[String, String]) = m.filter { case (k, _) => !SQLConf.isStaticConfigKey(k) }
       val want = runtime(spark.sessionState.conf.getAllConfs) +
@@ -148,26 +147,12 @@ object Pin {
       val have = runtime(cloneConf.getAllConfs)
       (have.keySet -- want.keySet).foreach(cloneConf.unsetConf)
       want.foreach { case (k, v) => if (!have.get(k).contains(v)) cloneConf.setConfString(k, v) }
-      Pin(DatasetShim.ofRows(clone, df.queryExecution.analyzed), eager)
+      f(DatasetShim.ofRows(clone, df.queryExecution.analyzed))
     }
-    DatasetShim.ofRows(spark, pinned.queryExecution.analyzed)
   }
-
-  /** Release a SUPERSEDED pinned frame's blocks now instead of at
-    * ContextCleaner leisure. Loop operators call this on round t−1
-    * once round t is materialized: without it a 20-round components
-    * run holds 20 generations of label blocks until the query ends
-    * and GC runs — dead weight that becomes the NEXT query's memory
-    * pressure (the r9 bench artifact's accumulation suspect). No-op
-    * for reliable checkpoints (file-backed; cleaned by
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`).
-    */
-  def unpin(df: DataFrame): Unit =
-    org.apache.spark.sql.graftshim.RddShim.unpersistPinned(df)
 
   /** `df.pinLineage(eager)` — chainable form of [[Pin.apply]]. */
   implicit class PinOps(private val df: DataFrame) extends AnyVal {
     def pinLineage(eager: Boolean = true): DataFrame = Pin(df, eager)
-    def unpin(): Unit = Pin.unpin(df)
   }
 }

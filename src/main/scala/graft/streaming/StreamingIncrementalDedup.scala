@@ -49,11 +49,15 @@ object StreamingIncrementalDedup {
 
   /** Per-row twin of [[TextPipeline.bandKeys]]: bkey is the multi-arg
     * xxhash64 over the band's signature components, exactly as the
-    * relational form computes it from its wide columns.
+    * relational form computes it from its wide columns. Components are
+    * read with `getItem` (GetArrayItem), which the optimizer folds
+    * against the inlined `array(...)` of [[rowSignature]] to the one
+    * component it names; `element_at` does not fold, so every read
+    * would copy the whole k-lambda signature into the plan.
     */
   def rowBandStructs(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
-      val comps = (0 until rowsPerBand).map(r => element_at(sig, b * rowsPerBand + r + 1))
+      val comps = (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
       struct(lit(b).as("band"), xxhash64(comps: _*).as("bkey"))
     }: _*)
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftshim.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,4 +28,28 @@ object SparkSpec {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("spark-wh").toString)
     .getOrCreate()
+
+  /** `body`'s result and the number of Spark jobs it launched from this
+    * thread (tagged by a job group, so jobs of other threads never count).
+    */
+  def jobsLaunchedBy[T](body: => T): (T, Int) = {
+    val sc = session.sparkContext
+    val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count guard")
+    try {
+      val result = body
+      ListenerBusShim.drain(sc)
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -1,0 +1,80 @@
+package graft.ops
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.SparkSpec.jobsLaunchedBy
+import graft.functions.VectorFunctions
+import graft.llm.SimilarityPipeline
+
+/** Loop guard: every operator that runs on [[Rounds]] builds and
+  * materializes its result on a small fixture within a fixed job budget,
+  * and leaves no superseded round's state pinned behind it.
+  */
+class RoundsSpec extends SparkSpec {
+  import spark.implicits._
+
+  // a 6-path, a triangle and a pair: the path's min label needs 5 hops
+  private lazy val graph = Seq(
+    (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+    (10L, 11L), (11L, 12L), (12L, 10L), (20L, 21L)).toDF("a", "b")
+  private lazy val fp = Tables.embeddings(spark, sfDir)
+    .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), 10000000L).as("q"))
+
+  /** RDD ids of the persisted frames `df`'s plan reads. */
+  private def readRdds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+
+  /** Jobs `loop` launches building its result and collecting it once,
+    * and the RDDs it left persisted that the result does not read.
+    */
+  private def run(loop: => DataFrame): (Int, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (out, jobs) = jobsLaunchedBy { val df = loop; df.collect(); df }
+    (jobs, sc.getPersistentRDDs.keySet.toSet -- before -- readRdds(out))
+  }
+
+  // (loop, jobs it launched before it ran on Rounds — measured on these
+  // fixtures — and the pins of loop-invariant inputs it keeps: the
+  // symmetrized edge frame of components, BFS and k-core)
+  private val loops: Seq[(String, Int, Int, () => DataFrame)] = Seq(
+    ("connectedComponents", 30, 1, () => Components.connectedComponents(graph, "a", "b")),
+    ("connectedComponentsStar", 36, 0, () => Components.connectedComponentsStar(graph, "a", "b")),
+    ("bfsHops", 35, 1, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
+    ("kCorePeel converged", 16, 1, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 5)),
+    ("kCorePeel bounded", 10, 1, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 2)),
+    ("kmeansCentroids", 22, 0, () =>
+      SimilarityPipeline.kmeansCentroids(Tables.embeddings(spark, sfDir), cells = 4, iters = 3)),
+    ("kmeansCentroidsFp", 28, 0, () => SimilarityPipeline.kmeansCentroidsFp(fp, cells = 4, iters = 3)),
+    ("ivfAssignCellsFp", 57, 0, () => SimilarityPipeline.ivfAssignCellsFp(fp, cells = 4, iters = 3)),
+  )
+
+  test("iterate reports the rounds it ran and whether stop or the bound ended it") {
+    val zero = spark.range(1).select(lit(0L).as("x"))
+    def climb(from: DataFrame, maxRounds: Int) =
+      Rounds.iterate(from, maxRounds)(_.agg(max("x")).head().getLong(0))(
+        (s, _) => s.select((col("x") + 1).as("x")))((_, x) => x >= 3)
+    val stopped = climb(zero, 5)
+    assert((stopped.rounds, stopped.stopped) == ((3, true)))
+    assert(stopped.state.as[Long].collect().toSeq == Seq(3L))
+    val bounded = climb(zero, 2)
+    assert((bounded.rounds, bounded.stopped) == ((2, false)))
+    assert(bounded.state.as[Long].collect().toSeq == Seq(2L))
+    assert(climb(zero.select(lit(7L).as("x")), 5).rounds == 0, "stop is tested on the initial state")
+    val fixed = Rounds.fixed(zero, 4)(_.select((col("x") + 1).as("x")))
+    assert(fixed.as[Long].collect().toSeq == Seq(4L))
+  }
+
+  for ((name, parentJobs, inputPins, loop) <- loops)
+    test(s"$name: at most $parentJobs jobs; no superseded round stays pinned") {
+      val (jobs, leftover) = run(loop())
+      assert(jobs <= parentJobs, s"$name launched $jobs jobs")
+      assert(leftover.size <= inputPins,
+        s"$name left ${leftover.size} persisted RDDs its result does not read; " +
+          s"only its $inputPins loop-invariant input pin(s) may stay")
+    }
+}

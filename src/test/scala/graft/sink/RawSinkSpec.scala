@@ -8,13 +8,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.graftshim.ListenerBusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.jobsLaunchedBy
 import graft.model.{PartitionKey, PartitionState, RunContext}
 
 /** A local FileSystem that ANSWERS as an object store (`getScheme` =
@@ -71,30 +70,6 @@ class RawSinkSpec extends SparkSpec {
     val walk = Files.walk(Paths.get(root))
     try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
     finally walk.close()
-  }
-
-  /** `body`'s result and the number of Spark jobs it launched from this
-    * thread (tagged by a job group, so jobs of other threads never count).
-    */
-  private def jobsLaunchedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"rawsink-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job-count guard")
-    try {
-      val result = body
-      ListenerBusShim.drain(sc)
-      (result, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("writeRun writes payload, seals metadata-last, records counts") {
