@@ -2,18 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session graft's mains (Bench, Verify and the tools)
-  * run on, configured in one place: `local[$SPARK_GRAFT_CPUS]`
-  * (default 4) with as many shuffle partitions as cores, no UI, UTC
+/** The one local session graft runs on — the mains (Bench, Verify and
+  * the tools) and the spec suite — configured in one place:
+  * `local[cores]` with as many shuffle partitions as cores, no UI, UTC
   * session time zone, 4m Tungsten pages and WARN logging.
   */
 object GraftSession {
 
-  def local(): SparkSession = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** @param cores local cores; the mains take `$SPARK_GRAFT_CPUS`
+    *   (default 4), the spec suite fixes 4 so its parallelism does not
+    *   follow the machine.
+    */
+  def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // Tungsten page size is derived from heap/cores when unset: on a

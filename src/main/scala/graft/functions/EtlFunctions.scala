@@ -30,9 +30,6 @@ object EtlFunctions {
   def isoMillis(ts: Column): Column =
     date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
 
-  /** X4 — parse the reference's ISO strings back to timestamps. */
-  def parseIso(s: Column): Column = to_timestamp(s)
-
   /** X6 — idempotent `[terminal]` marker prepend (cli.py:667-674). */
   def markTerminal(msg: Column): Column =
     when(msg.contains(graft.model.PartitionState.TerminalMarker), msg)

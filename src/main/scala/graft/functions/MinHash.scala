@@ -3,57 +3,26 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** MinHash signatures + LSH banding for near-duplicate detection at
-  * scale, plus SimHash. All pure column expressions (xxhash64 + HOFs),
-  * no UDFs.
+/** The hash families of graft's near-duplicate operators, plus the
+  * per-row SimHash oracle.
   *
-  * The scalable near-dup pipeline is:
-  *   shingles → minhash signature (k hashes) → band keys → equijoin on
-  *   (band, bandHash) to get candidates → exact Jaccard on candidates.
-  * This replaces the O(N²) all-pairs shingle join with a shuffle whose
-  * size is O(N · bands) and whose join keys are uniformly distributed —
-  * the only near-dup shape that survives 100 TB.
+  *  - '''portable family''': [[portableHash60]] / [[portableHash48]] (md5
+  *    prefixes) and the Carter–Wegman rehash [[cwRehash]]. Every step is
+  *    reproducible verbatim in DuckDB SQL, which gives the registered
+  *    MinHash-LSH, SimHash and KMV queries real oracles;
+  *  - '''[[simHash]]''': the per-row (HOF) xxhash64 SimHash, the parity
+  *    oracle of the relational [[graft.llm.TextPipeline.simHashDf]].
   *
-  * Determinism: xxhash64 is a fixed algorithm with a fixed seed per
-  * hash function, so signatures are stable across runs and clusters.
+  * The MinHash signatures and band keys themselves have one relational
+  * form ([[graft.llm.TextPipeline.minHashSignatures]], `bandKeys` and
+  * their portable twins) and one per-row form
+  * ([[graft.streaming.StreamingIncrementalDedup]]'s `rowSignature` /
+  * `rowBandStructs`).
+  *
+  * Determinism: xxhash64 and md5 are fixed algorithms with fixed seeds,
+  * so hashes are stable across runs and clusters.
   */
 object MinHash {
-
-  /** k-function MinHash signature of a string-set column.
-    * `minhash_i(S) = min over s∈S of xxhash64(i, s)`; an empty set
-    * yields an EMPTY array (not k nulls — `array_min([])` is null, and
-    * k-null signatures would silently band-collide every empty doc
-    * with every other), so `size(sig) > 0` filters work as documented.
-    */
-  def signature(shingles: Column, k: Int): Column =
-    when(
-      size(shingles) > 0,
-      array((0 until k).map { i =>
-        array_min(transform(shingles, s => xxhash64(lit(i), s)))
-      }: _*),
-    ).otherwise(array().cast("array<bigint>"))
-
-  /** LSH band keys: the signature split into `bands` rows-per-band
-    * groups, each band hashed to one long. Two docs share a band key
-    * with probability ≈ jaccard^rowsPerBand, amplified over bands.
-    * Returns `array<struct<band:int, key:bigint>>` ready to explode.
-    */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      val bandSlice = slice(sig, b * rowsPerBand + 1, rowsPerBand)
-      struct(
-        lit(b).as("band"),
-        xxhash64(concat_ws(",", transform(bandSlice, _.cast("string")))).as("key"),
-      )
-    }: _*)
-
-  /** Estimated Jaccard from two equal-length signatures: fraction of
-    * agreeing components.
-    */
-  def estimateJaccard(sigA: Column, sigB: Column): Column =
-    when(size(sigA) > 0,
-      size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x)).cast("double") / size(sigA))
-      .otherwise(lit(0.0))
 
   /** 64-bit SimHash over a token array: per-token xxhash64, sum ±1 per
     * bit position, sign → bit. Hamming-close simhashes ⇒ similar token
@@ -70,9 +39,6 @@ object MinHash {
       when(votes > 0, lit(1L << bit)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
   }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b)).cast("int")
 
   // ------------------------------------------------------------------
   // Portable (cross-engine) variants. xxhash64 exists only in Spark;
@@ -137,20 +103,5 @@ object MinHash {
   def cwRehash(h: Column, i: Int): Column = {
     val (a, b) = cwConstants(i)
     ((h % lit(MersenneP)) * lit(a) + lit(b)) % lit(MersenneP)
-  }
-
-  /** 60-bit SimHash over a token array with the portable hash: same
-    * vote construction as [[simHash]], bits 0–59.
-    */
-  def simHashPortable(tokens: Column): Column = {
-    val hashes = transform(tokens, t => portableHash60(t))
-    (0 until 60).map { bit =>
-      val votes = aggregate(
-        hashes,
-        lit(0L),
-        (acc, h) => acc + when(h.bitwiseAND(lit(1L << bit)) =!= 0L, 1L).otherwise(-1L),
-      )
-      when(votes > 0, lit(1L << bit)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
   }
 }

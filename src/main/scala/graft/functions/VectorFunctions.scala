@@ -28,9 +28,6 @@ object VectorFunctions {
       (acc, v) => acc + v,
     )
 
-  /** Euclidean norm. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity; 0.0 when either vector has zero norm. Single
     * fused codegen'd pass ([[graft.expressions.FloatVecCosine]]).
     */

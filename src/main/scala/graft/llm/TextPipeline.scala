@@ -8,18 +8,22 @@ import org.apache.spark.sql.functions._
 import graft.functions.MinHash
 
 /** DataFrame-shaped (relational) implementations of the text/dedup
-  * pipeline stages.
+  * pipeline stages — the forms every registered text query runs.
   *
-  * The Column-function forms in [[graft.functions.TextFunctions]] and
-  * [[graft.functions.MinHash]] use array higher-order functions, which
-  * are CodegenFallback in Spark — every lambda element is evaluated
-  * interpreted, per row. Fine for ad-hoc use; ~10× too slow in the hot
-  * path (measured: 13.5s to shingle 5k docs interpreted vs <2s
-  * relational). These transforms express the same stages as
-  * explode/window/groupBy pipelines built only from codegen'd native
-  * expressions (split, lead, concat_ws, xxhash64, bitwise ops), so the
-  * whole stage stays inside WholeStageCodegen and scales linearly with
-  * executors.
+  * Array higher-order functions are CodegenFallback in Spark: every
+  * lambda element is evaluated interpreted, per row (measured: 13.5s to
+  * shingle 5k docs interpreted vs <2s relational). These transforms
+  * express the stages as explode/window/groupBy pipelines built only
+  * from codegen'd native expressions (split, lead, concat_ws, xxhash64,
+  * md5, bitwise ops), so the whole stage stays inside WholeStageCodegen
+  * and scales linearly with executors.
+  *
+  * The per-row (HOF) forms left are oracles or streaming twins, each
+  * parity-tested against its relational form here:
+  * [[graft.functions.TextFunctions]] (shingles, language id),
+  * [[graft.functions.MinHash.simHash]] (SimHash) and
+  * [[graft.streaming.StreamingIncrementalDedup]] (MinHash signatures
+  * and band keys of one row).
   */
 object TextPipeline {
 

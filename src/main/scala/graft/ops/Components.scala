@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RddShim
 
 import graft.ops.Pin.PinOps
 
@@ -67,6 +68,7 @@ object Components {
           .union(labels.select(col("v"), col("comp")))
           .groupBy("v").agg(min(col("comp")).as("comp"))
     }((prev, s) => prev.exists(_.compareTo(s) == 0))
+    RddShim.unpersistPinned(sym)
     require(out.stopped, s"connectedComponents did not converge in $maxIter rounds " +
       "(diameter larger than expected — raise maxIter or use connectedComponentsStar)")
     out.state

@@ -96,7 +96,4 @@ object CorpusStats {
     try r.getRecordCount
     finally r.close()
   }
-
-  /** Test/ops hook: drop all cached counts. */
-  private[graft] def invalidate(): Unit = cache.clear()
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RddShim
 import org.apache.spark.sql.types.DecimalType
 
 import graft.ops.Pin.PinOps
@@ -249,13 +250,15 @@ object GraphOps {
     // −1: no seed is a vertex of the graph
     def deepest(dist: DataFrame): Long =
       dist.agg(coalesce(max(col("d")), lit(-1L))).head().getLong(0)
-    Rounds.iterate(seeded, maxHops, aligned = true)(deepest) { (dist, k) =>
+    val out = Rounds.iterate(seeded, maxHops, aligned = true)(deepest) { (dist, k) =>
       val next = sym
         .join(dist.where(col("d") === k).select(col("v").as("a")), Seq("a"), "left_semi")
         .select(col("b").as("v")).distinct()
         .join(dist, Seq("v"), "left_anti")
       dist.union(next.withColumn("d", lit(k + 1)))
     }((prev, k) => k < 0 || prev.contains(k)).state
+    RddShim.unpersistPinned(sym)
+    out
   }
 
   /** Deterministic synchronous label propagation (fixed `rounds`):
@@ -363,11 +366,13 @@ object GraphOps {
     val adj = pinnedSym(canon(edges, srcCol, dstCol))
     def dead(deg: DataFrame): DataFrame = deg.where(col("dg") < k).select("v")
     // the one full recount; each round's probe is its peel layer's size
-    Rounds.iterate(
+    val out = Rounds.iterate(
         adj.groupBy(col("a").as("v")).agg(count(lit(1)).as("dg")), rounds, aligned = true)(
       dead(_).count()) { (deg, nDead) =>
       peelRound(adj, deg, if (nDead <= broadcastRailRows) broadcast(dead(deg)) else dead(deg), k)
-    }((_, nDead) => nDead == 0L).state.select(col("v"), col("dg").as("deg"))
+    }((_, nDead) => nDead == 0L).state
+    RddShim.unpersistPinned(adj)
+    out.select(col("v"), col("dg").as("deg"))
   }
 
   /** One peel round's DELTA degree update: survivors (dg ≥ k) keep

@@ -28,6 +28,11 @@ import org.apache.spark.sql.graftshim.RddShim
   * `stop(previous, current)` sees the probe of the state before the
   * round (None when testing the initial state) and of the state the
   * round produced. [[fixed]] is the form with no stop test.
+  *
+  * Pins of loop-invariant inputs (the symmetrized edge frame of
+  * components, BFS and k-core) belong to the caller, which releases
+  * them once the loop returns: the final state is materialized by then
+  * and no longer reads them.
   */
 object Rounds {
 

@@ -96,24 +96,6 @@ object GraftProperties extends Properties("graft") {
     counts.zip(counts.tail).forall { case (smaller, larger) => smaller >= larger }
   }
 
-  // --- MinHash estimate bounds + symmetry (pure column math on tiny df).
-  property("estimateJaccard is within [0,1] and symmetric") =
-    forAll(Gen.listOfN(6, Gen.alphaLowerStr.suchThat(_.nonEmpty))) { words =>
-      val t1 = words.mkString(" ")
-      val t2 = words.reverse.mkString(" ")
-      val df = Seq((t1, t2)).toDF("a", "b")
-      import graft.functions.{MinHash, TextFunctions}
-      val Array(e1, e2) = df.select(
-        MinHash.estimateJaccard(
-          MinHash.signature(TextFunctions.wordShingles(col("a"), 2), 16),
-          MinHash.signature(TextFunctions.wordShingles(col("b"), 2), 16)).as("ab"),
-        MinHash.estimateJaccard(
-          MinHash.signature(TextFunctions.wordShingles(col("b"), 2), 16),
-          MinHash.signature(TextFunctions.wordShingles(col("a"), 2), 16)).as("ba"),
-      ).head().toSeq.map(_.asInstanceOf[Double]).toArray
-      e1 >= 0.0 && e1 <= 1.0 && math.abs(e1 - e2) < 1e-12
-    }
-
   // --- pure config properties.
   property("csv split+trim is idempotent and drops empties") =
     forAll(Gen.listOf(Gen.oneOf("a", " b ", "", "  ", "c-d"))) { parts =>

@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. Small core count + few shuffle
-  * partitions keep the suite fast; semantics are identical to the
-  * driver's local[32] sessions.
+/** Shared local SparkSession for specs: [[GraftSession.local]], the
+  * session the mains run on, at 4 cores and 4 shuffle partitions
+  * whatever the machine, so the suite's parallelism is fixed.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -18,16 +18,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("spark-wh").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    // Managed tables (q179's saveAsTable) land in a warehouse of this
+    // JVM's own; the builder reads `spark.*` system properties.
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("spark-wh").toString
+    GraftSession.local(cores = 4)
+  }
 
   /** `body`'s result and the number of Spark jobs it launched from this
     * thread (tagged by a job group, so jobs of other threads never count).

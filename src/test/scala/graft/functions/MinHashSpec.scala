@@ -7,35 +7,19 @@ import graft.ops.Tables
 
 class MinHashSpec extends SparkSpec {
   import MinHash._
-  import TextFunctions.wordShingles
-
-  test("signature: deterministic, k components, equal sets → equal sigs") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox jumps over the lazy dog"),
-      (3L, "completely different words here appear now okay fine"),
-    ).toDF("id", "text")
-      .select(col("id"), signature(wordShingles(col("text"), 3), 32).as("sig"))
-    val rows = df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(rows(1L).length == 32)
-    assert(rows(1L) == rows(2L))
-    assert(rows(1L) != rows(3L))
-  }
 
   test("estimateJaccard ≈ exact jaccard on document shingle sets") {
     import spark.implicits._
     val a = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
     val b = "w1 w2 w3 w4 w5 w6 w7 w8 xx yy" // 8-gram overlap of 3-shingles: 6 of 8 vs 8
-    val df = Seq((a, b)).toDF("a", "b").select(
-      estimateJaccard(
-        signature(wordShingles(col("a"), 3), 128),
-        signature(wordShingles(col("b"), 3), 128),
-      ).as("est")
-    )
-    val est = df.head().getDouble(0)
+    // 64 bands of 2 rows over 128 hashes: at jaccard 0.6 the pair is a
+    // candidate with probability 1 − (1 − 0.6²)⁶⁴ > 1 − 10⁻¹²
+    val cand = graft.llm.TextPipeline.lshCandidates(
+      Seq((1L, a), (2L, b)).toDF("doc_id", "text"), shingleK = 3, k = 128, bands = 64, rowsPerBand = 2)
+    val est = cand.select("est_jaccard").as[Double].collect().toSeq
     // exact jaccard: |A∩B|=6, |A∪B|=10 → 0.6; 128 hashes → ±~0.15
-    assert(est > 0.4 && est < 0.8, s"est=$est")
+    assert(est.size == 1, s"the pair must be the one candidate: $est")
+    assert(est.head > 0.4 && est.head < 0.8, s"est=${est.head}")
   }
 
   test("LSH candidates recover the exact near-dup pairs (q31 ⊇∩ q30 on testdata)") {
@@ -83,14 +67,13 @@ class MinHashSpec extends SparkSpec {
 
   test("simHashPortable: 60-bit range, identical sets equal, near sets closer than disjoint") {
     import spark.implicits._
-    val df = Seq(
+    val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "alpha beta gamma delta epsilon zeta eta iota"),
       (4L, "one two three four five six seven eight"),
-    ).toDF("id", "text")
-      .select(col("id"), simHashPortable(split(col("text"), " ")).as("sh"))
-    val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ).toDF("doc_id", "text")
+    val m = graft.llm.TextPipeline.simHashPortableDf(docs).as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(m.values.forall(v => v >= 0 && v < (1L << 60)), "portable simhash must stay in 60 bits")
     assert(m(1L) == m(2L))
@@ -111,12 +94,5 @@ class MinHashSpec extends SparkSpec {
       .head()
     assert(r.getLong(0) != r.getLong(1))
     assert(Seq(r.getLong(0), r.getLong(1)).forall(v => v >= 0 && v < MersenneP))
-  }
-
-  test("hamming64 column function agrees with bitCount") {
-    import spark.implicits._
-    val got = Seq((0x0fL, 0xf0L)).toDF("a", "b")
-      .select(hamming64(col("a"), col("b"))).head().getInt(0)
-    assert(got == 8)
   }
 }

@@ -6,7 +6,8 @@ import graft.SparkSpec
 import graft.functions.{MinHash, TextFunctions => TF}
 
 /** Parity tests: the relational (codegen) pipeline must agree with the
-  * Column-function (HOF) forms it replaces in the hot path.
+  * Column-function (HOF) forms it replaces in the hot path — among them
+  * the xxhash64 SimHash, bit for bit.
   */
 class TextPipelineSpec extends SparkSpec {
   import spark.implicits._

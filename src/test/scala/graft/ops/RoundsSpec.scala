@@ -10,7 +10,8 @@ import graft.llm.SimilarityPipeline
 
 /** Loop guard: every operator that runs on [[Rounds]] builds and
   * materializes its result on a small fixture within a fixed job budget,
-  * and leaves no superseded round's state pinned behind it.
+  * and leaves nothing pinned behind it that its result does not read:
+  * no superseded round's state and no loop-invariant input.
   */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
@@ -39,18 +40,17 @@ class RoundsSpec extends SparkSpec {
   }
 
   // (loop, jobs it launched before it ran on Rounds — measured on these
-  // fixtures — and the pins of loop-invariant inputs it keeps: the
-  // symmetrized edge frame of components, BFS and k-core)
-  private val loops: Seq[(String, Int, Int, () => DataFrame)] = Seq(
-    ("connectedComponents", 30, 1, () => Components.connectedComponents(graph, "a", "b")),
-    ("connectedComponentsStar", 36, 0, () => Components.connectedComponentsStar(graph, "a", "b")),
-    ("bfsHops", 35, 1, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
-    ("kCorePeel converged", 16, 1, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 5)),
-    ("kCorePeel bounded", 10, 1, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 2)),
-    ("kmeansCentroids", 22, 0, () =>
+  // fixtures)
+  private val loops: Seq[(String, Int, () => DataFrame)] = Seq(
+    ("connectedComponents", 30, () => Components.connectedComponents(graph, "a", "b")),
+    ("connectedComponentsStar", 36, () => Components.connectedComponentsStar(graph, "a", "b")),
+    ("bfsHops", 35, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
+    ("kCorePeel converged", 16, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 5)),
+    ("kCorePeel bounded", 10, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 2)),
+    ("kmeansCentroids", 22, () =>
       SimilarityPipeline.kmeansCentroids(Tables.embeddings(spark, sfDir), cells = 4, iters = 3)),
-    ("kmeansCentroidsFp", 28, 0, () => SimilarityPipeline.kmeansCentroidsFp(fp, cells = 4, iters = 3)),
-    ("ivfAssignCellsFp", 57, 0, () => SimilarityPipeline.ivfAssignCellsFp(fp, cells = 4, iters = 3)),
+    ("kmeansCentroidsFp", 28, () => SimilarityPipeline.kmeansCentroidsFp(fp, cells = 4, iters = 3)),
+    ("ivfAssignCellsFp", 57, () => SimilarityPipeline.ivfAssignCellsFp(fp, cells = 4, iters = 3)),
   )
 
   test("iterate reports the rounds it ran and whether stop or the bound ended it") {
@@ -69,12 +69,10 @@ class RoundsSpec extends SparkSpec {
     assert(fixed.as[Long].collect().toSeq == Seq(4L))
   }
 
-  for ((name, parentJobs, inputPins, loop) <- loops)
+  for ((name, parentJobs, loop) <- loops)
     test(s"$name: at most $parentJobs jobs; no superseded round stays pinned") {
       val (jobs, leftover) = run(loop())
       assert(jobs <= parentJobs, s"$name launched $jobs jobs")
-      assert(leftover.size <= inputPins,
-        s"$name left ${leftover.size} persisted RDDs its result does not read; " +
-          s"only its $inputPins loop-invariant input pin(s) may stay")
+      assert(leftover.isEmpty, s"$name left ${leftover.size} persisted RDDs its result does not read")
     }
 }

@@ -124,6 +124,26 @@ class StateStoreSpec extends SparkSpec {
     assert(plan.map(_.toString) == Seq("2024-01-03", "2024-01-06", "2024-01-07"))
   }
 
+  test("observe: attemptStats (A2) and dateRanges (A3) on a hand-built ledger") {
+    val states = toDf(Seq(
+      stateRow("2024-01-01", "success", Some("r1"), "2024-01-05 00:00:00"),
+      stateRow("2024-01-04", "failed", Some("r2"), "2024-01-06 00:00:00", attempts = 3),
+      stateRow("2024-01-02", "success", Some("r1"), "2024-01-05 00:00:00", attempts = 2,
+        query = "ad_group_daily"),
+      stateRow("2024-01-03", "pending", None, "2024-01-05 00:00:00", attempts = 6)
+        .copy(_1 = "meta_ads"),
+    ))
+    val stats = StateStore.observe.attemptStats(states).as[(Long, Long, Double)].collect().toSeq
+    assert(stats == Seq((1L, 6L, 3.0)))
+
+    val ranges = StateStore.observe.dateRanges(states).as[(String, String, Date, Date)].collect().toSeq
+    assert(ranges == Seq(
+      ("google_ads", "ad_group_daily", Date.valueOf("2024-01-02"), Date.valueOf("2024-01-02")),
+      ("google_ads", "campaign_daily", Date.valueOf("2024-01-01"), Date.valueOf("2024-01-04")),
+      ("meta_ads", "campaign_daily", Date.valueOf("2024-01-03"), Date.valueOf("2024-01-03")),
+    ))
+  }
+
   test("same-instant same-run conflict is deterministic: terminal status wins (D1 total order)") {
     // Round-1 judge counterexample: two deltas, same key, same run r9,
     // same updated_at, status failed vs success — the winner must not
