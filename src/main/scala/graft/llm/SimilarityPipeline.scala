@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RddShim
 
 import graft.functions.VectorFunctions
 import graft.ops.Pin.PinOps
@@ -1268,6 +1269,7 @@ object SimilarityPipeline {
         (lit(1.0) / sqrt(col("dn"))).as("v1"),
         (when(col("i") % 2 === 0, lit(1.0)).otherwise(lit(-1.0)) / sqrt(col("dn"))).as("v2"))
       .pinLineage()
+    var pinned = vs // the live pin: the next one's plan reads it until it is materialized
     for (it <- 1 to iters) {
       val w = covLocal
         .join(broadcast(vs.select(col("i").as("j"), col("v1").as("y1"), col("v2").as("y2"))),
@@ -1304,7 +1306,11 @@ object SimilarityPipeline {
       // is a per-round fixed floor (codegen + scheduling of ~6 tiny
       // stages), amortized over corpus size: the 16× probe moved the
       // whole query 1.1×.
-      if (it % 3 == 0 || it == iters) vs = vs.pinLineage()
+      if (it % 3 == 0 || it == iters) {
+        vs = vs.pinLineage()
+        RddShim.unpersistPinned(pinned)
+        pinned = vs
+      }
     }
     val sgn = vs.agg(
       when(sum(col("v1")) >= 0, lit(1.0)).otherwise(lit(-1.0)).as("s1"),

@@ -38,8 +38,8 @@ object TextPipeline {
     * shingle existed — a second exchange of the entire token stream
     * that this form simply doesn't have. Same output set (spec-pinned:
     * band keys and q30/q41 oracles unchanged).
-    */
-  /** @param widen parallelism floor for the scan-fused explode
+    *
+    * @param widen parallelism floor for the scan-fused explode
     *   ([[graft.ops.Widen]] — conditional, so a wide production scan
     *   is never re-shuffled). [[incrementalCascade]] opts out: its two
     *   half-sized shingle passes are band-join-bound, and the paired
@@ -169,10 +169,6 @@ object TextPipeline {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
 
-  /** Near-dup candidate pairs from LSH banding with signature-estimated
-    * Jaccard attached. Scalable end-to-end: shuffles are O(docs·bands),
-    * and only candidate pairs (not all pairs) ever materialize.
-    */
   /** Band-collision candidate pairs from a wide signature frame. */
   private def bandCandidates(
       sigWide: DataFrame,
@@ -190,6 +186,10 @@ object TextPipeline {
       .distinct()
   }
 
+  /** Near-dup candidate pairs from LSH banding with signature-estimated
+    * Jaccard attached. Scalable end-to-end: shuffles are O(docs·bands),
+    * and only candidate pairs (not all pairs) ever materialize.
+    */
   def lshCandidates(
       docs: DataFrame,
       shingleK: Int,
@@ -220,6 +220,25 @@ object TextPipeline {
     }
   }
 
+  /** Most-selective banding geometry (largest rows-per-band, so random
+    * collisions ≈ j^r stay low) that still achieves `minRecall` for
+    * pairs at jaccard `jTarget`: returns (bands, rowsPerBand) with
+    * bands·rows ≤ k. bandingFor(0.8) = (16, 4); bandingFor(0.5) =
+    * (32, 2); bandingFor(0.9, minRecall = 0.99) = (9, 7).
+    */
+  def bandingFor(jTarget: Double, k: Int = 64, minRecall: Double = 0.999): (Int, Int) = {
+    require(jTarget > 0 && jTarget < 1 && minRecall > 0 && minRecall < 1)
+    (k to 1 by -1).view
+      .map(r => (k / r, r))
+      .collectFirst {
+        case (b, r) if b >= 1 && 1.0 - math.pow(1.0 - math.pow(jTarget, r), b) >= minRecall =>
+          (b, r)
+      }
+      .getOrElse(throw new IllegalArgumentException(
+        s"no (bands, rows) within $k hashes reaches recall $minRecall at jaccard $jTarget; " +
+          "raise k or lower minRecall"))
+  }
+
   /** The composed near-dup pipeline — THE shape that survives 100 TB:
     * MinHash-LSH banding narrows the corpus to candidate pairs
     * (O(docs·bands) shuffle, no all-pairs anywhere), then exact
@@ -245,25 +264,6 @@ object TextPipeline {
     * bandingFor(0.5) → 32×2 — and pay the verify bill; q30's full
     * exact operator remains the uncompromising reference.
     */
-  /** Most-selective banding geometry (largest rows-per-band, so random
-    * collisions ≈ j^r stay low) that still achieves `minRecall` for
-    * pairs at jaccard `jTarget`: returns (bands, rowsPerBand) with
-    * bands·rows ≤ k. bandingFor(0.8) = (16, 4); bandingFor(0.5) =
-    * (32, 2); bandingFor(0.9, minRecall = 0.99) = (9, 7).
-    */
-  def bandingFor(jTarget: Double, k: Int = 64, minRecall: Double = 0.999): (Int, Int) = {
-    require(jTarget > 0 && jTarget < 1 && minRecall > 0 && minRecall < 1)
-    (k to 1 by -1).view
-      .map(r => (k / r, r))
-      .collectFirst {
-        case (b, r) if b >= 1 && 1.0 - math.pow(1.0 - math.pow(jTarget, r), b) >= minRecall =>
-          (b, r)
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"no (bands, rows) within $k hashes reaches recall $minRecall at jaccard $jTarget; " +
-          "raise k or lower minRecall"))
-  }
-
   def dedupCascade(
       docs: DataFrame,
       shingleK: Int = 3,

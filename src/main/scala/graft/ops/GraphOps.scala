@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RddShim
 import org.apache.spark.sql.types.DecimalType
@@ -44,6 +44,12 @@ object GraphOps {
       e.union(e.select(col("b").as("a"), col("a").as("b"))),
       parts = Seq(col("a")), sortBy = Seq(col("a")))
 
+  /** (v, d): the degree of every endpoint of a canonical edge frame. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v"))
+      .union(e.select(col("b").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+
   /** Per-vertex triangle counts by degree-ordered orientation (the
     * node-iterator++ / compact-forward algorithm): orient every edge
     * from its lower-(degree, id) endpoint, enumerate wedges only
@@ -58,44 +64,52 @@ object GraphOps {
     * equijoins/groupBys on vertex/edge keys; the closing join probes
     * with candidates, never materializing non-edges.
     *
+    * Scale: the canonical edges and their degrees are each pinned once,
+    * under the caller's adaptive conf (pinned non-adaptively instead,
+    * with the edges' (a, b) layout captured, q121 ran ~30% slower on
+    * the 16× replica), and [[triangles]] runs over the pins.
+    *
     * @return (v, n_tri) for every edge endpoint (0 for triangle-free
     *         vertices).
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // edges re-enter the plan three times (degrees, orientation,
-    // closing probe): materialize once, the Components edge rule.
-    // deg and the oriented edge frame are ALSO multiply referenced
-    // (deg ×3, or ×2 via the wedge self-join), and self-join alias
-    // dedup breaks exchange-reuse canonicalization — without their own
-    // checkpoints each reference recomputes a full-edge aggregation.
     val e = canon(edges, srcCol, dstCol).pinLineage(eager = true)
-    val deg = e.select(col("a").as("v"))
-      .union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      .pinLineage(eager = true) // |V| rows
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val or = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
+    val deg = degrees(e).pinLineage(eager = true)
+    deg.select("v")
+      .join(triangles(e, deg), Seq("v"), "left_outer")
+      .select(col("v"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+  }
+
+  /** The triangle core of [[triangleCounts]] over an ALREADY canonical,
+    * pinned edge frame `e` (a < b, distinct) and its pinned degrees
+    * `deg` (v, d): (v, n_tri) for every vertex on at least one
+    * triangle. Taking both as given is the point — a caller that owns
+    * them (the hub-pruned edges of [[hubCappedClusteringCoeff]]) pays
+    * neither a second canonicalizing distinct, which the optimizer
+    * cannot remove over a checkpoint, nor a second degree aggregate.
+    *
+    * The oriented edge frame is read twice by the wedge self-join, so it
+    * is pinned too, under the caller's adaptive conf: its two degree
+    * joins are broadcast or shuffled by runtime size.
+    */
+  private def triangles(e: DataFrame, deg: DataFrame): DataFrame = {
+    val lower = col("da.d") < col("db.d") ||
+      (col("da.d") === col("db.d") && col("a") < col("b"))
+    val or = e.join(deg.as("da"), col("a") === col("da.v"))
+      .join(deg.as("db"), col("b") === col("db.v"))
       .select(
         when(lower, col("a")).otherwise(col("b")).as("u"),
         when(lower, col("b")).otherwise(col("a")).as("w"))
-      .pinLineage(eager = true) // |E| rows, read twice by the wedge self-join
+      .pinLineage(eager = true)
     val wedges = or.as("e1")
       .join(or.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.w") < col("e2.w"))
       .select(col("e1.u").as("c0"), col("e1.w").as("c1"), col("e2.w").as("c2"))
     // wedge legs are id-ordered (c1 < c2), so the closing edge is
     // already canonical — one equijoin against e
-    val tris = wedges.join(e, col("c1") === col("a") && col("c2") === col("b"))
-      .select("c0", "c1", "c2")
-    val perNode = tris
+    wedges.join(e, col("c1") === col("a") && col("c2") === col("b"))
       .select(explode(array(col("c0"), col("c1"), col("c2"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("n_tri"))
-    deg.select("v")
-      .join(perNode, Seq("v"), "left_outer")
-      .select(col("v"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
   /** HUB-CAPPED local clustering coefficient (r9 — q180's bounded-work
@@ -116,48 +130,83 @@ object GraphOps {
     * m^1.5-with-a-dense-tail — the 256× replica's 95× blowup was
     * exactly the wedge mass at the densest vertices.
     *
-    * Scale: degrees are one edge aggregate; the hub rank rides
-    * [[Ranks.withGlobalRank]] (range-partitioned two-level rank, no
-    * single-task sort); the vertex count re-enters as a 1-row
-    * broadcast; pruning is two anti-joins against the (|V|/hubFrac)-row
-    * hub list; triangles ride [[triangleCounts]]' orientation on the
-    * pruned edges.
+    * Scale: every frame read more than once is computed once and
+    * pinned. The canonical edges, their degrees and the pruned degrees
+    * are aggregates, pinned with [[Pin.pinAligned]] (one non-adaptive
+    * job each, keeping their key's partitioning); the pruned edges come
+    * from joins and are pinned under the caller's adaptive conf, which
+    * picks broadcast or shuffle by runtime size. The hub set is a
+    * predicate on the pinned degrees ([[hubPredicate]]), decided from
+    * one collected degree histogram — at most 2√|E| rows, since k
+    * distinct degrees sum to at least k(k+1)/2 and all degrees sum to
+    * 2|E| — that looks at ids only among the vertices tied at the
+    * cutoff degree, and only when the cutoff splits that tie. Pruning
+    * is two anti-joins against the (|V|/hubFrac)-row hub filter;
+    * triangles ride [[triangles]]' orientation on the pinned pruned
+    * edges and degrees.
     */
   def hubCappedClusteringCoeff(
       edges: DataFrame, srcCol: String, dstCol: String, hubFrac: Int = 100): DataFrame = {
     require(hubFrac >= 2, "hubFrac < 2 would exclude half the graph or more")
-    // read by degrees AND both pruning anti-joins
-    val e = canon(edges, srcCol, dstCol).pinLineage(eager = true)
-    val deg = e.select(col("a").as("v"))
-      .union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("degree"))
-      .pinLineage(eager = true)
-    val tot = deg.agg(count(lit(1)).as("__n"))
-    val hubs = Ranks
-      .withGlobalRank(deg, Seq(col("degree").desc, col("v").asc), "__rk")
-      .join(broadcast(tot))
-      .where(col("__rk") <= expr(s"(__n + ${hubFrac - 1}) div $hubFrac"))
-      .select(col("v").as("__hub"))
+    val e = Pin.pinAligned(canon(edges, srcCol, dstCol))
+    val deg = Pin.pinAligned(degrees(e))
+    val isHub = hubPredicate(deg, hubFrac)
+    val hubs = deg.where(isHub).select(col("v").as("__hub"))
     val ep = e
       .join(hubs, col("a") === col("__hub"), "left_anti")
       .join(hubs, col("b") === col("__hub"), "left_anti")
-    val degP = ep.select(col("a").as("v"))
-      .union(ep.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("pruned_degree"))
-    deg
-      .join(hubs.select(col("__hub").as("v"), lit(true).as("__is_hub")), Seq("v"), "left_outer")
-      .join(degP, Seq("v"), "left_outer")
-      .join(triangleCounts(ep, "a", "b"), Seq("v"), "left_outer")
+      .pinLineage(eager = true)
+    RddShim.unpersistPinned(e) // read only by the pruned pin
+    val degP = Pin.pinAligned(degrees(ep))
+    deg.select(col("v"), col("d").as("degree"), isHub.as("is_hub"))
+      .join(degP.select(col("v"), col("d").as("pruned_degree")), Seq("v"), "left_outer")
+      .join(triangles(ep, degP), Seq("v"), "left_outer")
       .select(
         col("v"),
         col("degree"),
-        coalesce(col("__is_hub"), lit(false)).as("is_hub"),
+        col("is_hub"),
         coalesce(col("pruned_degree"), lit(0L)).as("pruned_degree"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"),
-        when(coalesce(col("__is_hub"), lit(false)), lit(-1L))
+        when(col("is_hub"), lit(-1L))
           .when(coalesce(col("pruned_degree"), lit(0L)) >= 2,
             expr("(20000 * coalesce(n_tri, 0)) div (pruned_degree * (pruned_degree - 1))"))
           .otherwise(lit(0L)).as("cc_bp"))
+  }
+
+  /** Membership in the top ⌈|V|/hubFrac⌉ of `deg` (v, d) under
+    * (d desc, v asc), as a predicate on (v, d). The degree histogram
+    * (≤ 2√|E| rows) is collected once and walked from the top degree
+    * until it holds the hub count: every vertex above that cutoff
+    * degree is a hub. If the cutoff's whole tie fits, the predicate is
+    * `d >= cutoff`; otherwise the hubs are the tied ids up to the one
+    * at the remaining count `need`. That id is a top-`need` of the tied
+    * ids when `need` is no more than the histogram's row count (so the
+    * driver holds no more ids than it held histogram rows: one job),
+    * else a global rank of the tied ids, which bounds no task or driver
+    * by `need` (five jobs, about a second cold on the graftbench
+    * tables).
+    */
+  private def hubPredicate(deg: DataFrame, hubFrac: Int): Column = {
+    val hist = Pin.onClone(deg)(_.groupBy("d").agg(count(lit(1)).as("n")).collect())
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._1)
+    val hubCount = (hist.map(_._2).sum + hubFrac - 1) / hubFrac
+    // above(i): vertices of degree above hist(i)'s
+    val above = hist.map(_._2).scanLeft(0L)(_ + _)
+    val i = above.indexWhere(_ >= hubCount) - 1
+    if (i < 0) lit(false) // no vertex
+    else {
+      val (cut, tied) = hist(i)
+      val need = hubCount - above(i)
+      if (need == tied) col("d") >= cut
+      else {
+        val lastHub = Pin.onClone(deg.where(col("d") === cut).select("v")) { tiedIds =>
+          if (need <= hist.length) tiedIds.orderBy("v").limit(need.toInt).collect().last.get(0)
+          else Ranks.withGlobalRank(tiedIds, Seq(col("v").asc), "__rk")
+            .where(col("__rk") === need).select("v").head().get(0)
+        }
+        col("d") > cut || (col("d") === cut && col("v") <= lit(lastHub))
+      }
+    }
   }
 
   /** PageRank in exact fixed-point arithmetic: `iters` damped
@@ -227,7 +276,18 @@ object GraphOps {
     * is also the stop test: a round that reaches no new vertex leaves
     * it unchanged. Per round the shuffle carries one frontier
     * expansion (≤ |E| rows) and the anti-join against distances —
-    * never the whole graph re-derived. `maxHops` bounds adversarial
+    * never the whole graph re-derived.
+    *
+    * Scale: the symmetrized edges are pinned hash-partitioned and
+    * sorted on their source ([[pinnedSym]]), and the distance state is
+    * pinned keeping the vertex-key partitioning its joins give it. The
+    * seed semi-join (sort-merge) and each round's frontier semi-join
+    * and distance anti-join (shuffled-hash) are planned co-partitioned
+    * against those layouts, so neither pinned side is re-exchanged and
+    * no broadcast runs a job of its own: each round is the single probe
+    * job of [[Rounds]]
+    * (RoundsSpec counts one job per extra round on a path graph).
+    * `maxHops` bounds adversarial
     * diameters (a path graph degenerates to one round per vertex; for
     * such graphs run [[Components.connectedComponentsStar]]-style
     * doubling instead).
@@ -244,17 +304,24 @@ object GraphOps {
       maxHops: Int = 20,
   ): DataFrame = {
     val sym = pinnedSym(canon(edges, srcCol, dstCol))
+    // every join below is keyed on the vertex, the key sym and the
+    // distance state are partitioned on, and is hinted to plan
+    // co-partitioned (a broadcast would cost a job of its own): the
+    // seed join sort-merge, since sym is sorted on its key already; the
+    // round's joins shuffled-hash, building on the frontier and the
+    // distances
     val seeded = seeds.select(col(seedCol).as("v")).distinct()
-      .join(sym.select(col("a").as("v")), Seq("v"), "left_semi")
+      .join(sym.select(col("a").as("v")).hint("merge"), Seq("v"), "left_semi")
       .withColumn("d", lit(0L))
     // −1: no seed is a vertex of the graph
     def deepest(dist: DataFrame): Long =
       dist.agg(coalesce(max(col("d")), lit(-1L))).head().getLong(0)
     val out = Rounds.iterate(seeded, maxHops, aligned = true)(deepest) { (dist, k) =>
       val next = sym
-        .join(dist.where(col("d") === k).select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(dist.where(col("d") === k).select(col("v").as("a")).hint("shuffle_hash"),
+          Seq("a"), "left_semi")
         .select(col("b").as("v")).distinct()
-        .join(dist, Seq("v"), "left_anti")
+        .join(dist.hint("shuffle_hash"), Seq("v"), "left_anti")
       dist.union(next.withColumn("d", lit(k + 1)))
     }((prev, k) => k < 0 || prev.contains(k)).state
     RddShim.unpersistPinned(sym)

@@ -79,6 +79,72 @@ class GraphOpsSpec extends SparkSpec {
     assert(hubs.forall(h => h._4 == 0L && h._5 == 0L && h._6 == -1L))
   }
 
+  private type HubRow = (Long, Long, Boolean, Long, Long, Long)
+
+  private def hubCapped(edges: Seq[(Long, Long)], hubFrac: Int): Map[Long, HubRow] =
+    GraphOps.hubCappedClusteringCoeff(edges.toDF("a", "b"), "a", "b", hubFrac)
+      .as[HubRow].collect().map(r => r._1 -> r).toMap
+
+  /** Naive reference: rank vertices by (degree desc, id asc), exclude the
+    * first ⌈|V|/hubFrac⌉, count triangles of the rest by brute force.
+    */
+  private def hubCappedBrute(edges: Seq[(Long, Long)], hubFrac: Int): Map[Long, HubRow] = {
+    val es = edges.filter(e => e._1 != e._2)
+      .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
+    def degrees(es: Seq[(Long, Long)]): Map[Long, Long] =
+      es.flatMap(e => Seq(e._1, e._2)).groupBy(identity).map { case (v, o) => v -> o.size.toLong }
+    val deg = degrees(es)
+    val ranked = deg.toSeq.sortBy { case (v, d) => (-d, v) }.map(_._1)
+    val hubs = ranked.take((ranked.size + hubFrac - 1) / hubFrac).toSet
+    val pruned = es.filterNot(e => hubs(e._1) || hubs(e._2))
+    val (degP, tri) = (degrees(pruned), if (pruned.isEmpty) Map.empty[Long, Long] else triBrute(pruned))
+    deg.map { case (v, d) =>
+      val (pd, t) = (degP.getOrElse(v, 0L), tri.getOrElse(v, 0L))
+      val cc = if (hubs(v)) -1L else if (pd >= 2) 20000 * t / (pd * (pd - 1)) else 0L
+      v -> ((v, d, hubs(v), pd, t, cc))
+    }
+  }
+
+  /** Seeded random graphs whose hub cutoff degree is shared by vertices
+    * on both sides of the cutoff.
+    */
+  private lazy val tieSplitGraphs: Seq[(Int, Seq[(Long, Long)], Int)] =
+    (1 to 200).iterator.map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val n = 20 + rnd.nextInt(20)
+      (seed, Seq.fill(3 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)), 3 + rnd.nextInt(6))
+    }.filter { case (_, edges, hubFrac) =>
+      val hubs = hubCappedBrute(edges, hubFrac).values.toSeq
+      val cut = hubs.filter(_._3).map(_._2).min
+      hubs.exists(r => !r._3 && r._2 == cut)
+    }.take(4).toSeq
+
+  test("hubCappedClusteringCoeff equals the naive reference where the cutoff degree splits a tie") {
+    assert(tieSplitGraphs.size == 4)
+    for ((seed, edges, hubFrac) <- tieSplitGraphs)
+      assert(hubCapped(edges, hubFrac) == hubCappedBrute(edges, hubFrac), s"seed=$seed hubFrac=$hubFrac")
+    // a star over a triangle: the cutoff holds its whole tie (hubFrac
+    // 2), a lone top degree (7), or splits the triangle's tie (3)
+    val star = (1L to 6L).map(v => (100L, v)) ++ Seq((1L, 2L), (2L, 3L), (1L, 3L))
+    for (hubFrac <- Seq(2, 3, 7))
+      assert(hubCapped(star, hubFrac) == hubCappedBrute(star, hubFrac), s"star hubFrac=$hubFrac")
+    // every degree tied: more hubs than histogram rows, so the tied ids
+    // are ranked globally
+    assert(hubCapped(cycle, 4) == hubCappedBrute(cycle, 4))
+  }
+
+  private lazy val cycle = (0L until 30L).map(v => (v, (v + 1) % 30))
+
+  test("hubCappedClusteringCoeff: job budget to build and collect, cutoff tie included") {
+    val (seed, edges, hubFrac) = tieSplitGraphs.head
+    val jobs = Seq((s"tie-split graph seed=$seed", edges, hubFrac, 18), ("ranked cycle", cycle, 4, 21))
+      .map { case (name, g, frac, budget) =>
+        (name, SparkSpec.jobsLaunchedBy(
+          GraphOps.hubCappedClusteringCoeff(g.toDF("a", "b"), "a", "b", frac).collect())._2, budget)
+      }
+    assert(jobs.forall { case (_, n, budget) => n <= budget }, s"(case, jobs launched, budget): $jobs")
+  }
+
   test("hub skew: star core plus one closing edge counts exactly one triangle") {
     // vertex 0 adjacent to 1..40 (hub), single closing edge (1,2):
     // orientation keeps the hub's out-degree at ~1, and the count is

@@ -39,12 +39,13 @@ class RoundsSpec extends SparkSpec {
     (jobs, sc.getPersistentRDDs.keySet.toSet -- before -- readRdds(out))
   }
 
-  // (loop, jobs it launched before it ran on Rounds — measured on these
-  // fixtures)
+  // (loop, its job budget — measured on these fixtures: what it launched
+  // before it ran on Rounds, and for bfsHops since its rounds plan
+  // co-partitioned)
   private val loops: Seq[(String, Int, () => DataFrame)] = Seq(
     ("connectedComponents", 30, () => Components.connectedComponents(graph, "a", "b")),
     ("connectedComponentsStar", 36, () => Components.connectedComponentsStar(graph, "a", "b")),
-    ("bfsHops", 35, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
+    ("bfsHops", 9, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
     ("kCorePeel converged", 16, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 5)),
     ("kCorePeel bounded", 10, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 2)),
     ("kmeansCentroids", 22, () =>
@@ -67,6 +68,20 @@ class RoundsSpec extends SparkSpec {
     assert(climb(zero.select(lit(7L).as("x")), 5).rounds == 0, "stop is tested on the initial state")
     val fixed = Rounds.fixed(zero, 4)(_.select((col("x") + 1).as("x")))
     assert(fixed.as[Long].collect().toSeq == Seq(4L))
+  }
+
+  test("bfsHops: one job per extra round on a path graph") {
+    def jobs(n: Long): Int = run(GraphOps.bfsHops(
+      (1L until n).map(i => (i, i + 1)).toDF("a", "b"), "a", "b", Seq(1L).toDF("v"), "v"))._1
+    // seeded at one end, a path of n vertices takes n rounds (the last
+    // one reaches nothing)
+    assert(jobs(9) - jobs(6) == 3)
+  }
+
+  test("topTwoAxes: no superseded pin stays pinned") {
+    val cov = SimilarityPipeline.covariance(Tables.embeddings(spark, sfDir)).localCheckpoint(true)
+    val (_, leftover) = run(SimilarityPipeline.topTwoAxes(cov, iters = 7))
+    assert(leftover.isEmpty, s"topTwoAxes left ${leftover.size} persisted RDDs its result does not read")
   }
 
   for ((name, parentJobs, loop) <- loops)
