@@ -388,30 +388,191 @@ object LlmQueries {
     },
   )
 
-  /** Shared DuckDB CTE prefix for the portable sign-LSH quantizer
-    * (q37/q38): data-scaled bit count, md5-derived ±1 planes, q29's
-    * fixed-point element lists, per-(vector, plane) integer sign sums,
-    * assembled cell bitmask. Mirrors
-    * [[SimilarityPipeline.withCellsPortable]] step for step — a plane
-    * or quantization change breaks both queries' oracles together.
+  // ---------------------------------------------------------------------
+  // DuckDB mirrors of SimilarityPipeline's exact rules, one builder
+  // each, so every vector oracle (q37–q265) replays the same text for
+  // the same rule.
+
+  /** The corpus quantized at [[Q29Scale]] as CTE `name` (vec_id, q) —
+    * the mirror of `VectorFunctions.quantizeFp`.
     */
-  private[llm] val portableCellsCteSql: String =
-    // nb mirrors SimilarityPipeline.cellBits's INTEGER-ONLY derivation
-    // (largest k in [1,16] with n² ≥ 64²·2^(2k−1)) — no float log on
-    // either side, so engines cannot disagree at half-integer
-    // boundaries (r9 ADVICE fix)
+  private def quantizedCteSql(name: String, materialized: Boolean): String =
+    s"$name AS ${if (materialized) "MATERIALIZED " else ""}(SELECT vec_id, list_transform(embedding, " +
+      s"x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q FROM embeddings)"
+
+  /** The portable sign-LSH quantizer's data-scaled bit count and
+    * md5-derived ±1 planes. `bits.nb` mirrors
+    * SimilarityPipeline.cellBits's INTEGER-ONLY derivation (largest k
+    * in [1,16] with n² ≥ 64²·2^(2k−1)) — no float log on either side,
+    * so engines cannot disagree at half-integer boundaries (r9 ADVICE
+    * fix).
+    */
+  private val bitsPlanesCteSql: String =
     "bits AS (SELECT COALESCE((SELECT max(k) FROM (SELECT unnest(generate_series(1, 16)) AS k), " +
       "(SELECT count(*) AS n FROM embeddings) " +
       "WHERE CAST(n AS HUGEINT) * n >= 4096 * (CAST(1 AS HUGEINT) << (2*k - 1))), 1) AS nb), " +
       "planes AS (SELECT p, i, CASE WHEN substr(md5('plane:'||p||':'||i),1,1) <= '7' THEN 1 ELSE -1 END AS s " +
       "FROM (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS p), " +
-      "(SELECT unnest(generate_series(0, 63)) AS i)), " +
-      s"fp AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q " +
-      "FROM embeddings), " +
-      "el AS (SELECT vec_id, i-1 AS i, q[i] AS qi FROM fp, LATERAL (SELECT unnest(generate_series(1, len(q))) AS i) t), " +
+      "(SELECT unnest(generate_series(0, 63)) AS i)), "
+
+  /** Portable cells of the quantized frame `src`: per-(vector, plane)
+    * integer sign sums over element rows `el`, assembled into the cell
+    * bitmask CTE `cells` (vec_id, cell).
+    */
+  private def signCellsCteSql(src: String, el: String, cells: String): String =
+    s"$el AS (SELECT vec_id, i-1 AS i, q[i] AS qi FROM $src, LATERAL (SELECT unnest(generate_series(1, len(q))) AS i) t), " +
       "cellbit AS (SELECT e.vec_id, pl.p, CASE WHEN sum(pl.s * e.qi) >= 0 THEN (1::BIGINT << pl.p) ELSE 0 END AS bit " +
-      "FROM el e JOIN planes pl ON pl.i = e.i GROUP BY 1, 2), " +
-      "cells AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS cell FROM cellbit GROUP BY 1)"
+      s"FROM $el e JOIN planes pl ON pl.i = e.i GROUP BY 1, 2), " +
+      s"$cells AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS cell FROM cellbit GROUP BY 1)"
+
+  /** Shared DuckDB CTE prefix for the portable sign-LSH quantizer
+    * (q37/q38/q217/q258): bit count, planes, q29's fixed-point element
+    * lists, cells. Mirrors [[SimilarityPipeline.withCellsPortable]]
+    * step for step — a plane or quantization change breaks every
+    * oracle together.
+    */
+  private[llm] val portableCellsCteSql: String =
+    bitsPlanesCteSql + quantizedCteSql("fp", materialized = false) + ", " +
+      signCellsCteSql("fp", "el", "cells")
+
+  /** The hamming-≤1 band explode of `cells` (SimilarityPipeline's
+    * `bandKeys`) as CTE `banded` (vec_id, m, key).
+    */
+  private def bandedCteSql(cells: String): String =
+    "banded AS (SELECT c.vec_id, b AS m, c.cell & ~(1::BIGINT << b) AS key " +
+      s"FROM $cells c, LATERAL (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS b) t), "
+
+  /** [[bandedCteSql]], then its undirected collision pairs as CTE
+    * `cand` (va, vb).
+    */
+  private def bandCandCteSql(cells: String, cand: String): String =
+    bandedCteSql(cells) +
+      s"$cand AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb " +
+      "FROM banded a JOIN banded b ON a.m = b.m AND a.key = b.key AND a.vec_id < b.vec_id), "
+
+  /** A scored-pair CTE: `name` = (`cols`, dot_fp, na, nb2), the exact
+    * fixed-point dot and squared norms of the pair (`ids`._1, `ids`._2)
+    * of `from`, looked up in the quantized frame `fp` under aliases
+    * `as`._1 / `as`._2.
+    */
+  private def scoredCteSql(
+      name: String, cols: String, from: String, fp: String,
+      ids: (String, String), as: (String, String)): String = {
+    val (a, b) = as
+    s"$name AS (SELECT $cols, " +
+      s"CAST(list_sum(list_transform(generate_series(1, len($a.q)), i -> $a.q[i] * $b.q[i])) AS BIGINT) AS dot_fp, " +
+      s"CAST(list_sum(list_transform($a.q, x -> x * x)) AS BIGINT) AS na, " +
+      s"CAST(list_sum(list_transform($b.q, x -> x * x)) AS BIGINT) AS nb2 " +
+      s"FROM $from JOIN $fp $a ON $a.vec_id = ${ids._1} JOIN $fp $b ON $b.vec_id = ${ids._2})"
+  }
+
+  /** `td²·d² op tn²·nₐ·n_b` over a scored pair — the mirror of
+    * SimilarityPipeline's `cosCmp`.
+    */
+  private def cosCmpSql(tNum: Int, tDen: Int, op: String): String = {
+    val tn2 = tNum.toLong * tNum
+    s"CAST(dot_fp AS HUGEINT) * dot_fp * ${tDen.toLong * tDen} $op " +
+      (if (tn2 == 1) "" else s"$tn2 * ") + "CAST(na AS HUGEINT) * nb2"
+  }
+
+  /** cos ≥ tNum/tDen over a scored pair. */
+  private def cosAtLeastSql(tNum: Int, tDen: Int): String =
+    "dot_fp >= 0 AND " + cosCmpSql(tNum, tDen, ">=")
+
+  /** loNum/loDen ≤ cos < hiNum/hiDen over a scored pair. */
+  private def cosInBandSql(loNum: Int, loDen: Int, hiNum: Int, hiDen: Int): String =
+    "dot_fp >= 0 AND " + cosCmpSql(loNum, loDen, ">=") + " AND " + cosCmpSql(hiNum, hiDen, "<")
+
+  /** Exact squared cosine in basis points, d²·10⁴ div (nₐ·n_b). */
+  private val cos2BpSql: String =
+    "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp"
+
+  /** The hard-negative ranking over a `keyed` CTE (anchor_id,
+    * negative_id, dot_fp, rank_fp, cos2_bp): top `k` per anchor by
+    * (rank_fp DESC, negative_id).
+    */
+  private def hardNegativeTopKSql(k: Int): String =
+    "ranked AS (SELECT *, row_number() OVER (PARTITION BY anchor_id ORDER BY rank_fp DESC, negative_id) AS rank " +
+      "FROM keyed) " +
+      "SELECT anchor_id, CAST(rank AS BIGINT) AS rank, negative_id, dot_fp, cos2_bp " +
+      s"FROM ranked WHERE rank <= $k ORDER BY anchor_id, rank"
+
+  /** q217/q263's mining tail over a `band` CTE (va, vb, dot_fp, na, nb2):
+    * mirrored to both directions, keyed by q29's integer key against
+    * the negative's norm, top `k` per anchor — SimilarityPipeline's
+    * `mirroredTopK`.
+    */
+  private def mirroredTopKSql(k: Int): String =
+    "directed AS (SELECT va AS anchor_id, vb AS negative_id, dot_fp, nb2 AS n_neg, na, nb2 FROM band " +
+      "UNION ALL SELECT vb, va, dot_fp, na, na, nb2 FROM band), " +
+      "keyed AS (SELECT anchor_id, negative_id, dot_fp, " +
+      "(CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_neg AS rank_fp, " +
+      s"$cos2BpSql " +
+      "FROM directed), " +
+      hardNegativeTopKSql(k)
+
+  /** The IVF search tail after a `qd` CTE (query_id, qq, cell, dot):
+    * each query's `nprobe` best cells as `pr` (columns in `prCols`
+    * order), their members from `af` scored against the query and
+    * ranked by q29's signed key, top `k` per query — SimilarityPipeline's
+    * `probeAndRank`.
+    */
+  private def probeAndRankSql(prCols: String, nprobe: Int, k: Int): String =
+    s"pr AS (SELECT $prCols FROM (SELECT $prCols, " +
+      s"row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, cell ASC) AS rn FROM qd) WHERE rn <= $nprobe), " +
+      "sc AS (SELECT p.query_id, f.vec_id, " +
+      "CAST(list_sum(list_transform(generate_series(1, len(f.q)), i -> f.q[i] * p.qq[i])) AS BIGINT) AS dot_fp, " +
+      "CAST(list_sum(list_transform(f.q, x -> x * x)) AS BIGINT) AS n_fp " +
+      "FROM pr p JOIN af a ON a.cell = p.cell JOIN fp f ON f.vec_id = a.vec_id " +
+      "WHERE f.vec_id <> p.query_id), " +
+      "rk AS (SELECT query_id, vec_id, CAST((CASE WHEN dot_fp < 0 THEN -1 ELSE 1 END) * " +
+      "((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_fp) AS BIGINT) AS rank_fp FROM sc) " +
+      "SELECT query_id, vec_id, rank_fp FROM (SELECT query_id, vec_id, rank_fp, " +
+      "row_number() OVER (PARTITION BY query_id ORDER BY rank_fp DESC, vec_id ASC) AS rn FROM rk) " +
+      s"WHERE rn <= $k ORDER BY query_id, vec_id"
+
+  /** The semantic drop/hit tail over a `pairs` CTE of intra-cell pairs
+    * (`pair`._1, `pair`._2, cell): score them in `fp` under aliases
+    * `as`, keep those that clear cos ≥ tNum/tDen with the zero-vector
+    * guard (CTE `kept`), and emit each `flagged` vector's minimal
+    * `witness` as (vec_id, `witnessAs`, cell, cos2_bp) —
+    * SimilarityPipeline's `minimalWitness`.
+    */
+  private def minimalWitnessSql(
+      pair: (String, String), as: (String, String), flagged: String, witness: String,
+      kept: String, witnessAs: String, tNum: Int, tDen: Int): String =
+    scoredCteSql("scored", s"${pair._1}, ${pair._2}, cell", "pairs", "fp", pair, as) + ", " +
+      s"$kept AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
+      s"AND ${cosCmpSql(tNum, tDen, ">=")}) " +
+      s"SELECT vec_id, $witnessAs, cell, cos2_bp FROM (SELECT $flagged AS vec_id, $witness AS $witnessAs, " +
+      "CAST(cell AS BIGINT) AS cell, " +
+      s"$cos2BpSql, " +
+      s"row_number() OVER (PARTITION BY $flagged ORDER BY $witness) AS rn FROM $kept) " +
+      "WHERE rn = 1 ORDER BY vec_id"
+
+  /** q259/q261's drop tail on the assignment `af`: intra-cell pairs
+    * va < vb, minimal lower-id keeper per dropped vb at cos ≥ 3/10.
+    */
+  private val semanticDropsSql: String =
+    "pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.cell AS cell " +
+      "FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id), " +
+      minimalWitnessSql(("va", "vb"), ("fa", "fb"), "vb", "va", "dup", "keeper", 3, 10)
+
+  /** q260/q262/q265's hit tail on the assignment `af`: the flagged side
+    * `flagged` (CTE name, membership predicate, alias) meets the witness
+    * side `witnesses` (CTE name, predicate) within a cell; minimal
+    * witness per flagged vector at cos ≥ 3/10, emitted as `witnessAs`.
+    */
+  private def semanticHitsSql(
+      flagged: (String, String, String), witnesses: (String, String), witnessAs: String): String = {
+    val (fName, fWhere, f) = flagged
+    val (wName, wWhere) = witnesses
+    s"$fName AS (SELECT vec_id, cell FROM af WHERE $fWhere), " +
+      s"$wName AS (SELECT vec_id, cell FROM af WHERE $wWhere), " +
+      s"pairs AS (SELECT $f.vec_id AS tv, b.vec_id AS bv, $f.cell AS cell " +
+      s"FROM $fName $f JOIN $wName b ON $f.cell = b.cell), " +
+      minimalWitnessSql(("tv", "bv"), ("ft", "fb"), "tv", "bv", "hits", witnessAs, 3, 10)
+  }
 
   // q37 — IVF approximate nearest neighbors: 5 query vectors, top-3
   // neighbors each under the data-scaled sign-LSH coarse quantizer
@@ -422,9 +583,8 @@ object LlmQueries {
   // cell signs on exact fixed-point dots — and ranks candidates per
   // query with q29's exact integer key sign(d)·(d²·10⁴ div n), so the
   // whole cascade (planes → cells → multiprobe → candidates → ranking)
-  // hash-matches the DuckDB oracle. The splitmix64/float form
-  // ([[SimilarityPipeline.annTopK]]) remains the at-scale variant,
-  // recall-pinned vs brute force in SimilarityPipelineSpec.
+  // hash-matches the DuckDB oracle. It is the one sign-LSH top-k form;
+  // SimilarityPipelineSpec pins its recall vs brute force.
   val q37: QuerySpec = QuerySpec(
     "q37_ann_ivf",
     (s, d) => {
@@ -477,19 +637,11 @@ object LlmQueries {
     },
     Some(
       s"WITH $portableCellsCteSql, " +
-        "banded AS (SELECT c.vec_id, b AS m, c.cell & ~(1::BIGINT << b) AS key " +
-        "FROM cells c, LATERAL (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS b) t), " +
-        "cand AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb " +
-        "FROM banded a JOIN banded b ON a.m = b.m AND a.key = b.key AND a.vec_id < b.vec_id), " +
-        "verified AS (SELECT va, vb, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM cand JOIN fp fa ON fa.vec_id = va JOIN fp fb ON fb.vec_id = vb) " +
-        "SELECT va, vb, dot_fp, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
+        bandCandCteSql("cells", "cand") +
+        scoredCteSql("verified", "va, vb", "cand", "fp", ("va", "vb"), ("fa", "fb")) + " " +
+        s"SELECT va, vb, dot_fp, $cos2BpSql " +
         "FROM verified " +
-        "WHERE dot_fp >= 0 AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 >= 4 * CAST(na AS HUGEINT) * nb2 " +
+        s"WHERE ${cosAtLeastSql(2, 5)} " +
         "ORDER BY va, vb"
     ),
   )
@@ -576,8 +728,17 @@ object LlmQueries {
       s"FROM fp f CROSS JOIN $prev c), " +
       s"a$t AS MATERIALIZED (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
       s"row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell ASC) AS rn FROM d$t) WHERE rn = 1), " +
-      s"u$t AS (SELECT a.cell, t.i, CAST(sum(f.q[t.i]) AS BIGINT) AS s, count(*) AS nc " +
-      s"FROM a$t a JOIN fp f ON f.vec_id = a.vec_id, " +
+      lloydUpdateCtes(t, "fp", centScale)
+
+  /** Round `t`'s exact Lloyd update from its assignment `a$t` over the
+    * quantized frame `src`: truncated integer means, isqrt
+    * normalization to `centScale`-scaled unit vectors, as the
+    * materialized centroid CTE `c$t` — SimilarityPipeline's
+    * `lloydUpdateFp`.
+    */
+  private def lloydUpdateCtes(t: Int, src: String, centScale: Long): String =
+    s"u$t AS (SELECT a.cell, t.i, CAST(sum(f.q[t.i]) AS BIGINT) AS s, count(*) AS nc " +
+      s"FROM a$t a JOIN $src f ON f.vec_id = a.vec_id, " +
       "LATERAL (SELECT unnest(generate_series(1, len(f.q))) AS i) t GROUP BY 1, 2), " +
       // abs-then-negate truncated division so engines' negative-operand
       // conventions never matter (both see non-negative operands)
@@ -588,11 +749,6 @@ object LlmQueries {
       s"WHEN m.m < 0 THEN -((-m.m) * $centScale // r.r) ELSE m.m * $centScale // r.r END " +
       s"ORDER BY m.i) AS cent FROM m$t m JOIN r$t r ON r.cell = m.cell GROUP BY m.cell)"
 
-  /** The full q42 oracle: quantize → seed (lowest vec_ids) → `iters`
-    * Lloyd rounds → final assignment → nprobe-cell probes → q29 integer
-    * ranking. Every step replays [[SimilarityPipeline.kmeansTopKFp]]
-    * verbatim over exact integers.
-    */
   /** The shared fixed-point k-means CTE chain (quantize → seed →
     * `iters` Lloyd rounds → final assignment): yields `fp (vec_id, q)`
     * and `af (vec_id, cell)`. The prefix of [[q42OracleSql]], factored
@@ -601,8 +757,7 @@ object LlmQueries {
   private def kmeansAssignCteSql(iters: Int, centScale: Long): String = {
     val rounds = (1 to iters).map(t => q42RoundCtes(t, if (t == 1) "c0" else s"c${t - 1}", centScale))
     val fin = iters + 1 // final assignment round (assignment CTEs only)
-    s"fp AS MATERIALIZED (SELECT vec_id, list_transform(embedding, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q FROM embeddings), " +
+    quantizedCteSql("fp", materialized = true) + ", " +
       // cells = max(2, isqrt(n) div 2), the exact-isqrt mirror of the
       // registration's driver-side Exact.isqrtLong
       s"cs AS (SELECT GREATEST(2, ${graft.ops.Exact.isqrtSql("n")} // 2) AS c " +
@@ -618,25 +773,19 @@ object LlmQueries {
       s"row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell ASC) AS rn FROM d$fin) WHERE rn = 1)"
   }
 
+  /** The full q42 oracle: quantize → seed (lowest vec_ids) → `iters`
+    * Lloyd rounds → final assignment → nprobe-cell probes → q29 integer
+    * ranking. Every step replays [[SimilarityPipeline.kmeansTopKFp]]
+    * verbatim over exact integers.
+    */
   private def q42OracleSql(iters: Int, nprobe: Int, k: Int, centScale: Long): String = {
     s"WITH ${kmeansAssignCteSql(iters, centScale)}, " +
       // query probes: nprobe best cells per query by the same int dot
       "qd AS (SELECT s.vec_id AS query_id, c.cell, s.q AS qq, " +
       "CAST(list_sum(list_transform(generate_series(1, len(s.q)), i -> s.q[i] * c.cent[i])) AS BIGINT) AS dot " +
       s"FROM fp s CROSS JOIN c$iters c WHERE s.vec_id < 5), " +
-      "pr AS (SELECT query_id, cell, qq FROM (SELECT query_id, cell, qq, " +
-      s"row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, cell ASC) AS rn FROM qd) WHERE rn <= $nprobe), " +
       // candidates = probed cells' members, ranked by q29's exact key
-      "sc AS (SELECT p.query_id, f.vec_id, " +
-      "CAST(list_sum(list_transform(generate_series(1, len(f.q)), i -> f.q[i] * p.qq[i])) AS BIGINT) AS dot_fp, " +
-      "CAST(list_sum(list_transform(f.q, x -> x * x)) AS BIGINT) AS n_fp " +
-      "FROM pr p JOIN af a ON a.cell = p.cell JOIN fp f ON f.vec_id = a.vec_id " +
-      "WHERE f.vec_id <> p.query_id), " +
-      "rk AS (SELECT query_id, vec_id, CAST((CASE WHEN dot_fp < 0 THEN -1 ELSE 1 END) * " +
-      "((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_fp) AS BIGINT) AS rank_fp FROM sc) " +
-      "SELECT query_id, vec_id, rank_fp FROM (SELECT query_id, vec_id, rank_fp, " +
-      "row_number() OVER (PARTITION BY query_id ORDER BY rank_fp DESC, vec_id ASC) AS rn FROM rk) " +
-      s"WHERE rn <= $k ORDER BY query_id, vec_id"
+      probeAndRankSql("query_id, cell, qq", nprobe, k)
   }
 
   // q42 — ANN under the spherical k-means quantizer (index built in
@@ -650,8 +799,8 @@ object LlmQueries {
   // SimilarityPipeline.kmeansCentroidsFp), probe choice and the final
   // q29 ranking key are all exact int64 decisions, replayed verbatim by
   // the materialized-round-CTE oracle (the q122 iterative-integer
-  // precedent). The float kmeansTopK stays the documented production
-  // form; SimilarityPipelineSpec pins fp-vs-float recall agreement.
+  // precedent). It is the one k-means top-k form; SimilarityPipelineSpec
+  // pins its recall vs brute force.
   val q42: QuerySpec = QuerySpec(
     "q42_ann_kmeans",
     (s, d) => {
@@ -1027,8 +1176,7 @@ object LlmQueries {
     * projections. Replays [[SimilarityPipeline.pcaProjectFp]] verbatim.
     */
   private def q202OracleSql(iters: Int): String =
-    s"WITH fp AS MATERIALIZED (SELECT vec_id, list_transform(embedding, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q FROM embeddings), " +
+    s"WITH ${quantizedCteSql("fp", materialized = true)}, " +
       pcaAxesCtes(iters) + " " +
       "SELECT c.vec_id, CAST(sum(c.x * a1.v) AS BIGINT) AS p1_fp, " +
       "CAST(sum(c.x * a2.v) AS BIGINT) AS p2_fp " +
@@ -1037,9 +1185,10 @@ object LlmQueries {
 
   // q202 — PCA projection of the embedding corpus onto its top-2
   // principal axes: the dimensionality reduction that fronts ANN at
-  // scale. The corpus is touched twice (scatter pass, projection
-  // pass); everything between runs on d-row / d²-row frames with
-  // pinned iterates — no driver collect anywhere.
+  // scale. The corpus is touched by two aggregate passes (the exact
+  // mean, then the scatter) and the projection pass; the d×d scatter
+  // (dimension-sized, never corpus-sized) is collected once and the
+  // power rounds run as exact driver arithmetic.
   //
   // Oracle-checked since round 9 (was rows-only/float): the registered
   // run is the FIXED-POINT form ([[SimilarityPipeline.pcaProjectFp]])
@@ -1049,10 +1198,9 @@ object LlmQueries {
   // round (matvec → downscale → isqrt-normalize, axis 2 deflated
   // against the pinned axis 1 at a 2¹⁹-scale truncated coefficient),
   // sign pins, and the final projections are ALL integer decisions,
-  // replayed verbatim by materialized-round DuckDB CTEs. The float
-  // pcaProject/topTwoAxes stay the production form — variance
-  // dominance, orthogonality, determinism, and fp-vs-float axis
-  // agreement pinned in SimilarityPipelineSpec.
+  // replayed verbatim by materialized-round DuckDB CTEs. It is the one
+  // PCA form; planted-axis alignment, orthogonality, determinism and the
+  // planted projection order are pinned in SimilarityPipelineSpec.
   val q202: QuerySpec = QuerySpec(
     "q202_pca_project",
     (s, d) =>
@@ -1126,8 +1274,8 @@ object LlmQueries {
   // on the survivors, where d ≥ 0 already holds) and the per-anchor
   // top-2 ranked by q29's integer key against the negative's norm — so
   // candidates, band membership, AND ranking hash-match the DuckDB
-  // oracle. The float form (annNearDupPairs + window) remains the
-  // at-scale variant, property-pinned in SimilarityPipelineSpec.
+  // oracle. Band membership and the per-anchor rank contract are
+  // pinned against float cosine in SimilarityPipelineSpec.
   val q217: QuerySpec = QuerySpec(
     "q217_hard_negative_mining",
     (s, d) => {
@@ -1139,28 +1287,10 @@ object LlmQueries {
     },
     Some(
       s"WITH $portableCellsCteSql, " +
-        "banded AS (SELECT c.vec_id, b AS m, c.cell & ~(1::BIGINT << b) AS key " +
-        "FROM cells c, LATERAL (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS b) t), " +
-        "cand AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb " +
-        "FROM banded a JOIN banded b ON a.m = b.m AND a.key = b.key AND a.vec_id < b.vec_id), " +
-        "verified AS (SELECT va, vb, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM cand JOIN fp fa ON fa.vec_id = va JOIN fp fb ON fb.vec_id = vb), " +
-        "band AS (SELECT * FROM verified WHERE dot_fp >= 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 >= CAST(na AS HUGEINT) * nb2 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 < 9 * CAST(na AS HUGEINT) * nb2), " +
-        "directed AS (SELECT va AS anchor_id, vb AS negative_id, dot_fp, nb2 AS n_neg, na, nb2 FROM band " +
-        "UNION ALL SELECT vb, va, dot_fp, na, na, nb2 FROM band), " +
-        "keyed AS (SELECT anchor_id, negative_id, dot_fp, " +
-        "(CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_neg AS rank_fp, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
-        "FROM directed), " +
-        "ranked AS (SELECT *, row_number() OVER (PARTITION BY anchor_id ORDER BY rank_fp DESC, negative_id) AS rank " +
-        "FROM keyed) " +
-        "SELECT anchor_id, CAST(rank AS BIGINT) AS rank, negative_id, dot_fp, cos2_bp " +
-        "FROM ranked WHERE rank <= 2 ORDER BY anchor_id, rank"
+        bandCandCteSql("cells", "cand") +
+        scoredCteSql("verified", "va, vb", "cand", "fp", ("va", "vb"), ("fa", "fb")) + ", " +
+        s"band AS (SELECT * FROM verified WHERE ${cosInBandSql(1, 5, 3, 5)}), " +
+        mirroredTopKSql(k = 2)
     ),
   )
 
@@ -1189,30 +1319,21 @@ object LlmQueries {
     },
     Some(
       s"WITH $portableCellsCteSql, " +
-        "banded AS (SELECT c.vec_id, b AS m, c.cell & ~(1::BIGINT << b) AS key " +
-        "FROM cells c, LATERAL (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS b) t), " +
+        bandedCteSql("cells") +
         "candd AS (SELECT DISTINCT a.vec_id AS anchor_id, b.vec_id AS negative_id " +
         "FROM banded a JOIN banded b ON a.m = b.m AND a.key = b.key AND a.vec_id <> b.vec_id), " +
         "capped AS (SELECT anchor_id, negative_id FROM (SELECT anchor_id, negative_id, " +
         "row_number() OVER (PARTITION BY anchor_id ORDER BY " +
         "md5('hn|' || CAST(anchor_id AS VARCHAR) || '|' || CAST(negative_id AS VARCHAR)), negative_id) AS rn " +
         "FROM candd) WHERE rn <= 32), " +
-        "scored AS (SELECT anchor_id, negative_id, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM capped JOIN fp fa ON fa.vec_id = anchor_id JOIN fp fb ON fb.vec_id = negative_id), " +
-        "band AS (SELECT * FROM scored WHERE dot_fp >= 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 >= CAST(na AS HUGEINT) * nb2 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 < 9 * CAST(na AS HUGEINT) * nb2), " +
+        scoredCteSql("scored", "anchor_id, negative_id", "capped", "fp",
+          ("anchor_id", "negative_id"), ("fa", "fb")) + ", " +
+        s"band AS (SELECT * FROM scored WHERE ${cosInBandSql(1, 5, 3, 5)}), " +
         "keyed AS (SELECT anchor_id, negative_id, dot_fp, " +
         "(CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // nb2 AS rank_fp, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
+        s"$cos2BpSql " +
         "FROM band), " +
-        "ranked AS (SELECT *, row_number() OVER (PARTITION BY anchor_id ORDER BY rank_fp DESC, negative_id) AS rank " +
-        "FROM keyed) " +
-        "SELECT anchor_id, CAST(rank AS BIGINT) AS rank, negative_id, dot_fp, cos2_bp " +
-        "FROM ranked WHERE rank <= 2 ORDER BY anchor_id, rank"
+        hardNegativeTopKSql(k = 2)
     ),
   )
 
@@ -1242,20 +1363,7 @@ object LlmQueries {
     },
     Some(
       s"WITH ${kmeansAssignCteSql(iters = 2, centScale = 1000000L)}, " +
-        "pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.cell AS cell " +
-        "FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id), " +
-        "scored AS (SELECT va, vb, cell, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp fa ON fa.vec_id = va JOIN fp fb ON fb.vec_id = vb), " +
-        "dup AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 100 >= 9 * CAST(na AS HUGEINT) * nb2) " +
-        "SELECT vec_id, keeper, cell, cos2_bp FROM (SELECT vb AS vec_id, va AS keeper, " +
-        "CAST(cell AS BIGINT) AS cell, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp, " +
-        "row_number() OVER (PARTITION BY vb ORDER BY va) AS rn FROM dup) " +
-        "WHERE rn = 1 ORDER BY vec_id"
+        semanticDropsSql
     ),
   )
 
@@ -1285,22 +1393,7 @@ object LlmQueries {
     },
     Some(
       s"WITH ${kmeansAssignCteSql(iters = 2, centScale = 1000000L)}, " +
-        "tr AS (SELECT vec_id, cell FROM af WHERE vec_id % 20 <> 0), " +
-        "bm AS (SELECT vec_id, cell FROM af WHERE vec_id % 20 = 0), " +
-        "pairs AS (SELECT t.vec_id AS tv, b.vec_id AS bv, t.cell AS cell " +
-        "FROM tr t JOIN bm b ON t.cell = b.cell), " +
-        "scored AS (SELECT tv, bv, cell, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(ft.q)), i -> ft.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(ft.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp ft ON ft.vec_id = tv JOIN fp fb ON fb.vec_id = bv), " +
-        "hits AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 100 >= 9 * CAST(na AS HUGEINT) * nb2) " +
-        "SELECT vec_id, bench_witness, cell, cos2_bp FROM (SELECT tv AS vec_id, bv AS bench_witness, " +
-        "CAST(cell AS BIGINT) AS cell, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp, " +
-        "row_number() OVER (PARTITION BY tv ORDER BY bv) AS rn FROM hits) " +
-        "WHERE rn = 1 ORDER BY vec_id"
+        semanticHitsSql(("tr", "vec_id % 20 <> 0", "t"), ("bm", "vec_id % 20 = 0"), "bench_witness")
     ),
   )
 
@@ -1328,15 +1421,7 @@ object LlmQueries {
       s"JOIN fg$t x ON x.gcell = p.gcell JOIN $prev c ON c.cell = x.cell), " +
       s"a$t AS MATERIALIZED (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
       s"row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell ASC) AS rn FROM d$t) WHERE rn = 1), " +
-      s"u$t AS (SELECT a.cell, t.i, CAST(sum(f.q[t.i]) AS BIGINT) AS s, count(*) AS nc " +
-      s"FROM a$t a JOIN $src f ON f.vec_id = a.vec_id, " +
-      "LATERAL (SELECT unnest(generate_series(1, len(f.q))) AS i) t GROUP BY 1, 2), " +
-      s"m$t AS (SELECT cell, i, CASE WHEN s < 0 THEN -((-s) // nc) ELSE s // nc END AS m FROM u$t), " +
-      s"n$t AS (SELECT cell, CAST(sum(m * m) AS BIGINT) AS n2 FROM m$t GROUP BY 1), " +
-      s"r$t AS (SELECT cell, ${graft.ops.Exact.isqrtSql("n2")} AS r FROM n$t), " +
-      s"c$t AS MATERIALIZED (SELECT m.cell, list(CASE WHEN r.r = 0 THEN m.m " +
-      s"WHEN m.m < 0 THEN -((-m.m) * $centScale // r.r) ELSE m.m * $centScale // r.r END " +
-      s"ORDER BY m.i) AS cent FROM m$t m JOIN r$t r ON r.cell = m.cell GROUP BY m.cell)"
+      lloydUpdateCtes(t, src, centScale)
 
   /** The scaled (cells ∝ n, IVF-probed) clustering chain: quantize →
     * cells = max(2, n div targetCell) fine seeds + isqrt(cells) coarse
@@ -1359,8 +1444,7 @@ object LlmQueries {
     val rounds = (1 to iters).map(t =>
       ivfRoundCtes(t, if (t == 1) "c0" else s"c${t - 1}", centScale, src))
     val fin = iters + 1
-    s"fp AS MATERIALIZED (SELECT vec_id, list_transform(embedding, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q FROM embeddings), " +
+    quantizedCteSql("fp", materialized = true) + ", " +
       fpb +
       s"cs AS (SELECT GREATEST(2, n // $targetCell) AS c FROM (SELECT count(*) AS n FROM $src)), " +
       s"gs AS (SELECT GREATEST(1, ${graft.ops.Exact.isqrtSql("c")}) AS g FROM cs), " +
@@ -1408,20 +1492,7 @@ object LlmQueries {
         .orderBy("vec_id"),
     Some(
       s"WITH ${ivfAssignCteSql(iters = 2, targetCell = 32, centScale = 1000000L)}, " +
-        "pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.cell AS cell " +
-        "FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id), " +
-        "scored AS (SELECT va, vb, cell, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp fa ON fa.vec_id = va JOIN fp fb ON fb.vec_id = vb), " +
-        "dup AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 100 >= 9 * CAST(na AS HUGEINT) * nb2) " +
-        "SELECT vec_id, keeper, cell, cos2_bp FROM (SELECT vb AS vec_id, va AS keeper, " +
-        "CAST(cell AS BIGINT) AS cell, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp, " +
-        "row_number() OVER (PARTITION BY vb ORDER BY va) AS rn FROM dup) " +
-        "WHERE rn = 1 ORDER BY vec_id"
+        semanticDropsSql
     ),
   )
 
@@ -1440,22 +1511,7 @@ object LlmQueries {
         .orderBy("vec_id"),
     Some(
       s"WITH ${ivfAssignCteSql(iters = 2, targetCell = 32, centScale = 1000000L)}, " +
-        "tr AS (SELECT vec_id, cell FROM af WHERE vec_id % 20 <> 0), " +
-        "bm AS (SELECT vec_id, cell FROM af WHERE vec_id % 20 = 0), " +
-        "pairs AS (SELECT t.vec_id AS tv, b.vec_id AS bv, t.cell AS cell " +
-        "FROM tr t JOIN bm b ON t.cell = b.cell), " +
-        "scored AS (SELECT tv, bv, cell, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(ft.q)), i -> ft.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(ft.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp ft ON ft.vec_id = tv JOIN fp fb ON fb.vec_id = bv), " +
-        "hits AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 100 >= 9 * CAST(na AS HUGEINT) * nb2) " +
-        "SELECT vec_id, bench_witness, cell, cos2_bp FROM (SELECT tv AS vec_id, bv AS bench_witness, " +
-        "CAST(cell AS BIGINT) AS cell, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp, " +
-        "row_number() OVER (PARTITION BY tv ORDER BY bv) AS rn FROM hits) " +
-        "WHERE rn = 1 ORDER BY vec_id"
+        semanticHitsSql(("tr", "vec_id % 20 <> 0", "t"), ("bm", "vec_id % 20 = 0"), "bench_witness")
     ),
   )
 
@@ -1487,24 +1543,9 @@ object LlmQueries {
       s"WITH ${ivfAssignCteSql(iters = 2, targetCell = 32, centScale = 1000000L)}, " +
         "pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb " +
         "FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id), " +
-        "scored AS (SELECT va, vb, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp fa ON fa.vec_id = va JOIN fp fb ON fb.vec_id = vb), " +
-        "band AS (SELECT * FROM scored WHERE dot_fp >= 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 >= CAST(na AS HUGEINT) * nb2 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 25 < 9 * CAST(na AS HUGEINT) * nb2), " +
-        "directed AS (SELECT va AS anchor_id, vb AS negative_id, dot_fp, nb2 AS n_neg, na, nb2 FROM band " +
-        "UNION ALL SELECT vb, va, dot_fp, na, na, nb2 FROM band), " +
-        "keyed AS (SELECT anchor_id, negative_id, dot_fp, " +
-        "(CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_neg AS rank_fp, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
-        "FROM directed), " +
-        "ranked AS (SELECT *, row_number() OVER (PARTITION BY anchor_id ORDER BY rank_fp DESC, negative_id) AS rank " +
-        "FROM keyed) " +
-        "SELECT anchor_id, CAST(rank AS BIGINT) AS rank, negative_id, dot_fp, cos2_bp " +
-        "FROM ranked WHERE rank <= 2 ORDER BY anchor_id, rank"
+        scoredCteSql("scored", "va, vb", "pairs", "fp", ("va", "vb"), ("fa", "fb")) + ", " +
+        s"band AS (SELECT * FROM scored WHERE ${cosInBandSql(1, 5, 3, 5)}), " +
+        mirroredTopKSql(k = 2)
     ),
   )
 
@@ -1542,18 +1583,7 @@ object LlmQueries {
         "qd AS (SELECT q.query_id, q.qq, x.cell, " +
         "CAST(list_sum(list_transform(generate_series(1, len(q.qq)), i -> q.qq[i] * c.cent[i])) AS BIGINT) AS dot " +
         "FROM qg q JOIN fg3 x ON x.gcell = q.gcell JOIN c2 c ON c.cell = x.cell), " +
-        "pr AS (SELECT query_id, qq, cell FROM (SELECT query_id, qq, cell, " +
-        "row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, cell ASC) AS rn FROM qd) WHERE rn <= 2), " +
-        "sc AS (SELECT p.query_id, f.vec_id, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(f.q)), i -> f.q[i] * p.qq[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(f.q, x -> x * x)) AS BIGINT) AS n_fp " +
-        "FROM pr p JOIN af a ON a.cell = p.cell JOIN fp f ON f.vec_id = a.vec_id " +
-        "WHERE f.vec_id <> p.query_id), " +
-        "rk AS (SELECT query_id, vec_id, CAST((CASE WHEN dot_fp < 0 THEN -1 ELSE 1 END) * " +
-        "((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // n_fp) AS BIGINT) AS rank_fp FROM sc) " +
-        "SELECT query_id, vec_id, rank_fp FROM (SELECT query_id, vec_id, rank_fp, " +
-        "row_number() OVER (PARTITION BY query_id ORDER BY rank_fp DESC, vec_id ASC) AS rn FROM rk) " +
-        "WHERE rn <= 3 ORDER BY query_id, vec_id"
+        probeAndRankSql("query_id, qq, cell", nprobe = 2, k = 3)
     ),
   )
 
@@ -1580,22 +1610,7 @@ object LlmQueries {
         .orderBy("vec_id"),
     Some(
       s"WITH ${ivfAssignCteSql(iters = 2, targetCell = 32, centScale = 1000000L, clusterWhere = Some("vec_id % 4 <> 0"))}, " +
-        "inc AS (SELECT vec_id, cell FROM af WHERE vec_id % 4 = 0), " +
-        "bs AS (SELECT vec_id, cell FROM af WHERE vec_id % 4 <> 0), " +
-        "pairs AS (SELECT i.vec_id AS tv, b.vec_id AS bv, i.cell AS cell " +
-        "FROM inc i JOIN bs b ON i.cell = b.cell), " +
-        "scored AS (SELECT tv, bv, cell, " +
-        "CAST(list_sum(list_transform(generate_series(1, len(ft.q)), i -> ft.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-        "CAST(list_sum(list_transform(ft.q, x -> x * x)) AS BIGINT) AS na, " +
-        "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-        "FROM pairs JOIN fp ft ON ft.vec_id = tv JOIN fp fb ON fb.vec_id = bv), " +
-        "hits AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-        "AND CAST(dot_fp AS HUGEINT) * dot_fp * 100 >= 9 * CAST(na AS HUGEINT) * nb2) " +
-        "SELECT vec_id, base_witness, cell, cos2_bp FROM (SELECT tv AS vec_id, bv AS base_witness, " +
-        "CAST(cell AS BIGINT) AS cell, " +
-        "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp, " +
-        "row_number() OVER (PARTITION BY tv ORDER BY bv) AS rn FROM hits) " +
-        "WHERE rn = 1 ORDER BY vec_id"
+        semanticHitsSql(("inc", "vec_id % 4 = 0", "i"), ("bs", "vec_id % 4 <> 0"), "base_witness")
     ),
   )
 
@@ -1610,10 +1625,7 @@ object LlmQueries {
     */
   private def q224OracleSql(iters: Int, tNum: Int, tDen: Int, budgetFactor: Int): String = {
     val w = SimilarityPipeline.gridWidthFp(tNum, tDen)
-    val tn2 = tNum.toLong * tNum
-    val td2 = tDen.toLong * tDen
-    s"WITH fpr AS MATERIALIZED (SELECT vec_id, list_transform(embedding, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * $Q29Scale) AS BIGINT)) AS q FROM embeddings), " +
+    s"WITH ${quantizedCteSql("fpr", materialized = true)}, " +
       s"nr AS (SELECT vec_id, ${graft.ops.Exact.isqrtSql("n2")} AS r " +
       "FROM (SELECT vec_id, CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS n2 FROM fpr)), " +
       "fp AS MATERIALIZED (SELECT f.vec_id, list_transform(f.q, " +
@@ -1641,38 +1653,15 @@ object LlmQueries {
       "(SELECT unnest(generate_series(-1, 1)) AS dy)), " +
       "gcand AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb FROM gprobe a " +
       "JOIN cl b ON a.cx = b.cx AND a.cy = b.cy AND a.vec_id < b.vec_id), " +
-      "gver AS (SELECT va, vb, " +
-      "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-      "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-      "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-      "FROM gcand JOIN fpr fa ON fa.vec_id = va JOIN fpr fb ON fb.vec_id = vb), " +
-      "gout AS (SELECT va, vb, dot_fp, " +
-      "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
-      s"FROM gver WHERE dot_fp >= 0 AND CAST(dot_fp AS HUGEINT) * dot_fp * $td2 >= $tn2 * CAST(na AS HUGEINT) * nb2), " +
+      scoredCteSql("gver", "va, vb", "gcand", "fpr", ("va", "vb"), ("fa", "fb")) + ", " +
+      s"gout AS (SELECT va, vb, dot_fp, $cos2BpSql " +
+      s"FROM gver WHERE ${cosAtLeastSql(tNum, tDen)}), " +
       // fallback branch: the q38 portable chain, renamed onto fpr
-      "bits AS (SELECT COALESCE((SELECT max(k) FROM (SELECT unnest(generate_series(1, 16)) AS k), " +
-      "(SELECT count(*) AS n FROM embeddings) " +
-      "WHERE CAST(n AS HUGEINT) * n >= 4096 * (CAST(1 AS HUGEINT) << (2*k - 1))), 1) AS nb), " +
-      "planes AS (SELECT p, i, CASE WHEN substr(md5('plane:'||p||':'||i),1,1) <= '7' THEN 1 ELSE -1 END AS s " +
-      "FROM (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS p), " +
-      "(SELECT unnest(generate_series(0, 63)) AS i)), " +
-      "el2 AS (SELECT vec_id, i-1 AS i, q[i] AS qi FROM fpr, " +
-      "LATERAL (SELECT unnest(generate_series(1, len(q))) AS i) t), " +
-      "cellbit AS (SELECT e.vec_id, pl.p, CASE WHEN sum(pl.s * e.qi) >= 0 THEN (1::BIGINT << pl.p) ELSE 0 END AS bit " +
-      "FROM el2 e JOIN planes pl ON pl.i = e.i GROUP BY 1, 2), " +
-      "cells2 AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS cell FROM cellbit GROUP BY 1), " +
-      "banded AS (SELECT c.vec_id, b AS m, c.cell & ~(1::BIGINT << b) AS key " +
-      "FROM cells2 c, LATERAL (SELECT unnest(generate_series(0, (SELECT nb FROM bits)-1)) AS b) t), " +
-      "lcand AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb " +
-      "FROM banded a JOIN banded b ON a.m = b.m AND a.key = b.key AND a.vec_id < b.vec_id), " +
-      "lver AS (SELECT va, vb, " +
-      "CAST(list_sum(list_transform(generate_series(1, len(fa.q)), i -> fa.q[i] * fb.q[i])) AS BIGINT) AS dot_fp, " +
-      "CAST(list_sum(list_transform(fa.q, x -> x * x)) AS BIGINT) AS na, " +
-      "CAST(list_sum(list_transform(fb.q, x -> x * x)) AS BIGINT) AS nb2 " +
-      "FROM lcand JOIN fpr fa ON fa.vec_id = va JOIN fpr fb ON fb.vec_id = vb), " +
-      "lout AS (SELECT va, vb, dot_fp, " +
-      "CAST((CAST(dot_fp AS HUGEINT) * dot_fp * 10000) // (CAST(na AS HUGEINT) * nb2) AS BIGINT) AS cos2_bp " +
-      s"FROM lver WHERE dot_fp >= 0 AND CAST(dot_fp AS HUGEINT) * dot_fp * $td2 >= $tn2 * CAST(na AS HUGEINT) * nb2) " +
+      bitsPlanesCteSql + signCellsCteSql("fpr", "el2", "cells2") + ", " +
+      bandCandCteSql("cells2", "lcand") +
+      scoredCteSql("lver", "va, vb", "lcand", "fpr", ("va", "vb"), ("fa", "fb")) + ", " +
+      s"lout AS (SELECT va, vb, dot_fp, $cos2BpSql " +
+      s"FROM lver WHERE ${cosAtLeastSql(tNum, tDen)}) " +
       // the replayed DECISION picks the branch
       "SELECT va, vb, dot_fp, cos2_bp FROM gout WHERE (SELECT grid_ok FROM imp) " +
       "UNION ALL SELECT va, vb, dot_fp, cos2_bp FROM lout WHERE NOT (SELECT grid_ok FROM imp) " +
@@ -1694,7 +1683,7 @@ object LlmQueries {
   // lossless metric filter — projection, pivot, or bounding-box —
   // prunes anything at any useful threshold (distance concentration).
   // So the registered operator is the ADAPTIVE cascade
-  // (`adaptiveNearDupPairs`): plan the physical strategy from data
+  // (`adaptiveNearDupPairsFp`): plan the physical strategy from data
   // statistics, AQE-style — compute the grid cell histogram (tiny,
   // linear), take the LOSSLESS grid when it implies ≤ budget·N
   // candidates (anisotropic / clustered corpora — which near-dup-rich
@@ -1703,9 +1692,9 @@ object LlmQueries {
   // On this corpus: fallback branch, whose honest answer at the
   // production threshold t = 0.8 is zero pairs (max inter-vector
   // cosine < 0.6, measured) — spec-pinned against brute force.
-  // Sub-7/9 thresholds fail the geometry rail loudly in BOTH entry
-  // points. Axes are explicitly Gram–Schmidt-orthogonalized, so the
-  // contraction guarantee holds for any iteration count.
+  // Sub-7/9 thresholds fail the geometry rail loudly. Axis 2 is
+  // deflated against axis 1 every round, so the contraction guarantee
+  // holds for any iteration count (within the documented 2e-6 quantum).
   //
   // Oracle-checked since round 9 (was rows-only): the registered run
   // is the FIXED-POINT adaptive cascade
@@ -1718,10 +1707,9 @@ object LlmQueries {
   // replays the whole operator INCLUDING its physical-strategy choice
   // (on this isotropic corpus: the sign-LSH branch, whose honest
   // answer at t = 4/5 is empty — the oracle computes the same branch
-  // and the same empty set). The float adaptiveNearDupPairs stays the
-  // production form; lossless recall, planted-envelope detection,
-  // branch choice (both forms), rail boundary, and corpus-emptiness
-  // properties in SimilarityPipelineSpec.
+  // and the same empty set). Planted-pair recall, branch choice, the
+  // rail boundary, the rank-deficient corpus, and corpus emptiness
+  // against brute force are pinned in SimilarityPipelineSpec.
   val q224: QuerySpec = QuerySpec(
     "q224_pca_grid_near_dup",
     (s, d) =>

@@ -61,6 +61,29 @@ object RetrievalQueries {
       .select(col("doc_id"), col("score"))
   }
 
+  /** [[bm25Scored]] as DuckDB CTEs (tfs, stats, scored): per-document
+    * term frequencies and length, corpus document frequencies and mean
+    * length, and `scored (doc_id, score)` — shared by the q123 and q127
+    * oracles.
+    */
+  private val bm25CteSql: String = {
+    def tf(i: Int, t: String) =
+      s"len(list_filter(string_split(text,' '), w -> w = '$t')) AS tf$i"
+    def scoreTerm(i: Int) =
+      s"ln((CAST(n AS DOUBLE) - df$i + 0.5)/(df$i + 0.5) + 1.0) * " +
+        s"(tf$i * ${K1 + 1.0})/(tf$i + $K1 * ((1.0 - $B) + $B * dl/avgdl))"
+    "tfs AS (SELECT doc_id, len(string_split(text,' ')) AS dl, " +
+      Terms.zipWithIndex.map { case (t, i) => tf(i, t) }.mkString(", ") +
+      " FROM documents), " +
+      "stats AS (SELECT count(*) AS n, " +
+      "CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl, " +
+      Terms.indices.map(i =>
+        s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(", ") +
+      " FROM tfs), " +
+      "scored AS (SELECT doc_id, " +
+      Terms.indices.map(scoreTerm).mkString(" + ") + " AS score FROM tfs, stats)"
+  }
+
   val q123: QuerySpec = QuerySpec(
     "q123_bm25_score",
     (s, d) => {
@@ -70,25 +93,11 @@ object RetrievalQueries {
           floor(col("score") * 1000).cast("long").as("score_milli"))
         .orderBy(desc("score_milli"), col("doc_id"))
     },
-    Some {
-      def tf(i: Int, t: String) =
-        s"len(list_filter(string_split(text,' '), w -> w = '$t')) AS tf$i"
-      def scoreTerm(i: Int) =
-        s"ln((CAST(n AS DOUBLE) - df$i + 0.5)/(df$i + 0.5) + 1.0) * " +
-          s"(tf$i * ${K1 + 1.0})/(tf$i + $K1 * ((1.0 - $B) + $B * dl/avgdl))"
-      "WITH tfs AS (SELECT doc_id, len(string_split(text,' ')) AS dl, " +
-        Terms.zipWithIndex.map { case (t, i) => tf(i, t) }.mkString(", ") +
-        " FROM documents), " +
-        "stats AS (SELECT count(*) AS n, " +
-        "CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl, " +
-        Terms.indices.map(i =>
-          s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(", ") +
-        " FROM tfs), " +
-        "scored AS (SELECT doc_id, " +
-        Terms.indices.map(scoreTerm).mkString(" + ") + " AS score FROM tfs, stats) " +
+    Some(
+      s"WITH $bm25CteSql " +
         "SELECT doc_id, CAST(floor(score * 1000) AS BIGINT) AS score_milli " +
         "FROM scored WHERE score > 0 ORDER BY score_milli DESC, doc_id"
-    },
+    ),
   )
 
   // ---------------------------------------------------------------------
@@ -129,21 +138,7 @@ object RetrievalQueries {
         .limit(FusedK)
     },
     Some {
-      def tf(i: Int, t: String) =
-        s"len(list_filter(string_split(text,' '), w -> w = '$t')) AS tf$i"
-      def scoreTerm(i: Int) =
-        s"ln((CAST(n AS DOUBLE) - df$i + 0.5)/(df$i + 0.5) + 1.0) * " +
-          s"(tf$i * ${K1 + 1.0})/(tf$i + $K1 * ((1.0 - $B) + $B * dl/avgdl))"
-      "WITH tfs AS (SELECT doc_id, len(string_split(text,' ')) AS dl, " +
-        Terms.zipWithIndex.map { case (t, i) => tf(i, t) }.mkString(", ") +
-        " FROM documents), " +
-        "stats AS (SELECT count(*) AS n, " +
-        "CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl, " +
-        Terms.indices.map(i =>
-          s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(", ") +
-        " FROM tfs), " +
-        "scored AS (SELECT doc_id, " +
-        Terms.indices.map(scoreTerm).mkString(" + ") + " AS score FROM tfs, stats), " +
+      s"WITH $bm25CteSql, " +
         "la AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS ra " +
         s"FROM scored WHERE score > 0 ORDER BY score DESC, doc_id LIMIT $ListN), " +
         "lb AS (SELECT doc_id, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rb " +

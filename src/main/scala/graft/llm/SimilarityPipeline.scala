@@ -3,31 +3,33 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.RddShim
 
 import graft.functions.VectorFunctions
 import graft.ops.Pin.PinOps
 
-/** Similarity search over embedding columns, in three scale tiers:
+/** Similarity search over embedding columns. Every registered vector
+  * query (q37, q38, q42, q202, q217, q224, q258–q265) runs a form whose
+  * every decision is exact integer arithmetic, so its DuckDB oracle
+  * replays it step for step:
   *
-  *  1. [[bruteForceTopK]] — exact cosine against a handful of anchors
-  *     (broadcast the anchors, one scan, per-partition heap). The
-  *     baseline and the correctness oracle for the approximate tiers.
-  *  2. [[annTopK]] / [[annNearDupPairs]] — IVF with a data-scaled
-  *     sign-LSH coarse quantizer ([[cellBits]]/[[withCells]]): cells
-  *     grow with the corpus so per-cell work stays flat, and
-  *     hamming-≤1 multiprobe recovers cross-cell recall (the nprobe
-  *     analog). [[ivfTopK]] / [[ivfNearDupPairs]] are the
-  *     bring-your-own-quantizer forms for corpora that already carry a
-  *     cluster assignment column.
-  *  3. [[VectorFunctions.signBucket]] LSH — for high-similarity
-  *     near-dup (cosine ≳ 0.9) where random-hyperplane collision
-  *     probability is useful; exercised in VectorFunctionsSpec.
+  *  - the portable sign-LSH cascade ([[withCellsPortable]]: md5-derived
+  *    planes, cells ∝ N, hamming-≤1 multiprobe and banding) for top-k,
+  *    near-dup pairs and hard negatives;
+  *  - fixed-point spherical k-means ([[kmeansCentroidsFp]]) and its
+  *    IVF-probed cells-∝-n form ([[ivfAssignCellsFp]]) for top-k,
+  *    semantic dedup, decontamination and hard negatives;
+  *  - fixed-point PCA ([[topTwoAxesFp]]) for projection and the
+  *    adaptive grid/sign-LSH near-dup cascade.
   *
-  * At 100 TB the same three tiers hold: anchors/centroids broadcast,
-  * candidate generation is an equijoin on (cell) or (bucket) — uniform
-  * shuffle keys, no N² anywhere — and exact cosine runs only on the
-  * candidate set.
+  * Two float forms remain. [[bruteForceTopK]] is the exact reference
+  * the approximate forms' recall is measured against. The float
+  * sign-LSH [[annNearDupPairs]] ([[cellBits]]/[[withCells]]) is the
+  * path of `Multimodal.mediaNearDupPairs`.
+  *
+  * At 100 TB the same shapes hold: anchors/centroids broadcast,
+  * candidate generation is an equijoin on (cell) or (band key) —
+  * uniform shuffle keys, no N² anywhere — and the exact score runs
+  * only on the candidate set.
   */
 object SimilarityPipeline {
 
@@ -48,58 +50,22 @@ object SimilarityPipeline {
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
   }
 
-  /** IVF top-k: like [[bruteForceTopK]] but only same-cell candidates
-    * are scored. `cellCol` is the coarse-quantizer assignment.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, cellCol: String = "label"): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"), col(cellCol).as("q_cell"))
-    val scored = corpus
-      .join(broadcast(q), col(cellCol) === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id"),
-        VectorFunctions.cosine(col("embedding"), col("q_emb")).as("score"),
-      )
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
-  }
-
-  /** IVF-bucketed near-duplicate pairs: same-cell pairs with exact
-    * cosine ≥ `threshold`, computed by the native codegen'd
-    * [[graft.expressions.FloatVecCosine]] — one fused loop per
-    * candidate pair, no N² cross product (the cell equijoin bounds the
-    * pair count), no per-element row blowup.
-    */
-  def ivfNearDupPairs(corpus: DataFrame, threshold: Double, cellCol: String = "label"): DataFrame = {
-    val e = corpus.select(col("vec_id"), col(cellCol).as("cell"), col("embedding"))
-    e.as("a")
-      .join(e.as("b"), col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("va"),
-        col("b.vec_id").as("vb"),
-        VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("cos"),
-      )
-      .where(col("cos") >= threshold)
-  }
-
   // ------------------------------------------------------------------
-  // Data-scaled coarse quantizer (the real IVF path; the cellCol
-  // variants above remain for corpora that already carry a clustering).
-  //
-  // Cells are sign-LSH buckets of `bits` seeded random hyperplanes
-  // (VectorFunctions.signBucket — deterministic, no fit pass, no
-  // driver state). `cellBits` picks bits so the expected cell
-  // occupancy stays ~`targetOccupancy` regardless of corpus size:
-  // cells ∝ N, so per-cell candidate-pair counts stay FLAT as the
-  // corpus grows — the property that makes the join cost O(N·occ)
-  // instead of quadratic-in-the-hottest-cell (the fixed-10-cell
-  // version this replaces grew per-cell pairs quadratically).
+  // Data-scaled sign-LSH coarse quantizer. Cells are sign buckets of
+  // `bits` random hyperplanes (deterministic, no fit pass, no driver
+  // state): float splitmix64 planes in [[withCells]], md5-derived
+  // planes with integer sign decisions in [[withCellsPortable]].
+  // `cellBits` picks bits so the expected cell occupancy stays
+  // ~`targetOccupancy` regardless of corpus size: cells ∝ N, so
+  // per-cell candidate-pair counts stay FLAT as the corpus grows — the
+  // property that makes the join cost O(N·occ) instead of
+  // quadratic-in-the-hottest-cell.
   //
   // Recall across a cell boundary is recovered by hamming-≤1
   // multiprobe (standard IVF nprobe analog): queries probe their own
   // cell plus every 1-bit-flip neighbor; the pair join bands on each
-  // bit-masked key. Cost multiplier is (bits+1), still linear in N.
+  // bit-masked key ([[bandKeys]]). Cost multiplier is (bits+1), still
+  // linear in N.
   // ------------------------------------------------------------------
 
   /** Hyperplane count for ~`targetOccupancy` vectors per cell
@@ -125,133 +91,57 @@ object SimilarityPipeline {
   def withCells(corpus: DataFrame, bits: Int, dim: Int = 64, seed: Long = 42L): DataFrame =
     corpus.withColumn("cell", VectorFunctions.signBucket(col("embedding"), dim, bits, seed))
 
-  /** ANN top-k with the sign-LSH quantizer and hamming-≤1 multiprobe:
-    * each (broadcast) query scores candidates from bits+1 cells; exact
-    * cosine ranks them. One scan of the corpus, no N² anywhere.
+  /** `cells = (vec_id, cell, carry…)` exploded to one row per bit-masked
+    * band key: (carry…, m, key) with key = cell with bit m cleared. Two
+    * cells share a key iff they agree on all bits or differ in exactly
+    * bit m — the hamming-≤1 banding every sign-LSH pair join runs.
     */
-  def annTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int, dim: Int = 64): DataFrame = {
-    val c = withCells(corpus, bits, dim)
-    val probes = array(
-      col("cell") +: (0 until bits).map(b => col("cell").bitwiseXOR(lit(1L << b))): _*)
-    val q = withCells(queries, bits, dim)
-      .select(
-        col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        explode(probes).as("probe"))
-    val scored = c
-      .join(broadcast(q), col("cell") === col("probe") && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id"),
-        VectorFunctions.cosine(col("embedding"), col("q_emb")).as("score"),
-      )
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
-  }
+  private def bandKeys(cells: DataFrame, bits: Int, carry: String*): DataFrame =
+    cells.select(carry.map(col) :+
+      explode(array((0 until bits).map(b =>
+        struct(lit(b).as("m"), col("cell").bitwiseAND(lit(~(1L << b))).as("key"))): _*)).as("bk"): _*)
+      .select(carry.map(col) ++ Seq(col("bk.m").as("m"), col("bk.key").as("key")): _*)
 
-  // ------------------------------------------------------------------
-  // Spherical k-means coarse quantizer — entirely DataFrame ops, no
-  // driver-side math. Where sign-LSH cells are data-independent,
-  // k-means cells ADAPT to the corpus (a natural cluster maps to its
-  // own cell even when it straddles a hyperplane), at the cost of a
-  // few extra passes at index-build time. Standard IVF practice:
-  // build once, reuse for many queries.
-  // ------------------------------------------------------------------
-
-  /** `iters` Lloyd iterations with cosine assignment (spherical
-    * k-means). Returns the final centroids as (cell, centroid) — one
-    * row per cell, array<float> centroid.
-    *
-    * Every step is relational and executor-side:
-    *  - init: k deterministic seeds (best-spread not attempted; the
-    *    xxhash64 order is stable run-to-run, which matters more here —
-    *    a retry must build the same index);
-    *  - assign: corpus ⋈ broadcast(centroids), argmax cosine per
-    *    vector via the native codegen'd [[VectorFunctions.cosine]];
-    *  - update: posexplode the assigned embeddings → per-(cell, dim)
-    *    mean → re-assemble arrays with `array_sort(collect_list)`.
-    * The iterations run on [[graft.ops.Rounds.fixed]] (k tiny rows
-    * pinned per iteration).
+  /** The undirected collisions of a [[bandKeys]] frame: `a`/`b`-aliased
+    * row pairs sharing a band key, a.vec_id < b.vec_id. Same-cell pairs
+    * collide on every key, so consumers dedupe.
     */
-  def kmeansCentroids(corpus: DataFrame, cells: Int, iters: Int = 3): DataFrame = {
-    require(cells > 0 && iters >= 1)
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val seeds = emb
-      .withColumn("__h", xxhash64(col("vec_id")))
-      .orderBy("__h")
-      .limit(cells)
-      .select(
-        (row_number().over(Window.orderBy("__h")) - 1).as("cell"),
-        col("embedding").as("centroid"))
-    // a cell can lose all members; its centroid simply drops out
-    // (fewer live cells — harmless, assignment is argmax over live)
-    graft.ops.Rounds.fixed(seeds, iters) { centroids =>
-      assignCells(emb, centroids)
-        .join(emb, "vec_id")
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(avg(col("v")).as("m"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(
-          col("cell"),
-          transform(col("pm"), x => x.getField("m").cast("float")).as("centroid"))
-    }
-  }
+  private def bandCollisions(banded: DataFrame): DataFrame =
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.m") === col("b.m") && col("a.key") === col("b.key") &&
+          col("a.vec_id") < col("b.vec_id"))
 
-  /** Argmax-cosine cell assignment of `emb` (vec_id, embedding) against
-    * `centroids` (cell, centroid): one broadcast join + one
-    * partial-aggregable max (map-side combined — cheaper than a window
-    * sort, which cannot partial-aggregate). Deterministic tie-break on
-    * lowest cell id via the negated-cell struct component.
-    */
-  def assignCells(emb: DataFrame, centroids: DataFrame): DataFrame =
-    emb
-      .join(broadcast(centroids))
-      .select(
-        col("vec_id"),
-        struct(
-          VectorFunctions.cosine(col("embedding"), col("centroid")).as("cos"),
-          (-col("cell")).as("negCell")).as("sc"))
-      .groupBy("vec_id")
-      .agg(max(col("sc")).as("best"))
-      .select(col("vec_id"), (-col("best.negCell")).cast("int").as("cell"))
+  // -------------------------------------------------------------------
+  // Exact cosine rules over scored pairs (dot_fp, na, nb), one
+  // definition each: cos ≥ tn/td ⟺ d ≥ 0 ∧ td²·d² ≥ tn²·nₐ·n_b,
+  // cross-multiplied in DECIMAL(38,0) by VectorFunctions.prodCmp3 — no
+  // float decision anywhere, so every oracle replays them.
+  // -------------------------------------------------------------------
 
-  /** IVF top-k under the k-means quantizer with nprobe > 1: each query
-    * searches its `nprobe` nearest cells. Index build
-    * ([[kmeansCentroids]]) is the expensive once-per-corpus step; the
-    * query path is a broadcast of (query × probes) against the
-    * cell-partitioned corpus — identical join shape to [[annTopK]].
+  /** Rejects a cosine threshold tNum/tDen outside (0, 1). */
+  private def requireThreshold(tNum: Int, tDen: Int): Unit =
+    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
+
+  /** Rejects a cosine band [lo, hi) that is not 0 < lo < hi. */
+  private def requireBand(loNum: Int, loDen: Int, hiNum: Int, hiDen: Int): Unit =
+    require(loNum > 0 && loDen > 0 && hiNum > 0 && hiDen > 0 &&
+      loNum.toLong * hiDen < hiNum.toLong * loDen, "band must be 0 < lo < hi")
+
+  /** The sign of tDen²·d² − tNum²·nₐ·n_b. */
+  private def cosCmp(tNum: Int, tDen: Int): Column =
+    VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), tDen.toLong * tDen,
+      col("na"), col("nb"), tNum.toLong * tNum)
+
+  /** cos ≥ tNum/tDen. */
+  private def cosAtLeast(tNum: Int, tDen: Int): Column =
+    col("dot_fp") >= 0 && cosCmp(tNum, tDen) >= 0
+
+  /** loNum/loDen ≤ cos < hiNum/hiDen. lo > 0 ⇒ d ≥ 0 on every survivor,
+    * so the upper test needs no sign branch.
     */
-  def kmeansTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      cells: Int,
-      iters: Int = 3,
-      nprobe: Int = 2,
-  ): DataFrame = {
-    val centroids = kmeansCentroids(corpus, cells, iters)
-    val c = corpus.join(assignCells(corpus.select(col("vec_id"), col("embedding")), centroids), "vec_id")
-    val qScored = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .join(broadcast(centroids))
-      .select(
-        col("query_id"), col("q_emb"), col("cell"),
-        VectorFunctions.cosine(col("q_emb"), col("centroid")).as("ccos"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("ccos"), asc("cell"))
-    val probes = qScored
-      .withColumn("__rn", row_number().over(wq))
-      .where(col("__rn") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("cell"))
-    val scored = c
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id"),
-        VectorFunctions.cosine(col("embedding"), col("q_emb")).as("score"))
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
-  }
+  private def cosInBand(loNum: Int, loDen: Int, hiNum: Int, hiDen: Int): Column =
+    col("dot_fp") >= 0 && cosCmp(loNum, loDen) >= 0 && cosCmp(hiNum, hiDen) < 0
 
   // -------------------------------------------------------------------
   // FIXED-POINT spherical k-means (q42's r9 form): every decision the
@@ -260,10 +150,8 @@ object SimilarityPipeline {
   // int64 arithmetic, so a DuckDB oracle replays the whole algorithm
   // verbatim and the output hash-matches cross-engine (the q29/q92
   // fix-point idiom extended to an ITERATIVE algorithm, the q122
-  // pagerank precedent). The float kmeansCentroids/kmeansTopK above
-  // stay as the documented production form (cheaper per step, no
-  // integer-width preconditions); SimilarityPipelineSpec pins the two
-  // forms' recall agreement.
+  // pagerank precedent). It is the one k-means form;
+  // SimilarityPipelineSpec pins its recall against bruteForceTopK.
   //
   // Integer-width argument (unit-norm inputs, scale S=1e7, centroid
   // scale CS=1e6, dim 64 — every bound N-INDEPENDENT except the raw
@@ -338,12 +226,19 @@ object SimilarityPipeline {
   }
 
   /** Argmax-integer-dot assignment of `fp = (vec_id, q)` against
-    * `cents = (cell, cent)` — [[assignCells]]'s shape (broadcast join +
-    * partial-aggregable max over a (dot, −cell) struct, tie → lowest
-    * cell) with the float cosine replaced by [[VectorFunctions.dotLong]].
+    * `cents = (cell, cent)`: one broadcast join + [[bestCell]].
     */
   def assignCellsFp(fp: DataFrame, cents: DataFrame): DataFrame =
-    fp.join(broadcast(cents))
+    bestCell(fp.join(broadcast(cents)))
+
+  /** Per vec_id of `pairs = (vec_id, q, cell, cent, …)`, the cell whose
+    * centroid has the largest integer dot with q, tie → lowest cell: a
+    * partial-aggregable max over a (dot, −cell) struct (map-side
+    * combined — cheaper than a window sort, which cannot
+    * partial-aggregate). Returns (vec_id, cell).
+    */
+  private def bestCell(pairs: DataFrame): DataFrame =
+    pairs
       .select(
         col("vec_id"),
         struct(
@@ -353,8 +248,59 @@ object SimilarityPipeline {
       .agg(max(col("sc")).as("best"))
       .select(col("vec_id"), (-col("best.negCell")).cast("int").as("cell"))
 
-  /** IVF top-k under the fixed-point k-means quantizer: the
-    * hash-matchable form of [[kmeansTopK]]. Same plan shape — index
+  /** The corpus quantized to `(vec_id, q, extra…)` at `scale` and
+    * pinned: every fixed-point operator reads it from several joins
+    * and Lloyd rounds (at production scale this frame is the persisted
+    * fp ledger).
+    */
+  private def pinnedFp(corpus: DataFrame, scale: Long, extra: Column*): DataFrame =
+    corpus
+      .select(col("vec_id") +: VectorFunctions.quantizeFp(col("embedding"), scale).as("q") +: extra: _*)
+      .pinLineage()
+
+  /** `queries` quantized to (query_id, qq) at `scale`. */
+  private def quantizedQueries(queries: DataFrame, scale: Long): DataFrame =
+    queries.select(
+      col("vec_id").as("query_id"),
+      VectorFunctions.quantizeFp(col("embedding"), scale).as("qq"))
+
+  /** q29's exact ranking key over (dot_fp, n_fp): sign(d)·(d²·10⁴ div n)
+    * — per query the query norm is constant, so the key is monotone in
+    * cosine at 1e-18 resolution.
+    */
+  private def signedRankFp: Column =
+    when(col("dot_fp") < 0, lit(-1L)).otherwise(lit(1L)) *
+      VectorFunctions.rankFp(col("dot_fp"), col("n_fp"))
+
+  /** The IVF search tail: each query's `nprobe` best cells among
+    * `cellCands = (query_id, qq, cell, cent, …)` (integer dot, tie →
+    * lowest cell), then the probed cells' members of
+    * `assigned = (vec_id, q, cell)` ranked by q29's exact key, top `k`
+    * per query. Output (query_id, vec_id, rank_fp).
+    */
+  private def probeAndRank(
+      assigned: DataFrame, cellCands: DataFrame, nprobe: Int, k: Int): DataFrame = {
+    val wq = Window.partitionBy("query_id").orderBy(desc("cdot"), asc("cell"))
+    val probes = cellCands
+      .select(col("query_id"), col("qq"), col("cell"),
+        VectorFunctions.dotLong(col("qq"), col("cent")).as("cdot"))
+      .withColumn("__rn", row_number().over(wq))
+      .where(col("__rn") <= nprobe)
+      .select(col("query_id"), col("qq"), col("cell"))
+    val w = Window.partitionBy("query_id").orderBy(desc("rank_fp"), asc("vec_id"))
+    assigned
+      .join(broadcast(probes), Seq("cell"))
+      .where(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        VectorFunctions.dotLong(col("q"), col("qq")).as("dot_fp"),
+        VectorFunctions.dotLong(col("q"), col("q")).as("n_fp"))
+      .select(col("query_id"), col("vec_id"), signedRankFp.as("rank_fp"))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k)
+      .select("query_id", "vec_id", "rank_fp")
+  }
+
+  /** IVF top-k under the fixed-point k-means quantizer (q42): index
     * build is the once-per-corpus cost, queries probe their `nprobe`
     * best cells (integer dot, tie → lowest cell), candidates ranked by
     * q29's exact integer key (query norm constant per group, candidate
@@ -370,38 +316,10 @@ object SimilarityPipeline {
       nprobe: Int = 2,
       scale: Long = 10000000L,
   ): DataFrame = {
-    // the quantized corpus is read by every Lloyd round, the final
-    // assignment AND the ranking join — pin it once (at production
-    // scale this frame is the persisted fp ledger)
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    val fp = pinnedFp(corpus, scale)
     val cents = kmeansCentroidsFp(fp, cells, iters)
     val assigned = fp.join(assignCellsFp(fp, cents), "vec_id")
-    val qfp = queries.select(
-      col("vec_id").as("query_id"),
-      VectorFunctions.quantizeFp(col("embedding"), scale).as("qq"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cdot"), asc("cell"))
-    val probes = qfp
-      .join(broadcast(cents))
-      .select(col("query_id"), col("qq"), col("cell"),
-        VectorFunctions.dotLong(col("qq"), col("cent")).as("cdot"))
-      .withColumn("__rn", row_number().over(wq))
-      .where(col("__rn") <= nprobe)
-      .select(col("query_id"), col("qq"), col("cell"))
-    val w = Window.partitionBy("query_id").orderBy(desc("rank_fp"), asc("vec_id"))
-    assigned
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFunctions.dotLong(col("q"), col("qq")).as("dot_fp"),
-        VectorFunctions.dotLong(col("q"), col("q")).as("n_fp"))
-      .select(col("query_id"), col("vec_id"),
-        (when(col("dot_fp") < 0, lit(-1L)).otherwise(lit(1L)) *
-          VectorFunctions.rankFp(col("dot_fp"), col("n_fp"))).as("rank_fp"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select("query_id", "vec_id", "rank_fp")
+    probeAndRank(assigned, quantizedQueries(queries, scale).join(broadcast(cents)), nprobe, k)
   }
 
   /** SEMANTIC dedup under the fixed-point k-means quantizer (q259) —
@@ -430,17 +348,13 @@ object SimilarityPipeline {
   def semanticDedupFp(
       corpus: DataFrame, cells: Int, tNum: Int, tDen: Int,
       iters: Int = 2, scale: Long = 10000000L): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    requireThreshold(tNum, tDen)
+    val fp = pinnedFp(corpus, scale)
     val cents = kmeansCentroidsFp(fp, cells, iters)
     // pin: the n·cells assignment pass is the expensive post-cluster
     // step — both sides of the self-join read THIS frame, not two
     // recomputations of it
     val assigned = fp.join(assignCellsFp(fp, cents), "vec_id").pinLineage()
-    // minimal witness per dropped vector — the per-vb frame is the
-    // (tiny) dup-pair set, never the corpus
     semanticDupDrops(assigned, tNum, tDen)
   }
 
@@ -466,11 +380,8 @@ object SimilarityPipeline {
   def semanticDecontamFp(
       corpus: DataFrame, isBench: Column, cells: Int, tNum: Int, tDen: Int,
       iters: Int = 2, scale: Long = 10000000L): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"),
-        isBench.as("is_bench"))
-      .pinLineage()
+    requireThreshold(tNum, tDen)
+    val fp = pinnedFp(corpus, scale, isBench.as("is_bench"))
     val cents = kmeansCentroidsFp(fp.select("vec_id", "q"), cells, iters)
     val assigned = fp
       .join(assignCellsFp(fp.select("vec_id", "q"), cents), "vec_id")
@@ -547,34 +458,45 @@ object SimilarityPipeline {
     */
   private[llm] def probedAssignFp(
       fp: DataFrame, cents: DataFrame, coarse: DataFrame): DataFrame = {
-    val fg = cents.join(broadcast(coarse))
-      .select(col("cell"), col("cent"),
-        struct(
-          VectorFunctions.dotLong(col("cent"), col("gcent")).as("dot"),
-          (-col("gcell")).as("ng")).as("sc"))
-      .groupBy("cell", "cent")
-      .agg(max(col("sc")).as("b"))
-      .select(col("cell"), col("cent"), (-col("b.ng")).cast("int").as("gcell"))
-    val live = fg.select("gcell").distinct()
-    val pg = fp.join(broadcast(coarse.join(live, "gcell")))
-      .select(col("vec_id"),
-        struct(
-          VectorFunctions.dotLong(col("q"), col("gcent")).as("dot"),
-          (-col("gcell")).as("ng")).as("sc"))
-      .groupBy("vec_id")
-      .agg(max(col("sc")).as("b"))
-      .select(col("vec_id"), (-col("b.ng")).cast("int").as("gcell"))
+    val (fg, live) = coarseOf(cents, coarse)
+    val pg = bestCoarse(fp.join(broadcast(live)), Seq("vec_id"), "q")
     // the probe: points meet ONLY their coarse cell's fine
     // centroids — a gcell-keyed join, never the dense n·cells dot
-    fp.join(pg, "vec_id")
-      .join(fg, "gcell")
-      .select(col("vec_id"),
+    bestCell(fp.join(pg, "vec_id").join(fg, "gcell"))
+  }
+
+  /** An index's fine→coarse map: each fine centroid's coarse cell
+    * (cell, cent, gcell) by [[bestCoarse]], and the LIVE coarse
+    * centroids (gcell, gcent) — those with at least one fine member,
+    * the only ones a point or query may descend into (a coarse cell
+    * can lose all fine members, and every point must stay assigned).
+    */
+  private def coarseOf(cents: DataFrame, coarse: DataFrame): (DataFrame, DataFrame) = {
+    val fg = bestCoarse(cents.join(broadcast(coarse)), Seq("cell", "cent"), "cent")
+    (fg, coarse.join(fg.select("gcell").distinct(), "gcell"))
+  }
+
+  /** Per `keys` row of `pairs = (keys…, gcell, gcent, …)`, the coarse
+    * cell whose centroid has the largest integer dot with `vec`, tie →
+    * lowest gcell ([[bestCell]]'s partial-aggregable struct max).
+    * Returns (keys…, gcell).
+    */
+  private def bestCoarse(pairs: DataFrame, keys: Seq[String], vec: String): DataFrame =
+    pairs
+      .select(keys.map(col) :+
         struct(
-          VectorFunctions.dotLong(col("q"), col("cent")).as("dot"),
-          (-col("cell")).as("negCell")).as("sc"))
-      .groupBy("vec_id")
-      .agg(max(col("sc")).as("best"))
-      .select(col("vec_id"), (-col("best.negCell")).cast("int").as("cell"))
+          VectorFunctions.dotLong(col(vec), col("gcent")).as("dot"),
+          (-col("gcell")).as("ng")).as("sc"): _*)
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(max(col("sc")).as("b"))
+      .select(keys.map(col) :+ (-col("b.ng")).cast("int").as("gcell"): _*)
+
+  /** The scaled geometry's cell count, max(2, n div targetCell):
+    * constant expected cluster size, so intra-cell pair work is linear.
+    */
+  private def scaledCells(targetCell: Int, n: => Long): Int = {
+    require(targetCell > 1, "targetCell must exceed 1")
+    math.max(2L, n / targetCell).toInt
   }
 
   /** q259's semantic dedup at the 100 TB shape: cells = max(2,
@@ -589,13 +511,9 @@ object SimilarityPipeline {
       corpus: DataFrame, tNum: Int, tDen: Int,
       targetCell: Int = 32, iters: Int = 2, scale: Long = 10000000L,
       knownRows: Option[Long] = None): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
-    require(targetCell > 1, "targetCell must exceed 1")
-    val n = knownRows.getOrElse(corpus.count())
-    val cells = math.max(2L, n / targetCell).toInt
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    requireThreshold(tNum, tDen)
+    val cells = scaledCells(targetCell, knownRows.getOrElse(corpus.count()))
+    val fp = pinnedFp(corpus, scale)
     val assigned = fp.join(ivfAssignCellsFp(fp, cells, iters), "vec_id").pinLineage()
     semanticDupDrops(assigned, tNum, tDen)
   }
@@ -609,14 +527,9 @@ object SimilarityPipeline {
       corpus: DataFrame, isBench: Column, tNum: Int, tDen: Int,
       targetCell: Int = 32, iters: Int = 2, scale: Long = 10000000L,
       knownRows: Option[Long] = None): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
-    require(targetCell > 1, "targetCell must exceed 1")
-    val n = knownRows.getOrElse(corpus.count())
-    val cells = math.max(2L, n / targetCell).toInt
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"),
-        isBench.as("is_bench"))
-      .pinLineage()
+    requireThreshold(tNum, tDen)
+    val cells = scaledCells(targetCell, knownRows.getOrElse(corpus.count()))
+    val fp = pinnedFp(corpus, scale, isBench.as("is_bench"))
     val assigned = fp
       .join(ivfAssignCellsFp(fp.select("vec_id", "q"), cells, iters), "vec_id")
       .pinLineage()
@@ -646,14 +559,10 @@ object SimilarityPipeline {
   def semanticDedupIncrementalFp(
       corpus: DataFrame, isIncoming: Column, tNum: Int, tDen: Int,
       targetCell: Int = 32, iters: Int = 2, scale: Long = 10000000L): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum < tDen, "threshold must be in (0,1)")
-    require(targetCell > 1, "targetCell must exceed 1")
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"),
-        isIncoming.as("inc"))
-      .pinLineage()
+    requireThreshold(tNum, tDen)
+    val fp = pinnedFp(corpus, scale, isIncoming.as("inc"))
     val base = fp.where(!col("inc")).select("vec_id", "q")
-    val cells = math.max(2L, base.count() / targetCell).toInt
+    val cells = scaledCells(targetCell, base.count())
     val (_, cents, coarse) = ivfIndexFp(base, cells, iters)
     val assigned = fp
       .join(probedAssignFp(fp.select("vec_id", "q"), cents, coarse), "vec_id")
@@ -670,9 +579,7 @@ object SimilarityPipeline {
     * one decision path byte for byte.
     */
   private def semanticDupDrops(assigned: DataFrame, tNum: Int, tDen: Int): DataFrame = {
-    val tn2 = tNum.toLong * tNum
-    val td2 = tDen.toLong * tDen
-    val dup = assigned.as("a")
+    val pairs = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(
@@ -680,19 +587,7 @@ object SimilarityPipeline {
         VectorFunctions.dotLong(col("a.q"), col("b.q")).as("dot_fp"),
         VectorFunctions.dotLong(col("a.q"), col("a.q")).as("na"),
         VectorFunctions.dotLong(col("b.q"), col("b.q")).as("nb"))
-      // na/nb > 0 excludes zero quantized vectors: 0 ≥ 0 would pass
-      // the cross-multiplied test vacuously and the cos2_bp div by
-      // na·nb = 0 would throw under ANSI (r9-ADVICE); a zero vector
-      // has no cosine to anything, so it can never be a dup
-      .where(col("dot_fp") >= 0 && col("na") > 0 && col("nb") > 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), td2, col("na"), col("nb"), tn2) >= 0)
-    val w = Window.partitionBy("vb").orderBy(asc("va"))
-    dup
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select(
-        col("vb").as("vec_id"), col("va").as("keeper"), col("cell").cast("long").as("cell"),
-        VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
+    minimalWitness(pairs, tNum, tDen, flagged = "vb", witness = "va", witnessAs = "keeper")
   }
 
   /** The decontamination hit rule over an assigned frame
@@ -703,24 +598,36 @@ object SimilarityPipeline {
       .select(col("vec_id").as("tv"), col("q").as("tq"), col("cell"))
     val bench = assigned.where(col("is_bench"))
       .select(col("vec_id").as("bv"), col("q").as("bq"), col("cell"))
-    val tn2 = tNum.toLong * tNum
-    val td2 = tDen.toLong * tDen
-    val hits = train
+    val pairs = train
       .join(bench, Seq("cell"))
       .select(
         col("tv"), col("bv"), col("cell"),
         VectorFunctions.dotLong(col("tq"), col("bq")).as("dot_fp"),
         VectorFunctions.dotLong(col("tq"), col("tq")).as("na"),
         VectorFunctions.dotLong(col("bq"), col("bq")).as("nb"))
-      // na/nb > 0: see semanticDupDrops
-      .where(col("dot_fp") >= 0 && col("na") > 0 && col("nb") > 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), td2, col("na"), col("nb"), tn2) >= 0)
-    val w = Window.partitionBy("tv").orderBy(asc("bv"))
-    hits
+    minimalWitness(pairs, tNum, tDen, flagged = "tv", witness = "bv", witnessAs = "bench_witness")
+  }
+
+  /** The tail of the drop and hit rules: scored intra-cell pairs
+    * (`flagged`, `witness`, cell, dot_fp, na, nb) that clear
+    * cos ≥ tNum/tDen, reduced to each flagged vector's minimal witness
+    * — the per-flagged frame is the (tiny) hit set, never the corpus.
+    * Output (vec_id, `witnessAs`, cell, cos2_bp).
+    */
+  private def minimalWitness(
+      pairs: DataFrame, tNum: Int, tDen: Int,
+      flagged: String, witness: String, witnessAs: String): DataFrame = {
+    val w = Window.partitionBy(flagged).orderBy(asc(witness))
+    pairs
+      // na/nb > 0 excludes zero quantized vectors: 0 ≥ 0 would pass
+      // the cross-multiplied test vacuously and the cos2_bp div by
+      // na·nb = 0 would throw under ANSI (r9-ADVICE); a zero vector
+      // has no cosine to anything, so it can never be a dup
+      .where(col("dot_fp") >= 0 && col("na") > 0 && col("nb") > 0 && cosCmp(tNum, tDen) >= 0)
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .select(
-        col("tv").as("vec_id"), col("bv").as("bench_witness"),
+        col(flagged).as("vec_id"), col(witness).as(witnessAs),
         col("cell").cast("long").as("cell"),
         VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
   }
@@ -733,15 +640,7 @@ object SimilarityPipeline {
     */
   def annNearDupPairs(corpus: DataFrame, threshold: Double, bits: Int, dim: Int = 64): DataFrame = {
     val e = withCells(corpus, bits, dim).select(col("vec_id"), col("cell"), col("embedding"))
-    val banded = e.select(
-      col("vec_id"),
-      explode(array((0 until bits).map(b =>
-        struct(lit(b).as("m"), col("cell").bitwiseAND(lit(~(1L << b))).as("key"))): _*)).as("bk"))
-      .select(col("vec_id"), col("bk.m").as("m"), col("bk.key").as("key"))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.m") === col("b.m") && col("a.key") === col("b.key") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val cand = bandCollisions(bandKeys(e, bits, "vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
       .distinct() // same-cell pairs collide on every masked key
     val emb = corpus.select(col("vec_id"), col("embedding"))
@@ -753,23 +652,24 @@ object SimilarityPipeline {
   }
 
   // ------------------------------------------------------------------
-  // Portable forms (round 8): same cascade shapes as withCells /
-  // annTopK / annNearDupPairs, but every float decision replaced by an
-  // exact-integer one (md5-derived planes, fixed-point dots, q29's
-  // ranking key, cross-multiplied threshold) so the WHOLE candidate
-  // cascade hash-matches a DuckDB oracle — the q31/q32 r7 precedent
-  // applied to the ANN axis. The splitmix64/float forms above remain
-  // the at-scale variants, recall-parity-pinned in spec.
+  // Portable forms (round 8): the sign-LSH cascade with every float
+  // decision replaced by an exact-integer one (md5-derived planes,
+  // fixed-point dots, q29's ranking key, cross-multiplied threshold)
+  // so the WHOLE candidate cascade hash-matches a DuckDB oracle — the
+  // q31/q32 r7 precedent applied to the ANN axis. These are the forms
+  // q37, q38, q217 and q258 run.
   // ------------------------------------------------------------------
 
   /** [[withCells]] with md5-derived planes and integer sign decisions. */
   def withCellsPortable(corpus: DataFrame, bits: Int, dim: Int = 64): DataFrame =
     corpus.withColumn("cell", VectorFunctions.signBucketPortable(col("embedding"), dim, bits))
 
-  /** [[annTopK]] with the portable quantizer and q29's exact ranking
-    * key sign(d)·(d²·10⁴ div n) — per query, the anchor norm is
-    * constant, so the key is monotone in cosine at 1e-18 resolution;
-    * ties broken by vec_id. Output is all exact int64.
+  /** ANN top-k under the portable quantizer with hamming-≤1
+    * multiprobe: each (broadcast) query scores candidates from bits+1
+    * cells, ranked by q29's exact key sign(d)·(d²·10⁴ div n) — per
+    * query, the anchor norm is constant, so the key is monotone in
+    * cosine at 1e-18 resolution; ties broken by vec_id. One scan of
+    * the corpus, no N² anywhere. Output is all exact int64.
     */
   def annTopKPortable(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int, dim: Int = 64): DataFrame = {
     val S = graft.llm.LlmQueries.Q29Scale
@@ -788,21 +688,11 @@ object SimilarityPipeline {
         VectorFunctions.dotFp(col("embedding"), col("q_emb"), S).as("dot_fp"),
         VectorFunctions.dotFp(col("embedding"), col("embedding"), S).as("n_fp"),
       )
-      .select(
-        col("query_id"), col("vec_id"), col("dot_fp"),
-        (when(col("dot_fp") < 0, lit(-1L)).otherwise(lit(1L)) *
-          VectorFunctions.rankFp(col("dot_fp"), col("n_fp"))).as("rank_fp"),
-      )
+      .select(col("query_id"), col("vec_id"), col("dot_fp"), signedRankFp.as("rank_fp"))
     val w = Window.partitionBy("query_id").orderBy(desc("rank_fp"), asc("vec_id"))
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
   }
 
-  /** [[annNearDupPairs]] with the portable quantizer and an EXACT
-    * threshold: cos ≥ tn/td ⟺ d ≥ 0 ∧ td²·d² ≥ tn²·nₐ·n_b — all in
-    * DECIMAL(38,0), no float anywhere. Emits the exact integer
-    * `cos2_bp` = d²·10⁴ div (nₐ·n_b) (squared cosine in basis points)
-    * instead of a rounded float score.
-    */
   /** The portable cascade's shared core: banded hamming-≤1 candidate
     * pairs with their exact fixed-point dot and squared norms —
     * (va, vb, dot_fp, na, nb) — surviving `bandPred` (an exact integer
@@ -837,15 +727,7 @@ object SimilarityPipeline {
       VectorFunctions.quantizeFp(col("embedding"), S).as("qv"))
     val withNorm = e.select(col("vec_id"), col("cell"), col("qv"),
       VectorFunctions.dotLong(col("qv"), col("qv")).as("nq"))
-    val banded = withNorm.select(
-      col("vec_id"), col("qv"), col("nq"),
-      explode(array((0 until bits).map(b =>
-        struct(lit(b).as("m"), col("cell").bitwiseAND(lit(~(1L << b))).as("key"))): _*)).as("bk"))
-      .select(col("vec_id"), col("qv"), col("nq"), col("bk.m").as("m"), col("bk.key").as("key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.m") === col("b.m") && col("a.key") === col("b.key") &&
-          col("a.vec_id") < col("b.vec_id"))
+    bandCollisions(bandKeys(withNorm, bits, "vec_id", "qv", "nq"))
       .select(
         col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
         VectorFunctions.dotLong(col("a.qv"), col("b.qv")).as("dot_fp"),
@@ -854,12 +736,15 @@ object SimilarityPipeline {
       .distinct() // same-cell SURVIVORS collide on every masked key
   }
 
+  /** Near-dup pairs under the portable quantizer and an EXACT
+    * threshold: cos ≥ tn/td ⟺ d ≥ 0 ∧ td²·d² ≥ tn²·nₐ·n_b — all in
+    * DECIMAL(38,0), no float anywhere. Emits the exact integer
+    * `cos2_bp` = d²·10⁴ div (nₐ·n_b) (squared cosine in basis points)
+    * instead of a rounded float score.
+    */
   def annNearDupPairsPortable(corpus: DataFrame, tNum: Int, tDen: Int, bits: Int, dim: Int = 64): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen, "threshold must be a rational in (0, 1]")
-    portableVerifiedPairs(corpus, bits, dim,
-      col("dot_fp") >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), tDen.toLong * tDen,
-          col("na"), col("nb"), tNum.toLong * tNum) >= 0)
+    portableVerifiedPairs(corpus, bits, dim, cosAtLeast(tNum, tDen))
       .select(
         col("va"), col("vb"), col("dot_fp"),
         VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"),
@@ -868,27 +753,19 @@ object SimilarityPipeline {
 
   /** Hard-negative mining on the portable cascade (q217's r8 form):
     * candidate pairs inside the cosine band [loNum/loDen, hiNum/hiDen)
-    * — both bounds as EXACT cross-multiplied integer tests (lo > 0 ⇒
-    * d ≥ 0 on every survivor, so the upper test needs no sign branch) —
-    * mirrored to both directions so every anchor ranks its own
-    * negatives, top-k per anchor by the q29 integer key computed
-    * against the NEGATIVE's norm (the anchor norm is constant within
-    * its ranking). Output is all exact int64.
+    * — both bounds as EXACT cross-multiplied integer tests — mirrored
+    * to both directions so every anchor ranks its own negatives
+    * ([[mirroredTopK]]). Output is all exact int64.
     */
   def annHardNegativesPortable(
       corpus: DataFrame, k: Int,
       loNum: Int, loDen: Int, hiNum: Int, hiDen: Int,
       bits: Int, dim: Int = 64): DataFrame = {
-    require(loNum > 0 && loDen > 0 && hiNum > 0 && hiDen > 0 &&
-      loNum.toLong * hiDen < hiNum.toLong * loDen, "band must be 0 < lo < hi")
+    requireBand(loNum, loDen, hiNum, hiDen)
     val band = portableVerifiedPairs(corpus, bits, dim,
       // the band test rides INTO the shared core, ahead of its pair
       // distinct — the dedup exchange carries band members only
-      col("dot_fp") >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), loDen.toLong * loDen,
-          col("na"), col("nb"), loNum.toLong * loNum) >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), hiDen.toLong * hiDen,
-          col("na"), col("nb"), hiNum.toLong * hiNum) < 0)
+      cosInBand(loNum, loDen, hiNum, hiDen))
       .select(col("va"), col("vb"), col("dot_fp"), col("na"), col("nb"))
       // the mirror union reads the band twice; without the pin the
       // whole candidate join (the expensive half) would run twice.
@@ -896,6 +773,17 @@ object SimilarityPipeline {
       // spark.graft.reliableCheckpoints durability hatch must keep
       // covering this path on lossy-executor clusters (r9 ADVICE fix)
       .pinLineage()
+    mirroredTopK(band, k)
+  }
+
+  /** The hard-negative tail over a pinned undirected band
+    * (va, vb, dot_fp, na, nb): each pair mirrored to both directions,
+    * then per anchor the top `k` negatives by the q29 integer key
+    * computed against the NEGATIVE's norm (the anchor norm is constant
+    * within its ranking; d ≥ 0 throughout the band, so the key is the
+    * plain quotient). Shared by q217 and q263.
+    */
+  private def mirroredTopK(band: DataFrame, k: Int): DataFrame = {
     val directed = band
       .select(col("va").as("anchor_id"), col("vb").as("negative_id"),
         col("dot_fp"), col("nb").as("n_neg"), col("na"), col("nb"))
@@ -904,12 +792,18 @@ object SimilarityPipeline {
           col("dot_fp"), col("na").as("n_neg"), col("na"), col("nb")))
       .select(
         col("anchor_id"), col("negative_id"), col("dot_fp"),
-        // d ≥ 0 throughout the band, so the key is the plain quotient
         VectorFunctions.rankFp(col("dot_fp"), col("n_neg")).as("rank_fp"),
-        VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"),
-      )
+        VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
+    topKPerAnchor(directed, k)
+  }
+
+  /** Per anchor of `scored = (anchor_id, negative_id, dot_fp, rank_fp,
+    * cos2_bp)`, the `k` best by (rank_fp DESC, negative_id ASC):
+    * (anchor_id, rank, negative_id, dot_fp, cos2_bp).
+    */
+  private def topKPerAnchor(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("anchor_id").orderBy(desc("rank_fp"), asc("negative_id"))
-    directed
+    scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("anchor_id"), col("rank").cast("long").as("rank"),
@@ -931,11 +825,6 @@ object SimilarityPipeline {
       corpus: DataFrame, bits: Int, cap: Int, dim: Int = 64): DataFrame = {
     require(cap > 0)
     val e = withCellsPortable(corpus, bits, dim).select(col("vec_id"), col("cell"))
-    val banded = e.select(
-      col("vec_id"),
-      explode(array((0 until bits).map(b =>
-        struct(lit(b).as("m"), col("cell").bitwiseAND(lit(~(1L << b))).as("key"))): _*)).as("bk"))
-      .select(col("vec_id"), col("bk.m").as("m"), col("bk.key").as("key"))
     // Enumeration shape (r10, measured): the candidate set goes
     // through a whole-stage-codegen HashAggregate distinct on two
     // int64 keys, then one per-anchor md5-order window. A bounded
@@ -959,10 +848,7 @@ object SimilarityPipeline {
     // dedup half the rows, and mirror AFTER the distinct — the
     // directed candidate set, md5 order, and cap selection are
     // byte-identical.
-    val undirected = banded.as("a")
-      .join(banded.as("b"),
-        col("a.m") === col("b.m") && col("a.key") === col("b.key") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val undirected = bandCollisions(bandKeys(e, bits, "vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
       .distinct() // same-cell pairs collide on every masked key
       // the mirror union reads the frame twice; the pin keeps the
@@ -1000,8 +886,7 @@ object SimilarityPipeline {
       corpus: DataFrame, k: Int,
       loNum: Int, loDen: Int, hiNum: Int, hiDen: Int,
       bits: Int, cap: Int, dim: Int = 64): DataFrame = {
-    require(loNum > 0 && loDen > 0 && hiNum > 0 && hiDen > 0 &&
-      loNum.toLong * hiDen < hiNum.toLong * loDen, "band must be 0 < lo < hi")
+    requireBand(loNum, loDen, hiNum, hiDen)
     val S = graft.llm.LlmQueries.Q29Scale
     val emb = corpus.select(col("vec_id"), col("embedding"))
     val scored = cappedDirectedCandidates(corpus, bits, cap, dim)
@@ -1012,21 +897,12 @@ object SimilarityPipeline {
         VectorFunctions.dotFp(col("ea"), col("eb"), S).as("dot_fp"),
         VectorFunctions.dotFp(col("ea"), col("ea"), S).as("na"),
         VectorFunctions.dotFp(col("eb"), col("eb"), S).as("nb"))
-      .where(col("dot_fp") >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), loDen.toLong * loDen,
-          col("na"), col("nb"), loNum.toLong * loNum) >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), hiDen.toLong * hiDen,
-          col("na"), col("nb"), hiNum.toLong * hiNum) < 0)
+      .where(cosInBand(loNum, loDen, hiNum, hiDen))
       .select(
         col("anchor_id"), col("negative_id"), col("dot_fp"),
         VectorFunctions.rankFp(col("dot_fp"), col("nb")).as("rank_fp"),
         VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
-    val w = Window.partitionBy("anchor_id").orderBy(desc("rank_fp"), asc("negative_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("anchor_id"), col("rank").cast("long").as("rank"),
-        col("negative_id"), col("dot_fp"), col("cos2_bp"))
+    topKPerAnchor(scored, k)
   }
 
   /** Hard-negative mining at the 100 TB shape (q263): q217's job —
@@ -1059,15 +935,9 @@ object SimilarityPipeline {
       loNum: Int, loDen: Int, hiNum: Int, hiDen: Int,
       targetCell: Int = 32, iters: Int = 2,
       knownRows: Option[Long] = None): DataFrame = {
-    require(loNum > 0 && loDen > 0 && hiNum > 0 && hiDen > 0 &&
-      loNum.toLong * hiDen < hiNum.toLong * loDen, "band must be 0 < lo < hi")
-    require(targetCell > 1, "targetCell must exceed 1")
-    val n = knownRows.getOrElse(corpus.count())
-    val cells = math.max(2L, n / targetCell).toInt
-    val S = graft.llm.LlmQueries.Q29Scale
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), S).as("q"))
-      .pinLineage()
+    requireBand(loNum, loDen, hiNum, hiDen)
+    val cells = scaledCells(targetCell, knownRows.getOrElse(corpus.count()))
+    val fp = pinnedFp(corpus, graft.llm.LlmQueries.Q29Scale)
     val assigned = fp
       .join(ivfAssignCellsFp(fp, cells, iters), "vec_id")
       .select(col("vec_id"), col("q"),
@@ -1083,30 +953,11 @@ object SimilarityPipeline {
         col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
         VectorFunctions.dotLong(col("a.q"), col("b.q")).as("dot_fp"),
         col("a.nq").as("na"), col("b.nq").as("nb"))
-      .where(col("dot_fp") >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), loDen.toLong * loDen,
-          col("na"), col("nb"), loNum.toLong * loNum) >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), hiDen.toLong * hiDen,
-          col("na"), col("nb"), hiNum.toLong * hiNum) < 0)
+      .where(cosInBand(loNum, loDen, hiNum, hiDen))
       // the mirror union reads the band twice; the pin keeps the pair
       // join (the expensive half) single-execution — q217's rationale
       .pinLineage()
-    val directed = band
-      .select(col("va").as("anchor_id"), col("vb").as("negative_id"),
-        col("dot_fp"), col("nb").as("n_neg"), col("na"), col("nb"))
-      .unionByName(band
-        .select(col("vb").as("anchor_id"), col("va").as("negative_id"),
-          col("dot_fp"), col("na").as("n_neg"), col("na"), col("nb")))
-      .select(
-        col("anchor_id"), col("negative_id"), col("dot_fp"),
-        VectorFunctions.rankFp(col("dot_fp"), col("n_neg")).as("rank_fp"),
-        VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
-    val w = Window.partitionBy("anchor_id").orderBy(desc("rank_fp"), asc("negative_id"))
-    directed
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("anchor_id"), col("rank").cast("long").as("rank"),
-        col("negative_id"), col("dot_fp"), col("cos2_bp"))
+    mirroredTopK(band, k)
   }
 
   /** IVF top-k search at the 100 TB shape (q264): [[kmeansTopKFp]]'s
@@ -1137,195 +988,26 @@ object SimilarityPipeline {
       nprobe: Int = 2,
       scale: Long = 10000000L,
       knownRows: Option[Long] = None): DataFrame = {
-    require(targetCell > 1, "targetCell must exceed 1")
-    val n = knownRows.getOrElse(corpus.count())
-    val cells = math.max(2L, n / targetCell).toInt
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    val cells = scaledCells(targetCell, knownRows.getOrElse(corpus.count()))
+    val fp = pinnedFp(corpus, scale)
     val (cellOf, cents, coarse) = ivfIndexFp(fp, cells, iters)
     val assigned = fp.join(cellOf, "vec_id").pinLineage()
-    // fine→coarse for the FINAL centroids — the same argmax the last
-    // assignment pass ran (dot DESC, gcell ASC), rebuilt here for the
-    // query descent
-    val fg = cents.join(broadcast(coarse))
-      .select(col("cell"), col("cent"),
-        struct(
-          VectorFunctions.dotLong(col("cent"), col("gcent")).as("dot"),
-          (-col("gcell")).as("ng")).as("sc"))
-      .groupBy("cell", "cent")
-      .agg(max(col("sc")).as("b"))
-      .select(col("cell"), col("cent"), (-col("b.ng")).cast("int").as("gcell"))
-    val live = fg.select("gcell").distinct()
-    val qfp = queries.select(
-      col("vec_id").as("query_id"),
-      VectorFunctions.quantizeFp(col("embedding"), scale).as("qq"))
-    // query → best live coarse cell (a coarse cell with no fine
-    // members never ranks — ivfAssignCellsFp's rail)
-    val qg = qfp
-      .join(broadcast(coarse.join(live, "gcell")))
-      .select(col("query_id"), col("qq"),
-        struct(
-          VectorFunctions.dotLong(col("qq"), col("gcent")).as("dot"),
-          (-col("gcell")).as("ng")).as("sc"))
-      .groupBy("query_id", "qq")
-      .agg(max(col("sc")).as("b"))
-      .select(col("query_id"), col("qq"), (-col("b.ng")).cast("int").as("gcell"))
-    // nprobe best fine cells WITHIN the query's coarse cell
-    val wq = Window.partitionBy("query_id").orderBy(desc("cdot"), asc("cell"))
-    val probes = qg
-      .join(broadcast(fg), "gcell")
-      .select(col("query_id"), col("qq"), col("cell"),
-        VectorFunctions.dotLong(col("qq"), col("cent")).as("cdot"))
-      .withColumn("__rn", row_number().over(wq))
-      .where(col("__rn") <= nprobe)
-      .select(col("query_id"), col("qq"), col("cell"))
-    // candidates = probed cells' members, ranked by q29's exact key —
-    // kmeansTopKFp's tail verbatim
-    val w = Window.partitionBy("query_id").orderBy(desc("rank_fp"), asc("vec_id"))
-    assigned
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFunctions.dotLong(col("q"), col("qq")).as("dot_fp"),
-        VectorFunctions.dotLong(col("q"), col("q")).as("n_fp"))
-      .select(col("query_id"), col("vec_id"),
-        (when(col("dot_fp") < 0, lit(-1L)).otherwise(lit(1L)) *
-          VectorFunctions.rankFp(col("dot_fp"), col("n_fp"))).as("rank_fp"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select("query_id", "vec_id", "rank_fp")
+    // the final centroids' fine→coarse map — the same argmax the last
+    // assignment pass ran — for the query descent: query → best live
+    // coarse cell, then its nprobe best fine cells WITHIN that cell
+    val (fg, live) = coarseOf(cents, coarse)
+    val qg = bestCoarse(quantizedQueries(queries, scale).join(broadcast(live)), Seq("query_id", "qq"), "qq")
+    probeAndRank(assigned, qg.join(broadcast(fg), "gcell"), nprobe, k)
   }
 
   // -------------------------------------------------------------------
-  // PCA — the dimensionality reduction that fronts ANN at scale
-  // (project 64-dim embeddings to a few principal axes before
-  // bucketing/search). Fully declarative power iteration, the
-  // kmeansCentroids discipline: every iterate is a d-row DataFrame
-  // pinned by localCheckpoint; NOTHING is collected to the driver.
-
-  /** Sample covariance of the embedding corpus as a (i, j, c) frame
-    * (d² rows). The corpus-sized pass is the DOUBLE EXPLODE into
-    * (i, j, xi·xj) — generator-in-codegen, zero joins, no shuffle of
-    * raw pairs: the groupBy(i, j) partial-aggregates map-side, so the
-    * exchange carries d² rows PER PARTITION, independent of N. Means
-    * fold in algebraically afterwards (Σxixj − n·mi·mj)/(n−1) via two
-    * broadcast joins of the d-row mean table.
-    */
-  def covariance(corpus: DataFrame): DataFrame = {
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val e1 = emb.select(col("embedding"), posexplode(col("embedding")).as(Seq("i", "xi")))
-    val raw = e1
-      .select(col("i"), col("xi"), posexplode(col("embedding")).as(Seq("j", "xj")))
-      .groupBy("i", "j")
-      .agg(sum(col("xi").cast("double") * col("xj")).as("s"), count(lit(1)).as("n"))
-    val mean = emb
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .groupBy("i")
-      .agg(avg(col("xi").cast("double")).as("m"))
-    raw
-      .join(broadcast(mean.select(col("i"), col("m").as("mi"))), Seq("i"))
-      .join(broadcast(mean.select(col("i").as("j"), col("m").as("mj"))), Seq("j"))
-      .select(
-        col("i"), col("j"),
-        ((col("s") - col("n") * col("mi") * col("mj")) / (col("n") - 1)).as("c"))
-  }
-
-  /** Top-2 axes of a covariance frame by BLOCK orthogonal iteration
-    * (r7 — replaces the power-iterate-then-deflate-then-power-iterate
-    * form): both iterates ride ONE matvec join per round (the cov
-    * frame is scanned once for two columns, not once per axis), and
-    * the per-round Gram–Schmidt step keeps a2 EXACTLY orthogonal to a1
-    * at every round — the property the PCA-grid's distance-contraction
-    * recall guarantee rests on, now structural instead of a final
-    * correction. v1's sequence is IDENTICAL to plain power iteration
-    * (the GS step never feeds v2 back into v1); v2 converges to the
-    * second eigenvector at the standard subspace-iteration rate — and
-    * the d²-row DEFLATED MATRIX the old form materialized and
-    * checkpointed per call is gone, which at bench scale halved the
-    * loop's fixed-cost stage count. Rank-deficient guard: on a zero
-    * covariance (or a corpus of exact duplicates) w ≡ 0 and the norm
-    * is 0 — under ANSI the divide would THROW — so zero norms yield
-    * the honest zero axis: projections collapse to 0 and the grid
-    * consumers' cell-0 fallback keeps their recall contract.
-    * Returns the d-row (i, a1, a2) loading table, both signs pinned
-    * (non-negative loading sum).
-    */
-  def topTwoAxes(cov: DataFrame, iters: Int = 15): DataFrame = {
-    // The covariance frame is DIMENSION-sized (d² rows — KBs to MBs at
-    // any real d), but a 32-partition layout makes every iteration
-    // stage launch 32 near-empty tasks; at ~3ms task overhead × ~6
-    // stages per pin that IS the measured cost of the loop. One
-    // partition ⇒ one task per stage.
-    val covLocal = cov.coalesce(1)
-    val d = covLocal.select(col("i")).distinct()
-    val dn = d.agg(count(lit(1)).as("dn"))
-    def safeDiv(x: Column, n: Column): Column =
-      x / when(n > 0, n).otherwise(lit(1.0))
-    // init: v1 uniform, v2 alternating-sign — deterministic, unit, and
-    // never parallel to v1 for d ≥ 2
-    var vs = d.crossJoin(dn)
-      .select(col("i"),
-        (lit(1.0) / sqrt(col("dn"))).as("v1"),
-        (when(col("i") % 2 === 0, lit(1.0)).otherwise(lit(-1.0)) / sqrt(col("dn"))).as("v2"))
-      .pinLineage()
-    var pinned = vs // the live pin: the next one's plan reads it until it is materialized
-    for (it <- 1 to iters) {
-      val w = covLocal
-        .join(broadcast(vs.select(col("i").as("j"), col("v1").as("y1"), col("v2").as("y2"))),
-          Seq("j"))
-        .groupBy("i")
-        .agg(sum(col("c") * col("y1")).as("w1"), sum(col("c") * col("y2")).as("w2"))
-      // ALL round scalars in ONE 1-row anchor (s11 = Σw1², s12 = Σw1w2,
-      // s22 = Σw2²): normalize-then-orthogonalize has the closed form
-      //   v1 = w1/√s11,  r = w2 − (s12/s11)·w1,  ‖r‖ = √(s22 − s12²/s11)
-      // so the round is matvec → stats agg → one crossJoin → one
-      // projection. Anchoring norm/dot/norm as three SEPARATE
-      // crossJoins of nested aggregates multiplies the unpinned
-      // subplan ~8× per round — measured 10× slower across the pin
-      // cadence; one anchor keeps the doubling at the one-axis power
-      // iteration's rate the cadence was tuned for.
-      val st = w.agg(
-        sum(col("w1") * col("w1")).as("s11"),
-        sum(col("w1") * col("w2")).as("s12"),
-        sum(col("w2") * col("w2")).as("s22"))
-      vs = w.crossJoin(st) // 1-row stats anchor
-        .select(
-          col("i"),
-          safeDiv(col("w1"), sqrt(col("s11"))).as("v1"),
-          safeDiv(
-            col("w2") - when(col("s11") > 0, col("s12") / col("s11")).otherwise(lit(0.0)) * col("w1"),
-            sqrt(greatest(
-              col("s22") - when(col("s11") > 0, col("s12") * col("s12") / col("s11"))
-                .otherwise(lit(0.0)),
-              lit(0.0)))).as("v2"))
-      // pin every 3rd round (and the last). Measured alternatives at
-      // bench scale: pin EVERY round = 30 eager jobs (slowest); NO
-      // pins = the broadcast input of round k lazily re-executes the
-      // whole k-1 prefix — exponential blowup, >300s. The loop cost
-      // is a per-round fixed floor (codegen + scheduling of ~6 tiny
-      // stages), amortized over corpus size: the 16× probe moved the
-      // whole query 1.1×.
-      if (it % 3 == 0 || it == iters) {
-        vs = vs.pinLineage()
-        RddShim.unpersistPinned(pinned)
-        pinned = vs
-      }
-    }
-    val sgn = vs.agg(
-      when(sum(col("v1")) >= 0, lit(1.0)).otherwise(lit(-1.0)).as("s1"),
-      when(sum(col("v2")) >= 0, lit(1.0)).otherwise(lit(-1.0)).as("s2"))
-    vs.crossJoin(sgn)
-      .select(col("i"), (col("v1") * col("s1")).as("a1"), (col("v2") * col("s2")).as("a2"))
-  }
-
-  // -------------------------------------------------------------------
-  // FIXED-POINT PCA (r9): the q42 move — define every decision of an
-  // iterative numeric algorithm over exact integers — applied to power
-  // iteration, which upgrades q202 from rows-only to a real DuckDB
-  // oracle. The float topTwoAxes/pcaProject above stay the production
-  // form; the spec pins fp-vs-float axis agreement on an anisotropic
-  // corpus.
+  // FIXED-POINT PCA (r9) — the dimensionality reduction that fronts
+  // ANN at scale (project 64-dim embeddings to a few principal axes
+  // before bucketing/search). The q42 move — define every decision of
+  // an iterative numeric algorithm over exact integers — applied to
+  // power iteration, so q202 and q224 carry real DuckDB oracles. The
+  // corpus is touched by two aggregate passes; the d×d scatter they
+  // produce is collected and iterated on the driver (topTwoAxesFp).
   //
   // Integer-width plan (S = 1e7 quantization, CS = 1e6 axis scale,
   // T = 5e5 per-round downscale target, dim 64; trunc division always
@@ -1516,9 +1198,7 @@ object SimilarityPipeline {
   def pcaProjectFp(
       corpus: DataFrame, iters: Int = 8,
       scale: Long = 10000000L, centScale: Long = 1000000L): DataFrame = {
-    val fp = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    val fp = pinnedFp(corpus, scale)
     projectFpOnAxes(fp, topTwoAxesFp(fp, iters, centScale))
   }
 
@@ -1549,6 +1229,12 @@ object SimilarityPipeline {
   /** Fixed-point grid cells: projections downscaled to p'-scale 1e6
     * (sign-split truncation), FLOOR-divided by the cell width (floor,
     * not trunc — negative coordinates must not fold onto cell 0).
+    *
+    * Why the 3×3 probe is LOSSLESS: on L2-normalized vectors
+    * cos(x,y) ≥ t ⟺ ‖x̂−ŷ‖ ≤ √(2(1−t)), and an orthonormal projection
+    * contracts distance, so the two members of a qualifying pair land
+    * within one cell width of each other on both axes — recall 1.0 by
+    * construction, unlike sign-LSH's probabilistic recall.
     */
   def gridCellsFp(fp: DataFrame, axes: DataFrame, tNum: Int, tDen: Int): DataFrame = {
     val w = gridWidthFp(tNum, tDen)
@@ -1565,8 +1251,10 @@ object SimilarityPipeline {
           .otherwise(-expr(s"((-d2) + $w - 1) div $w")).as("cy"))
   }
 
-  /** [[gridImpliedCandidates]] for the fp cells (same histogram-only
-    * statistic; integer arithmetic end to end).
+  /** Candidate pairs the 3×3 grid probe would generate over the fp
+    * cells, computed from the CELL HISTOGRAM only — tiny (≤ occupied
+    * cells squared per probe window), never touches vectors, integer
+    * end to end. The statistic [[adaptiveNearDupPairsFp]] plans from.
     */
   def gridImpliedCandidatesFp(cells: DataFrame): Long = {
     val hist = cells.groupBy("cx", "cy").agg(count(lit(1)).as("n"))
@@ -1576,7 +1264,7 @@ object SimilarityPipeline {
       .agg(coalesce(sum(col("a.n") * col("b.n")), lit(0L)).cast("long"))
       .head().getLong(0)
     val n = cells.count()
-    (ordered - n) / 2
+    (ordered - n) / 2 // drop self-pairs, halve the mirror
   }
 
   /** Grid-branch pairs under the exact integer threshold: 3×3 probe
@@ -1604,24 +1292,33 @@ object SimilarityPipeline {
         VectorFunctions.dotLong(col("qa"), col("qb")).as("dot_fp"),
         VectorFunctions.dotLong(col("qa"), col("qa")).as("na"),
         VectorFunctions.dotLong(col("qb"), col("qb")).as("nb"))
-      .where(col("dot_fp") >= 0 &&
-        VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), tDen.toLong * tDen,
-          col("na"), col("nb"), tNum.toLong * tNum) >= 0)
+      .where(cosAtLeast(tNum, tDen))
       .select(col("va"), col("vb"), col("dot_fp"),
         VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
   }
 
-  /** FIXED-POINT adaptive near-dup (q224's r9 form): the same physical
-    * strategy choice as [[adaptiveNearDupPairs]] — lossless PCA-grid
-    * when the cell histogram implies ≤ budgetFactor·N candidates,
-    * linear sign-LSH + exact verify otherwise — with EVERY decision
-    * integer-exact: fp normalization ([[l2NormalizeFp]]), fp axes
-    * ([[topTwoAxesFp]]), fp projections/cells (ceiling width +
-    * documented safety margin keeps the grid branch lossless under
-    * the fixed-point error budget), an integer histogram decision,
-    * and the cross-multiplied threshold on both branches. Both
-    * branches and the CHOICE replay verbatim in DuckDB — an adaptive
-    * operator whose whole planning is oracle-checkable.
+  /** Near-dup pairs (va, vb, dot_fp, cos2_bp) at cos ≥ tNum/tDen with
+    * the physical strategy chosen FROM DATA STATISTICS (q224) — the AQE
+    * pattern applied to blocking. The lossless PCA grid only thins when
+    * the top-2 axes carry real variance (clustered / anisotropic
+    * corpora — which near-dup-rich corpora are); on an ISOTROPIC corpus
+    * every projection-, pivot-, or box-based lossless filter
+    * degenerates to all-pairs (distance concentration), so the scale
+    * fallback is the linear portable sign-LSH generator with exact
+    * verification (probabilistic recall, the documented q38 trade).
+    * The grid branch is taken when the cell histogram
+    * ([[gridImpliedCandidatesFp]]) implies ≤ budgetFactor·N candidates.
+    *
+    * Every decision is integer-exact: fp normalization
+    * ([[l2NormalizeFp]]), fp axes ([[topTwoAxesFp]]), fp
+    * projections/cells (ceiling width + documented safety margin keeps
+    * the grid branch lossless under the fixed-point error budget), the
+    * histogram decision, and the cross-multiplied threshold on both
+    * branches. Both branches and the CHOICE replay verbatim in DuckDB.
+    * On a rank-deficient corpus (e.g. many exact duplicates) the axes
+    * come back as honest zeros, every projection lands in cell 0 and
+    * the grid still verifies every pair: wrong candidates cost work,
+    * never answers.
     */
   def adaptiveNearDupPairsFp(
       corpus: DataFrame,
@@ -1636,164 +1333,12 @@ object SimilarityPipeline {
     // callers reading a parquet corpus pass the footer count
     // (CorpusStats) — same integer, no sizing scan
     val n = knownRows.getOrElse(corpus.count())
-    val fpRaw = corpus
-      .select(col("vec_id"), VectorFunctions.quantizeFp(col("embedding"), scale).as("q"))
-      .pinLineage()
+    val fpRaw = pinnedFp(corpus, scale)
     val fpNorm = l2NormalizeFp(fpRaw, scale).pinLineage()
     val cells = gridCellsFp(fpNorm, topTwoAxesFp(fpNorm, iters), tNum, tDen)
       .pinLineage() // the index artifact: N×3, read by histogram + join
     if (gridImpliedCandidatesFp(cells) <= budgetFactor.toLong * n)
       gridPairsFp(fpRaw, cells, tNum, tDen)
     else annNearDupPairsPortable(corpus, tNum, tDen, cellBits(n))
-  }
-
-  /** Top-2 principal axes and the corpus projected onto them. Returns
-    * (vec_id, p1, p2). The projection is one broadcast join of the
-    * two d-row axes into the exploded corpus — the same shape as
-    * scoring against any fixed linear map.
-    */
-  def pcaProject(corpus: DataFrame, iters: Int = 15): DataFrame = {
-    val axes = topTwoAxes(covariance(corpus).pinLineage(), iters)
-    corpus
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .join(broadcast(axes), Seq("i"))
-      .groupBy("vec_id")
-      .agg(
-        sum(col("x").cast("double") * col("a1")).as("p1"),
-        sum(col("x").cast("double") * col("a2")).as("p2"))
-  }
-
-  // ------------------------------------------------------------------
-  // PCA grid blocking — LOSSLESS near-dup candidates from a learned
-  // 2-D projection. On L2-NORMALIZED vectors, cos(x,y) ≥ t ⟺
-  // ‖x̂−ŷ‖ ≤ √(2(1−t)), and any orthonormal projection CONTRACTS
-  // distance — so two vectors in a qualifying pair land within
-  // w = √(2(1−t)) of each other on BOTH principal axes, i.e. within
-  // one grid cell of each other at cell width w. 9-cell (3×3) probing
-  // therefore has recall 1.0 BY CONSTRUCTION — unlike sign-LSH's
-  // probabilistic recall — while precision (candidate thinning) is
-  // whatever the top-2 axes' variance buys on this corpus. Exact
-  // full-space cosine verifies candidates; wrong pairs cost work,
-  // never answers.
-  // ------------------------------------------------------------------
-
-  /** Near-dup pairs (va, vb, cos ≥ threshold) via lossless PCA-grid
-    * blocking. One grid key per vector; each vector probes its 3×3
-    * cell neighborhood; a qualifying pair meets in exactly one
-    * (probe, home) combination under the va < vb order.
-    */
-  def pcaGridNearDupPairs(
-      corpus: DataFrame,
-      threshold: Double,
-      iters: Int = 15,
-      maxCellWidth: Double = 2.0 / 3): DataFrame = {
-    val w = math.sqrt(2.0 * (1.0 - threshold))
-    // Candidate-budget rail: projections of unit vectors live in the
-    // unit disk, so each axis spans at most [-1, 1]. When the 3×3
-    // probe window (3 cells of width w) covers that whole span — 3w ≥
-    // 2, i.e. threshold ≤ 7/9 — blocking is structurally OFF: every
-    // vector probes every occupied cell and candidates go quadratic,
-    // the plan that dies at 100×. Answers would still be correct
-    // (losslessness never depended on w), so failing LOUDLY here is
-    // the only way the misconfiguration surfaces. Production semantic
-    // dedup (t ≥ 0.8 ⇒ w ≤ 0.63) passes; stress/recall specs that
-    // WANT the degenerate regime opt out via maxCellWidth.
-    require(w <= maxCellWidth,
-      f"pca-grid cell width $w%.3f exceeds $maxCellWidth%.3f (threshold $threshold%.2f < 7/9" +
-        " ⇒ 3×3 probe covers the whole projected span ⇒ super-linear candidates);" +
-        " raise the threshold or opt out explicitly for stress testing")
-    val normed = l2Normalized(corpus)
-    gridPairs(normed, gridCells(normed, w, iters), threshold)
-  }
-
-  private def l2Normalized(corpus: DataFrame): DataFrame =
-    corpus.select(
-      col("vec_id"),
-      expr("transform(embedding, x -> CAST(x / greatest(sqrt(aggregate(transform(embedding, y -> CAST(y AS DOUBLE) * y), CAST(0 AS DOUBLE), (a, v) -> a + v)), CAST(1e-12 AS DOUBLE)) AS FLOAT))")
-        .as("embedding"))
-
-  /** (vec_id, cx, cy) grid keys at cell width w over the learned top-2
-    * axes. Degenerate-corpus guard: on a rank-deficient normalized
-    * corpus (e.g. MANY exact duplicates — precisely a dedup query's
-    * input) the covariance or its deflation is the zero matrix, power
-    * iteration divides by a zero norm, and the projections come back
-    * NaN/NULL. Unguarded, those rows would get NULL cell keys and
-    * silently match NOTHING — breaking the lossless contract on the
-    * easiest possible pairs. Degenerate projections collapse to cell 0
-    * instead: candidates inflate, recall survives (the documented
-    * trade direction: wrong candidates cost verify work, never
-    * answers).
-    */
-  private def gridCells(normed: DataFrame, w: Double, iters: Int): DataFrame = {
-    def safeCell(p: Column): Column =
-      floor(coalesce(nanvl(p, lit(0d)), lit(0d)) / w).cast("long")
-    pcaProject(normed, iters)
-      .select(col("vec_id"), safeCell(col("p1")).as("cx"), safeCell(col("p2")).as("cy"))
-  }
-
-  private def gridPairs(normed: DataFrame, proj: DataFrame, threshold: Double): DataFrame = {
-    val home = normed.join(proj, "vec_id")
-    val probes = home.select(
-      col("vec_id"), col("embedding"),
-      explode(expr("flatten(transform(sequence(-1, 1), dx -> transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
-        .as("cell"))
-      .select(col("vec_id"), col("embedding"), col("cell.cx").as("cx"), col("cell.cy").as("cy"))
-    probes.as("a")
-      .join(home.as("b"),
-        col("a.cx") === col("b.cx") && col("a.cy") === col("b.cy") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("va"),
-        col("b.vec_id").as("vb"),
-        graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("cos"))
-      .where(col("cos") >= threshold)
-  }
-
-  /** Candidate pairs the 3×3 grid probe would generate, computed from
-    * the CELL HISTOGRAM only — tiny (≤ occupied-cell count squared per
-    * probe window), never touches vectors. The applicability statistic
-    * the adaptive near-dup operator plans from.
-    */
-  def gridImpliedCandidates(proj: DataFrame): Long = {
-    val hist = proj.groupBy("cx", "cy").agg(count(lit(1)).as("n"))
-    val ordered = hist.as("a")
-      .join(hist.as("b"),
-        abs(col("a.cx") - col("b.cx")) <= 1 && abs(col("a.cy") - col("b.cy")) <= 1)
-      .agg(coalesce(sum(col("a.n") * col("b.n")), lit(0L)).cast("long"))
-      .head().getLong(0)
-    val n = proj.count()
-    (ordered - n) / 2 // drop self-pairs, halve the mirror
-  }
-
-  /** Near-dup pairs (va, vb, cos ≥ threshold) with the physical
-    * strategy chosen FROM DATA STATISTICS — the AQE pattern applied to
-    * blocking. The lossless PCA grid only thins when the top-2 axes
-    * carry real variance (clustered / anisotropic corpora — which
-    * near-dup-rich corpora are); on an ISOTROPIC corpus every
-    * projection-, pivot-, or box-based lossless filter degenerates to
-    * all-pairs (distance concentration — there is provably no lossless
-    * sub-quadratic path), so the honest scale fallback is the linear
-    * sign-LSH candidate generator with exact verification
-    * (probabilistic recall, the documented q38 trade). The decision
-    * statistic is the grid's own cell histogram: tiny, linear to
-    * compute, and exact for the cost it predicts. Grid projections are
-    * pinned before the histogram so the chosen branch never recomputes
-    * the PCA.
-    */
-  def adaptiveNearDupPairs(
-      corpus: DataFrame,
-      threshold: Double,
-      iters: Int = 6,
-      budgetFactor: Double = 8.0,
-      knownRows: Option[Long] = None): DataFrame = {
-    val w = math.sqrt(2.0 * (1.0 - threshold))
-    require(w <= 2.0 / 3,
-      f"adaptive near-dup needs threshold >= 7/9 (got $threshold%.2f): below it the 3×3" +
-        " probe cannot thin ANY corpus and grid applicability is moot")
-    val normed = l2Normalized(corpus)
-    val n = knownRows.getOrElse(corpus.count())
-    val proj = gridCells(normed, w, iters).pinLineage() // the index artifact: N×3
-    if (gridImpliedCandidates(proj) <= budgetFactor * n) gridPairs(normed, proj, threshold)
-    else annNearDupPairs(corpus, threshold, cellBits(n))
   }
 }

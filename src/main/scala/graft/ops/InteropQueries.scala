@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q71–q72: format-interop round-trips. A pipeline at this scale never
@@ -239,36 +241,44 @@ object InteropQueries {
   // Scale: the landing write is fully distributed; the listing read
   // opens 4 payload files no matter how many runs the sink holds —
   // that is the entire point of the TopN pushdown.
+  /** Lands q212/q257's sealed JSONL sink under `root`: one run per
+    * (customer parity, month) of 1995-H1 orders, each holding ONE row —
+    * its revenue in integer cents from a decimal-exact sum — written by
+    * Spark's `partitionBy(...).json` in the connector's layout, then
+    * sealed metadata-last: one tiny driver-side seal per run dir (the
+    * run count is the partition-value product — listing-sized).
+    */
+  private def landMonthlyRevenueRuns(s: SparkSession, d: String, root: String): Unit = {
+    import graft.sources.JsonlPartitionSource.PartitionCols
+    Tables.orders(s, d)
+      .where(col("o_orderdate").between(lit("1995-01-01"), lit("1995-06-30")))
+      .groupBy(
+        (col("o_custkey") % 2).cast("string").as("customer_id"),
+        trunc(col("o_orderdate").cast("date"), "month").as("logical_date"))
+      .agg((sum(col("o_totalprice").cast("decimal(18,2)")) * 100)
+        .cast("long").cast("string").as("revenue_cents")) // integer cents, decimal-exact
+      .withColumn("source", lit("gads"))
+      .withColumn("query_name", lit("monthly_revenue"))
+      .withColumn("run_id", lit("r1"))
+      .write.mode("overwrite")
+      .partitionBy(PartitionCols: _*)
+      .json(root)
+    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def runDirs(p: Path, depth: Int): Seq[Path] =
+      if (depth == PartitionCols.length) Seq(p)
+      else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(st => runDirs(st.getPath, depth + 1))
+    runDirs(new Path(root), 0).foreach { dir =>
+      val out = fs.create(new Path(dir, graft.sink.RawSink.SealFile), true)
+      try out.write("""{"record_count":1,"sealed":true}""".getBytes("UTF-8"))
+      finally out.close()
+    }
+  }
+
   val q212: QuerySpec = QuerySpec(
     "q212_latest_runs_listing",
     (s, d) => {
       val root = roundTripDir("jsonl_listing")
-      val monthly = Tables.orders(s, d)
-        .where(col("o_orderdate").between(lit("1995-01-01"), lit("1995-06-30")))
-        .groupBy(
-          (col("o_custkey") % 2).cast("string").as("customer_id"),
-          trunc(col("o_orderdate").cast("date"), "month").as("logical_date"))
-        .agg((sum(col("o_totalprice").cast("decimal(18,2)")) * 100)
-          .cast("long").cast("string").as("revenue_cents")) // integer cents, decimal-exact
-        .withColumn("source", lit("gads"))
-        .withColumn("query_name", lit("monthly_revenue"))
-        .withColumn("run_id", lit("r1"))
-      monthly.write.mode("overwrite")
-        .partitionBy("source", "customer_id", "query_name", "logical_date", "run_id")
-        .json(root)
-      // metadata-last seals: one tiny driver-side write per run dir
-      // (the run count is the partition-value product — listing-sized)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def runDirs(p: org.apache.hadoop.fs.Path, depth: Int): Seq[org.apache.hadoop.fs.Path] =
-        if (depth == 5) Seq(p)
-        else fs.listStatus(p).filter(_.isDirectory).toSeq
-          .flatMap(st => runDirs(st.getPath, depth + 1))
-      runDirs(new org.apache.hadoop.fs.Path(root), 0).foreach { dir =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_SEAL.json"), true)
-        try out.write("""{"record_count":1,"sealed":true}""".getBytes("UTF-8"))
-        finally out.close()
-      }
+      landMonthlyRevenueRuns(s, d, root)
       Extraction.readSink(s, root)
         .orderBy(col("logical_date").desc, col("customer_id").asc)
         .limit(4)
@@ -311,30 +321,7 @@ object InteropQueries {
     "q257_runtime_pruned_reconcile",
     (s, d) => {
       val root = roundTripDir("jsonl_runtime")
-      val monthly = Tables.orders(s, d)
-        .where(col("o_orderdate").between(lit("1995-01-01"), lit("1995-06-30")))
-        .groupBy(
-          (col("o_custkey") % 2).cast("string").as("customer_id"),
-          trunc(col("o_orderdate").cast("date"), "month").as("logical_date"))
-        .agg((sum(col("o_totalprice").cast("decimal(18,2)")) * 100)
-          .cast("long").cast("string").as("revenue_cents"))
-        .withColumn("source", lit("gads"))
-        .withColumn("query_name", lit("monthly_revenue"))
-        .withColumn("run_id", lit("r1"))
-      monthly.write.mode("overwrite")
-        .partitionBy("source", "customer_id", "query_name", "logical_date", "run_id")
-        .json(root)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def runDirs(p: org.apache.hadoop.fs.Path, depth: Int): Seq[org.apache.hadoop.fs.Path] =
-        if (depth == 5) Seq(p)
-        else fs.listStatus(p).filter(_.isDirectory).toSeq
-          .flatMap(st => runDirs(st.getPath, depth + 1))
-      runDirs(new org.apache.hadoop.fs.Path(root), 0).foreach { dir =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_SEAL.json"), true)
-        try out.write("""{"record_count":1,"sealed":true}""".getBytes("UTF-8"))
-        finally out.close()
-      }
+      landMonthlyRevenueRuns(s, d, root)
       // the ledger: the two most recent landed months, selected by a
       // REAL filter over the orders source (the DPP shape)
       val ledger = Tables.orders(s, d)

@@ -106,17 +106,17 @@ object Pin {
       df.sparkSession, onClone(df)(Pin(_, eager)).queryExecution.analyzed)
 
   /** ONE non-adaptive clone per caller session, created lazily and
-    * reused for every pin. Memoization is load-bearing, not a nicety:
-    * `SparkSession.newSession()` registers that session's
-    * ExecutionListenerBus on the SHARED SparkContext listener bus, so
-    * a clone per pin call (loops pin every round) accumulates
-    * listeners that every subsequent job in the JVM fans events
-    * through — measured as a 10–25% drag on UNRELATED queries after a
-    * few hundred pins. The weak keys free only this map's entry: the
-    * clone stays reachable through its listener-bus registration, so
-    * a per-parent clone is never fully reclaimed. An application that
-    * creates many short-lived sessions and pins once in each keeps one
-    * clone (and one listener) per such session for the JVM's life.
+    * reused for every pin: a clone per pin call (loops pin every round)
+    * would build a fresh session state each time. The weak keys
+    * release a retired parent's clone: once the parent is collected,
+    * the map's next use drops its entry and the clone is collected
+    * too. A clone leaves nothing on the shared SparkContext listener
+    * bus: in Spark 4.1 a session's ExecutionListenerManager creates its
+    * bus only when a QueryExecutionListener is registered on it, and
+    * Pin registers none (PinSpec checks both). As for any session, a
+    * Spark thread-pool thread created while the parent or the clone
+    * was the active session inherits it and keeps it reachable until
+    * that idle thread exits.
     */
   private val cloneCache =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]

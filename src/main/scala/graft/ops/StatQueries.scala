@@ -1155,6 +1155,29 @@ object StatQueries {
   }
 
   // ---------------------------------------------------------------------
+  /** The q236/q239/q242 oracles' shared CTEs: per-customer pre (1996)
+    * and post (1997) spend in integer cents (`pre`, `post`), every
+    * customer with both (`base`, plus the md5 `arm` when `withArm`),
+    * and the exact moment sums (`m`: n, Σx, Σy, Σxy, Σx², Σy², and per
+    * arm A count/Σx/Σy when `withArm`). Ends with ", ".
+    */
+  private def experimentCtesSql(withArm: Boolean): String =
+    "pre AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS x " +
+      "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01' AND CAST(o_orderdate AS DATE) < DATE '1997-01-01' GROUP BY 1), " +
+      "post AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS y " +
+      "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01' AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' GROUP BY 1), " +
+      "base AS (SELECT c_custkey, coalesce(x, 0) AS x, coalesce(y, 0) AS y" +
+      (if (withArm) ", CASE WHEN substring(md5('graft-cuped:' || CAST(c_custkey AS VARCHAR)), 1, 2) < '80' THEN 'A' ELSE 'B' END AS arm"
+       else "") +
+      " FROM customer LEFT JOIN pre ON pre.o_custkey = c_custkey LEFT JOIN post ON post.o_custkey = c_custkey), " +
+      "m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, " +
+      "sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy" +
+      (if (withArm) ", CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS HUGEINT) AS na, " +
+        "sum(CASE WHEN arm = 'A' THEN x ELSE 0 END) AS sxa, " +
+        "sum(CASE WHEN arm = 'A' THEN y ELSE 0 END) AS sya"
+       else "") +
+      " FROM base), "
+
   // q236 — CUPED variance reduction for the A/B report (Deng, Xu,
   // Kohavi & Walker, WSDM 2013): the experiment metric (per-customer
   // 1997 spend) adjusted by its PRE-period covariate (1996 spend),
@@ -1202,18 +1225,7 @@ object StatQueries {
             "(CAST(varxnum AS DOUBLE) * CAST(varynum AS DOUBLE))) AS BIGINT)")
             .as("var_red_bp")),
     Some(
-      "WITH pre AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS x " +
-        "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01' AND CAST(o_orderdate AS DATE) < DATE '1997-01-01' GROUP BY 1), " +
-        "post AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS y " +
-        "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01' AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' GROUP BY 1), " +
-        "base AS (SELECT c_custkey, coalesce(x, 0) AS x, coalesce(y, 0) AS y, " +
-        "CASE WHEN substring(md5('graft-cuped:' || CAST(c_custkey AS VARCHAR)), 1, 2) < '80' THEN 'A' ELSE 'B' END AS arm " +
-        "FROM customer LEFT JOIN pre ON pre.o_custkey = c_custkey LEFT JOIN post ON post.o_custkey = c_custkey), " +
-        "m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, " +
-        "sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy, " +
-        "CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS HUGEINT) AS na, " +
-        "sum(CASE WHEN arm = 'A' THEN x ELSE 0 END) AS sxa, " +
-        "sum(CASE WHEN arm = 'A' THEN y ELSE 0 END) AS sya FROM base), " +
+      s"WITH ${experimentCtesSql(withArm = true)}" +
         "dd AS (SELECT *, n - na AS nb, sx - sxa AS sxb, sy - sya AS syb, " +
         "n * sxy - sx * sy AS covnum, n * sxx - sx * sx AS varxnum, n * syy - sy * sy AS varynum FROM m) " +
         "SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b, " +
@@ -1404,18 +1416,7 @@ object StatQueries {
         round(expr(mde), 4).as("mde_cents"),
         round(expr(s"($mde) * sqrt(1.0 - $rho2)"), 4).as("mde_cuped_cents")),
       Some(
-        "WITH pre AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS x " +
-          "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01' AND CAST(o_orderdate AS DATE) < DATE '1997-01-01' GROUP BY 1), " +
-          "post AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS y " +
-          "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01' AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' GROUP BY 1), " +
-          "base AS (SELECT c_custkey, coalesce(x, 0) AS x, coalesce(y, 0) AS y, " +
-          "CASE WHEN substring(md5('graft-cuped:' || CAST(c_custkey AS VARCHAR)), 1, 2) < '80' THEN 'A' ELSE 'B' END AS arm " +
-          "FROM customer LEFT JOIN pre ON pre.o_custkey = c_custkey LEFT JOIN post ON post.o_custkey = c_custkey), " +
-          "m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, " +
-          "sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy, " +
-          "CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS HUGEINT) AS na, " +
-          "sum(CASE WHEN arm = 'A' THEN x ELSE 0 END) AS sxa, " +
-          "sum(CASE WHEN arm = 'A' THEN y ELSE 0 END) AS sya FROM base), " +
+        s"WITH ${experimentCtesSql(withArm = true)}" +
           "dd AS (SELECT *, n - na AS nb, " +
           "n * sxy - sx * sy AS covnum, n * sxx - sx * sx AS varxnum, n * syy - sy * sy AS varynum FROM m) " +
           "SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b, " +
@@ -1553,14 +1554,7 @@ object StatQueries {
           round(col("m2"), 6).as("m2"))
     },
     Some(
-      "WITH pre AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS x " +
-        "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01' AND CAST(o_orderdate AS DATE) < DATE '1997-01-01' GROUP BY 1), " +
-        "post AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS y " +
-        "FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01' AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' GROUP BY 1), " +
-        "base AS (SELECT c_custkey, coalesce(x, 0) AS x, coalesce(y, 0) AS y " +
-        "FROM customer LEFT JOIN pre ON pre.o_custkey = c_custkey LEFT JOIN post ON post.o_custkey = c_custkey), " +
-        "m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy, " +
-        "sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy FROM base), " +
+      s"WITH ${experimentCtesSql(withArm = false)}" +
         "dd AS (SELECT n, sx, sy, n * sxy - sx * sy AS covnum, " +
         "n * sxx - sx * sx AS varxnum, n * syy - sy * sy AS varynum FROM m), " +
         "dist AS (SELECT c_custkey, x, y, " +

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,6 +19,8 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sink.RawSink.SealFile
 
 /** DataSource V2 connector for the reference's raw-sink layout (S1):
   * JSONL payload files under the hive-partitioned key scheme
@@ -78,7 +81,6 @@ class JsonlPartitionSource extends TableProvider {
 object JsonlPartitionSource {
   val PartitionCols: Seq[String] =
     Seq("source", "customer_id", "query_name", "logical_date", "run_id")
-  val SealFile = "_SEAL.json"
 
   /** Payload extensions: `.jsonl` per the reference contract
     * (raw_sink_contract.md:30), plus `.json` — Spark's own JSON-lines
@@ -132,40 +134,27 @@ object JsonlPartitionSource {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** Walk the partition tree, pruning directories that contradict any
-    * pushed filter on a partition column, and admit only SEALED run
-    * dirs (K2). Returns one entry per payload file.
+  /** The sealed payload files under `root` that `filters` admit, one
+    * entry per file: [[listSealedRuns]] plus one listing per run.
     */
   private[sources] def listSealed(root: String, filters: Array[Filter]): Seq[JsonlFilePartition] = {
     val fs = new Path(root).getFileSystem(hadoopConf())
-    val rootPath = new Path(root)
-    if (!fs.exists(rootPath)) return Seq.empty
-
-    def walk(dir: Path, values: Map[String, String], depth: Int): Seq[JsonlFilePartition] = {
-      if (depth == PartitionCols.length) {
-        if (!fs.exists(new Path(dir, SealFile))) Seq.empty // unsealed ⇒ invisible
-        else
-          fs.listStatus(dir)
-            .filter(st => st.isFile && isPayloadFile(st.getPath.getName))
-            .map(st => JsonlFilePartition(st.getPath.toString, values))
-            .toSeq
-      } else {
-        val colName = PartitionCols(depth)
-        val prefix = s"$colName="
-        fs.listStatus(dir)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-          .map(st => (st.getPath, st.getPath.getName.stripPrefix(prefix)))
-          .filter { case (_, v) => filters.forall(partitionFilterAdmits(_, colName, v)) }
-          .flatMap { case (p, v) => walk(p, values + (colName -> v), depth + 1) }
-          .toSeq
-      }
-    }
-    walk(rootPath, Map.empty, 0)
+    listSealedRuns(root, filters).flatMap(payloadFiles(fs, _))
   }
 
-  /** Like [[listSealed]] but stops at sealed RUN directories — the
-    * granularity aggregate pushdown serves from (one seal = one
-    * authoritative record_count).
+  /** A sealed run's payload files (`_SEAL.json` excluded by name). */
+  private def payloadFiles(fs: FileSystem, run: JsonlRunPartition): Seq[JsonlFilePartition] =
+    fs.listStatus(new Path(run.dir)).toSeq
+      .filter(st => st.isFile && isPayloadFile(st.getPath.getName))
+      .map(st => JsonlFilePartition(st.getPath.toString, run.values))
+
+  /** Walk the partition tree, pruning directories that contradict any
+    * pushed filter on a partition column, and admit only SEALED run
+    * dirs (K2) — the granularity aggregate pushdown serves from (one
+    * seal = one authoritative record_count). Directory values are
+    * unescaped as Spark's `partitionBy` escapes them (`:` lands as
+    * `%3A`), so a run landed under a minted id reads back, and is
+    * filtered, by that id.
     */
   private[sources] def listSealedRuns(root: String, filters: Array[Filter]): Seq[JsonlRunPartition] = {
     val fs = new Path(root).getFileSystem(hadoopConf())
@@ -175,13 +164,13 @@ object JsonlPartitionSource {
     def walk(dir: Path, values: Map[String, String], depth: Int): Seq[JsonlRunPartition] =
       if (depth == PartitionCols.length) {
         if (fs.exists(new Path(dir, SealFile))) Seq(JsonlRunPartition(dir.toString, values))
-        else Seq.empty
+        else Seq.empty // unsealed ⇒ invisible
       } else {
         val colName = PartitionCols(depth)
         val prefix = s"$colName="
         fs.listStatus(dir)
           .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-          .map(st => (st.getPath, st.getPath.getName.stripPrefix(prefix)))
+          .map(st => (st.getPath, ExternalCatalogUtils.unescapePathName(st.getPath.getName.stripPrefix(prefix))))
           .filter { case (_, v) => filters.forall(partitionFilterAdmits(_, colName, v)) }
           .flatMap { case (p, v) => walk(p, values + (colName -> v), depth + 1) }
           .toSeq
@@ -235,11 +224,7 @@ object JsonlPartitionSource {
       case Some(c) => sorted.takeWhile(r => cmp(r, c) <= 0) // prefix + cutoff ties
       case None => sorted // counts never covered n — keep everything
     }
-    kept.flatMap { run =>
-      fs.listStatus(new Path(run.dir))
-        .filter(st => st.isFile && isPayloadFile(st.getPath.getName))
-        .map(st => JsonlFilePartition(st.getPath.toString, run.values))
-    }
+    kept.flatMap(payloadFiles(fs, _))
   }
 
   /** Can this filter be claimed as fully pushed? Only when EVERY node
@@ -488,7 +473,7 @@ class JsonlCountReader(
   override def next(): Boolean = {
     if (done) return false
     val fs = new Path(p.dir).getFileSystem(conf)
-    val sealPath = new Path(p.dir, JsonlPartitionSource.SealFile)
+    val sealPath = new Path(p.dir, SealFile)
     val sealNode = {
       val in = fs.open(sealPath)
       try new ObjectMapper().readTree(in) finally in.close()

@@ -9,6 +9,13 @@ class SimilarityPipelineSpec extends SparkSpec {
 
   private lazy val emb = graft.ops.Tables.embeddings(spark, sfDir)
 
+  /** Recall@3 against bruteForceTopK of the float spherical k-means
+    * top-k (cells = isqrt(n)/2, 2 Lloyd rounds, nprobe 2) on the sf0.001
+    * corpus's first 5 vectors: 6 of the 15 true neighbors. Measured
+    * before that form was deleted; the fixed-point form must hold it.
+    */
+  private val FloatKmeansRecall = 6.0 / 15
+
   test("bruteForceTopK returns k rows per query, scores descending, no self-match") {
     val out = SimilarityPipeline.bruteForceTopK(emb, emb.where(col("vec_id") < 3), 5)
     val rows = out.as[(Long, Long, Double)].collect()
@@ -18,65 +25,6 @@ class SimilarityPipelineSpec extends SparkSpec {
       assert(scores.sorted.reverse.toSeq == scores.toSeq)
     }
     assert(rows.forall(r => r._1 != r._2))
-  }
-
-  test("ivfTopK ⊆ bruteForceTopK candidates and agrees on same-cell neighbors") {
-    val queries = emb.where(col("vec_id") < 5)
-    val ivf = SimilarityPipeline.ivfTopK(emb, queries, 3)
-      .as[(Long, Long, Double)].collect()
-    assert(ivf.nonEmpty)
-    // every IVF neighbor must share the query's cell
-    val cells = emb.select("vec_id", "label").as[(Long, Int)].collect().toMap
-    assert(ivf.forall { case (q, v, _) => cells(q) == cells(v) })
-    // scores must match brute force exactly for the same pairs
-    val bf = SimilarityPipeline.bruteForceTopK(emb, queries, 500)
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, v, s) => (q, v) -> s }.toMap
-    assert(ivf.forall { case (q, v, s) => math.abs(bf((q, v)) - s) < 1e-9 })
-  }
-
-  test("ivfNearDupPairs matches HOF cosine within fp tolerance and threshold") {
-    val pairs = SimilarityPipeline.ivfNearDupPairs(emb, 0.4)
-      .as[(Long, Long, Double)].collect()
-    assert(pairs.forall(_._3 >= 0.4))
-    // cross-check a few pairs against the HOF cosine
-    val sample = pairs.take(5)
-    if (sample.nonEmpty) {
-      val ids = sample.flatMap(p => Seq(p._1, p._2)).toSet.toSeq
-      val vecs = emb.where(col("vec_id").isin(ids: _*))
-        .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
-      sample.foreach { case (a, b, c) =>
-        val (va, vb) = (vecs(a), vecs(b))
-        val dot = va.zip(vb).map { case (x, y) => x.toDouble * y.toDouble }.sum
-        val exact = dot / (math.sqrt(va.map(x => x.toDouble * x.toDouble).sum) *
-          math.sqrt(vb.map(x => x.toDouble * x.toDouble).sum))
-        assert(math.abs(exact - c) < 1e-6, s"pair ($a,$b): $exact vs $c")
-      }
-    }
-  }
-
-  test("annTopK (sign-LSH quantizer + multiprobe): exact scores, pinned recall vs brute force") {
-    val queries = emb.where(col("vec_id") < 5)
-    val bits = SimilarityPipeline.cellBits(emb.count())
-    val ann = SimilarityPipeline.annTopK(emb, queries, 3, bits)
-      .as[(Long, Long, Double)].collect()
-    assert(ann.nonEmpty && ann.forall { case (q, v, _) => q != v })
-    // scores are exact cosines (approximation is only in candidate
-    // selection, never in scoring)
-    val bf = SimilarityPipeline.bruteForceTopK(emb, queries, emb.count().toInt)
-      .as[(Long, Long, Double)].collect()
-    val bfMap = bf.map { case (q, v, s) => (q, v) -> s }.toMap
-    assert(ann.forall { case (q, v, s) => math.abs(bfMap((q, v)) - s) < 1e-9 })
-    // recall@3: fraction of true top-3 recovered. Deterministic (seeded
-    // planes); floor pinned empirically on this corpus.
-    val trueTop = bf.groupBy(_._1).map { case (q, g) =>
-      q -> g.sortBy(r => (-r._3, r._2)).take(3).map(_._2).toSet
-    }
-    val annTop = ann.groupBy(_._1).map { case (q, g) => q -> g.map(_._2).toSet }
-    val recall = trueTop.map { case (q, t) =>
-      (t intersect annTop.getOrElse(q, Set.empty)).size.toDouble / t.size
-    }.sum / trueTop.size
-    assert(recall >= 0.4, s"recall@3 dropped to $recall")
   }
 
   test("annNearDupPairs: only exact-cosine-verified pairs, subset of brute force, pinned recall") {
@@ -164,58 +112,6 @@ class SimilarityPipelineSpec extends SparkSpec {
     }
   }
 
-  test("kmeansCentroids: deterministic, adapts to the labeled clusters, assignment improves with iterations") {
-    val cells = 10
-    val c1 = SimilarityPipeline.kmeansCentroids(emb, cells, iters = 1)
-    val c3 = SimilarityPipeline.kmeansCentroids(emb, cells, iters = 3)
-    assert(c3.count() <= cells && c3.count() >= 2)
-    assert(c3.select(size(col("centroid"))).distinct().as[Int].collect().toSeq == Seq(64))
-    // deterministic build (retry-safe index)
-    val again = SimilarityPipeline.kmeansCentroids(emb, cells, iters = 3)
-      .orderBy("cell").collect().map(_.toString)
-    assert(again.toSeq == c3.orderBy("cell").collect().map(_.toString).toSeq)
-    // Lloyd objective: mean best-cosine must not degrade with iterations
-    def objective(cent: org.apache.spark.sql.DataFrame): Double = {
-      val e = emb.select(col("vec_id"), col("embedding"))
-      e.join(broadcast(cent))
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.cosine(col("embedding"), col("centroid")).as("cos"))
-        .groupBy("vec_id").agg(max("cos").as("best"))
-        .agg(avg("best")).as[Double].head()
-    }
-    assert(objective(c3) >= objective(c1) - 1e-9,
-      s"objective degraded: iter1=${objective(c1)} iter3=${objective(c3)}")
-  }
-
-  test("kmeansTopK: exact scores, recall at least matches sign-LSH at equal probe fraction") {
-    val queries = emb.where(col("vec_id") < 5)
-    val n = emb.count()
-    // sign-LSH multiprobe visits (bits+1) of 2^bits cells; give k-means
-    // the same probe fraction so the quantizers compare fairly
-    // (bits=3 ⇒ 4/8 = 50%: cells=8, nprobe=4)
-    val km = SimilarityPipeline.kmeansTopK(emb, queries, 3, cells = 8, iters = 2, nprobe = 4)
-      .as[(Long, Long, Double)].collect()
-    assert(km.nonEmpty && km.forall { case (q, v, _) => q != v })
-    val bf = SimilarityPipeline.bruteForceTopK(emb, queries, n.toInt)
-      .as[(Long, Long, Double)].collect()
-    val bfMap = bf.map { case (q, v, s) => (q, v) -> s }.toMap
-    assert(km.forall { case (q, v, s) => math.abs(bfMap((q, v)) - s) < 1e-9 })
-    def recall(found: Array[(Long, Long, Double)]): Double = {
-      val trueTop = bf.groupBy(_._1).map { case (q, g) =>
-        q -> g.sortBy(r => (-r._3, r._2)).take(3).map(_._2).toSet
-      }
-      val got = found.groupBy(_._1).map { case (q, g) => q -> g.map(_._2).toSet }
-      trueTop.map { case (q, t) =>
-        (t intersect got.getOrElse(q, Set.empty)).size.toDouble / t.size
-      }.sum / trueTop.size
-    }
-    val bits = SimilarityPipeline.cellBits(n)
-    val lsh = SimilarityPipeline.annTopK(emb, queries, 3, bits).as[(Long, Long, Double)].collect()
-    assert(recall(km) >= recall(lsh) - 1e-9,
-      s"kmeans recall ${recall(km)} < sign-LSH recall ${recall(lsh)}")
-    assert(recall(km) >= 0.5, s"kmeans recall@3 = ${recall(km)}")
-  }
-
   test("kmeansTopKFp: integer ranking mirrors float cosine order, deterministic, recall agrees with float form") {
     val queries = emb.where(col("vec_id") < 5)
     val n = emb.count()
@@ -243,7 +139,9 @@ class SimilarityPipelineSpec extends SparkSpec {
     // recall agreement with the float form at identical parameters:
     // the fixed-point path is the same algorithm with decisions pinned
     // to integers, so quality must match up to quantization-flipped
-    // borderline assignments (slack = one neighbor over 15)
+    // borderline assignments (slack = one neighbor over 15). The float
+    // k-means form is gone; its recall@3 against bruteForceTopK on this
+    // fixture and these parameters was FloatKmeansRecall.
     def recall(found: Array[(Long, Long)]): Double = {
       val trueTop = bf.groupBy(_._1).map { case (q, g) =>
         q -> g.sortBy(r => (-r._3, r._2)).take(3).map(_._2).toSet
@@ -253,12 +151,9 @@ class SimilarityPipelineSpec extends SparkSpec {
         (t intersect got.getOrElse(q, Set.empty)).size.toDouble / t.size
       }.sum / trueTop.size
     }
-    val fl = SimilarityPipeline.kmeansTopK(emb, queries, 3, cells, iters = 2, nprobe = 2)
-      .as[(Long, Long, Double)].collect()
     val rFp = recall(fp.map(r => (r._1, r._2)))
-    val rFl = recall(fl.map(r => (r._1, r._2)))
-    assert(rFp >= rFl - (1.0 / 15.0) - 1e-9,
-      s"fixed-point recall $rFp fell below float recall $rFl beyond one borderline neighbor")
+    assert(rFp >= FloatKmeansRecall - (1.0 / 15.0) - 1e-9,
+      s"fixed-point recall $rFp fell below float recall $FloatKmeansRecall beyond one borderline neighbor")
   }
 
   test("annHardNegativesCapped: huge cap reproduces q217 exactly; small cap bounds the scored frame and stays deterministic") {
@@ -588,41 +483,13 @@ class SimilarityPipelineSpec extends SparkSpec {
       "incremental semantic dedup diverges from the frozen-base replay")
   }
 
-  test("pcaProject: recovers a planted principal direction, 10x variance dominance") {
-    // x = t·u + ε with u a fixed unit direction in 8-dim space and ε
-    // tiny deterministic noise: PC1 must align with u and dominate.
-    val d0 = 8
-    val u = Array.tabulate(d0)(i => math.sin(i + 1.0))
-    val un = { val n = math.sqrt(u.map(x => x * x).sum); u.map(x => (x / n).toFloat) }
-    val fixture = (0 until 200).map { k =>
-      val t = (k % 41) - 20.0 // spread along u
-      val vec = Array.tabulate(d0)(i =>
-        (t * un(i) + 0.01 * math.cos(k * (i + 1))).toFloat)
-      (k.toLong, vec.toSeq)
-    }.toDF("vec_id", "embedding")
-    val proj = SimilarityPipeline.pcaProject(fixture, iters = 20)
-      .as[(Long, Double, Double)].collect()
-    def variance(xs: Seq[Double]): Double = {
-      val m = xs.sum / xs.length
-      xs.map(x => (x - m) * (x - m)).sum / (xs.length - 1)
-    }
-    val v1 = variance(proj.map(_._2).toSeq)
-    val v2 = variance(proj.map(_._3).toSeq)
-    assert(v1 > 10 * v2, s"planted direction must dominate: pc1=$v1 pc2=$v2")
-    val axes = SimilarityPipeline
-      .topTwoAxes(SimilarityPipeline.covariance(fixture).localCheckpoint(true), 20)
-      .as[(Int, Double, Double)].collect().sortBy(_._1)
-    val cosU = axes.map(_._2).zip(un).map { case (a, b) => a * b }.sum
-    assert(math.abs(cosU) > 0.99, s"PC1 must align with the planted direction, cos=$cosU")
-  }
-
-  test("fixed-point PCA: axes agree with the planted directions and the float form, orthogonal, deterministic") {
+  test("fixed-point PCA: axes agree with the planted directions, p1 orders the planted cohorts, orthogonal, deterministic") {
     // q202's r9 registered form, on a TWO-direction planted fixture
-    // with a ~20x eigenvalue ratio. (The single-direction fixture
-    // above has lambda2/lambda1 ~ 4e-7 — BELOW the documented 2e-6
-    // Gram-Schmidt coefficient quantum, so no fixed-point arithmetic
-    // of this width could recover its second axis; realistic spectra
-    // sit far above the quantum.)
+    // with a ~20x eigenvalue ratio. (A single-direction fixture has
+    // lambda2/lambda1 ~ 4e-7 — BELOW the documented 2e-6 Gram-Schmidt
+    // coefficient quantum, so no fixed-point arithmetic of this width
+    // could recover its second axis; realistic spectra sit far above
+    // the quantum.)
     val d0 = 8
     val u = Array.tabulate(d0)(i => math.sin(i + 1.0))
     val un = { val n = math.sqrt(u.map(x => x * x).sum); u.map(x => (x / n).toFloat) }
@@ -657,49 +524,17 @@ class SimilarityPipelineSpec extends SparkSpec {
     // orthogonality within the documented 2^-19 coefficient quantum
     val ortho = a.map(r => (r._2.toDouble / n1) * (r._3.toDouble / n2)).sum
     assert(math.abs(ortho) < 2e-4, s"fp axes not orthogonal enough: $ortho")
-    // fp projections rank-agree with float projections on axis 1
+    // p1 orders the fixture by its planted coordinate t along u: the
+    // spread is in unit steps of t — far past the fixed-point
+    // resolution and the t2 leakage into axis 1 — so the p1 ORDER must
+    // be the t order up to ties (same-t cohorts, vec_id % 41)
     val pFp = SimilarityPipeline.pcaProjectFp(fixture, iters = 8)
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    val pFl = SimilarityPipeline.pcaProject(fixture, iters = 20)
-      .as[(Long, Double, Double)].collect().sortBy(_._1)
-    val sgn = {
-      // sign conventions may differ between fp and float axes
-      val dot = pFp.map(_._2.toDouble).zip(pFl.map(_._2)).map { case (x, y) => x * y }.sum
-      if (dot >= 0) 1.0 else -1.0
-    }
-    val orderFp = pFp.sortBy(r => (sgn * r._2, r._1)).map(_._1).toSeq
-    val orderFl = pFl.sortBy(r => (r._2, r._1)).map(_._1).toSeq
-    // the planted spread along u is in integer steps of ~0.5 units —
-    // far past both forms' resolution, so the p1 ORDER must agree up
-    // to ties (same-t cohorts); compare the t-cohort sequences
-    def cohorts(ids: Seq[Long]): Seq[Long] = ids.map(_ % 41)
-    assert(cohorts(orderFp) == cohorts(orderFl),
-      "fp projection order diverged from float beyond tie cohorts")
-  }
-
-  test("pcaProject: orthonormal axes and deterministic projections on the corpus") {
-    import SimilarityPipeline.{covariance, pcaProject}
-    val proj = pcaProject(emb, iters = 15).as[(Long, Double, Double)].collect()
-    assert(proj.length == emb.count())
-    val axes = SimilarityPipeline.topTwoAxes(covariance(emb).localCheckpoint(true), 15)
-      .as[(Int, Double, Double)].collect().sortBy(_._1)
-    val (a1, a2) = (axes.map(_._2), axes.map(_._3))
-    assert(math.abs(a1.map(x => x * x).sum - 1.0) < 1e-9, "a1 unit norm")
-    assert(math.abs(a2.map(x => x * x).sum - 1.0) < 1e-9, "a2 unit norm")
-    // Exact orthogonality is now GUARANTEED by the explicit
-    // Gram–Schmidt step in topTwoAxes (not merely approached as
-    // iterations converge) — the contraction property of the 2-D
-    // projection depends on it, so pin it tight.
-    val dot = a1.zip(a2).map { case (x, y) => x * y }.sum
-    assert(math.abs(dot) < 1e-9, s"axes must be orthogonal after Gram–Schmidt, dot=$dot")
-    // determinism: a second full run reproduces the projection
-    val again = pcaProject(emb, iters = 15).as[(Long, Double, Double)].collect()
-    val m1 = proj.map(r => r._1 -> (r._2, r._3)).toMap
-    again.foreach { r =>
-      val (p1, p2) = m1(r._1)
-      assert(math.abs(r._2 - p1) < 1e-9 && math.abs(r._3 - p2) < 1e-9,
-        s"vec ${r._1} projection not reproducible")
-    }
+      .as[(Long, Long, Long)].collect()
+    def t(id: Long): Double = (id % 41) - 20.0
+    // the axis sign is pinned by its loading sum, not by t's direction
+    val sgn = if (pFp.map(r => r._2.toDouble * t(r._1)).sum >= 0) 1.0 else -1.0
+    val cohorts = pFp.sortBy(r => (sgn * r._2, r._1)).map(_._1 % 41).toSeq
+    assert(cohorts == cohorts.sorted, "fp projection order diverged from the planted t order beyond tie cohorts")
   }
 
   test("quantizer scale probe: per-cell pair counts stay roughly flat across corpus sizes") {
@@ -727,115 +562,23 @@ class SimilarityPipelineSpec extends SparkSpec {
       s"per-cell pair load grew ${loadBig / loadSmall}× for a ${nBig / nSmall}× corpus")
   }
 
-  test("pcaGridNearDupPairs: LOSSLESS recall (the contraction guarantee), no dupes, no false positives") {
-    // t = 0.4 is BELOW the envelope rail (w ≈ 1.1 > 2/3): the grid
-    // degenerates toward verify-everything, which is exactly what this
-    // stress case wants — maximal true pairs to check losslessness
-    // against. Opt out of the rail explicitly.
-    val grid = SimilarityPipeline
-      .pcaGridNearDupPairs(emb, 0.4, iters = 8, maxCellWidth = Double.PositiveInfinity)
-      .as[(Long, Long, Double)].collect()
-    assert(grid.forall(_._3 >= 0.4))
-    assert(grid.map(p => (p._1, p._2)).distinct.length == grid.length,
-      "a pair must meet in exactly one (probe, home) cell combination")
-    val e = emb.select(col("vec_id"), col("embedding"))
-    val truth = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id"), col("b.vec_id"),
-        graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
-      .where(col("c") >= 0.4)
-      .as[(Long, Long, Double)].collect()
-      .map(p => (p._1, p._2)).toSet
-    val found = grid.map(p => (p._1, p._2)).toSet
-    assert(truth.nonEmpty, "fixture corpus must contain ≥0.4-cosine pairs")
-    assert(found == truth,
-      s"lossless blocking violated: missed=${(truth -- found).take(5)} extra=${(found -- truth).take(5)}")
-  }
-
-  test("pcaGridNearDupPairs: envelope rail rejects sub-7/9 thresholds loudly, opt-out works") {
+  test("adaptiveNearDupPairsFp: threshold rail rejects sub-7/9 thresholds loudly, 7/9 itself passes") {
     val e = intercept[IllegalArgumentException] {
-      SimilarityPipeline.pcaGridNearDupPairs(emb, 0.4, iters = 2)
+      SimilarityPipeline.adaptiveNearDupPairsFp(emb, tNum = 2, tDen = 5, iters = 2)
     }
-    assert(e.getMessage.contains("super-linear candidates"))
-    // 7/9 boundary: just above passes, just below throws
-    SimilarityPipeline.pcaGridNearDupPairs(emb.limit(0), 7.0 / 9 + 1e-9, iters = 2)
+    assert(e.getMessage.contains("needs threshold >= 7/9"))
+    // 7/9 boundary: exactly 7/9 passes, just below throws
+    SimilarityPipeline.adaptiveNearDupPairsFp(emb.limit(0), tNum = 7, tDen = 9, iters = 2)
     intercept[IllegalArgumentException] {
-      SimilarityPipeline.pcaGridNearDupPairs(emb.limit(0), 7.0 / 9 - 1e-3, iters = 2)
+      SimilarityPipeline.adaptiveNearDupPairsFp(emb.limit(0), tNum = 777, tDen = 1000, iters = 2)
     }
-  }
-
-  test("q224 adaptive mode: planted high-cos pairs found losslessly via the GRID branch; corpus takes the fallback and its empty answer matches brute force") {
-    // The registered q224 runs adaptiveNearDupPairs at t = 0.8. Pins:
-    // (1) a small clustered (anisotropic) corpus takes the LOSSLESS
-    // grid branch (plan carries the 3×3 probe explode) and finds
-    // exactly the brute-force truth; (2) the real corpus — isotropic,
-    // grid-inapplicable — takes the sign-LSH fallback branch (no probe
-    // explode in the plan) and its empty answer is CORRECT, not a
-    // silent blocking miss: brute force over all pairs is empty too;
-    // (3) the histogram statistic itself says quadratic on the corpus.
-    val dim = 64
-    val rnd = new scala.util.Random(7)
-    def unit(): Array[Double] = {
-      val v = Array.fill(dim)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
-    }
-    // 10 base directions; for 4 of them plant a partner at cos ≈ 0.9
-    // (mix with a fresh orthogonalized perturbation)
-    val bases = Array.fill(10)(unit())
-    val planted = bases.zipWithIndex.flatMap { case (b, k) =>
-      val self = Seq((k.toLong, b.map(_.toFloat).toSeq))
-      if (k < 4) {
-        val p = unit()
-        val d = b.zip(p).map { case (x, y) => x * y }.sum
-        val r = b.zip(p).map { case (x, y) => y - d * x }
-        val rn = math.sqrt(r.map(x => x * x).sum)
-        val mix = b.zip(r).map { case (x, y) => 0.9 * x + math.sqrt(1 - 0.81) * y / rn }
-        self :+ ((100L + k, mix.map(_.toFloat).toSeq))
-      } else self
-    }
-    val dir = java.nio.file.Files.createTempDirectory("q224env").toString
-    planted.toSeq.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
-    val corpus = graft.ops.Tables.embeddings(spark, dir)
-    val adaptivePlanted = SimilarityPipeline.adaptiveNearDupPairs(corpus, 0.8, iters = 6)
-    // (1a) branch pin: the clustered fixture must take the grid branch
-    // — its plan carries the 3×3 probe explode over sequence(-1, 1)
-    assert(adaptivePlanted.queryExecution.analyzed.toString.contains("sequence(-1, 1"),
-      "planted anisotropic corpus should take the lossless GRID branch")
-    val got = adaptivePlanted
-      .select(col("va"), col("vb")).as[(Long, Long)].collect().toSet
-    val e2 = corpus.select(col("vec_id"), col("embedding"))
-    val truth = e2.as("a").join(e2.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id"), col("b.vec_id"),
-        graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
-      .where(col("c") >= 0.8).as[(Long, Long, Double)].collect()
-      .map(p => (p._1, p._2)).toSet
-    assert(truth.size == 4, s"fixture must plant exactly 4 qualifying pairs, got ${truth.size}")
-    assert(got == truth, s"grid-branch blocking missed pairs: ${truth -- got}")
-    // (2) the registered corpus run takes the FALLBACK branch (no
-    // probe explode) and its empty answer ≡ brute-force empty
-    val adaptiveCorpus = SimilarityPipeline.adaptiveNearDupPairs(emb, 0.8, iters = 6)
-    assert(!adaptiveCorpus.queryExecution.analyzed.toString.contains("sequence(-1, 1"),
-      "isotropic corpus should take the sign-LSH fallback branch")
-    assert(LlmQueries.q224.run(spark, sfDir).count() == 0)
-    val eC = emb.select(col("vec_id"), col("embedding"))
-    val bruteEmpty = eC.as("a").join(eC.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
-      .where(col("c") >= 0.8).count()
-    assert(bruteEmpty == 0, "corpus unexpectedly contains ≥0.8 pairs — emptiness pin stale")
-    // (3) the decision statistic: grid-implied candidates on the
-    // isotropic corpus exceed any linear budget (they are ~all pairs)
-    val n = emb.count()
-    val w = math.sqrt(2.0 * (1.0 - 0.8))
-    val projC = SimilarityPipeline.pcaProject(emb, iters = 4)
-      .select(col("vec_id"),
-        floor(col("p1") / w).cast("long").as("cx"),
-        floor(col("p2") / w).cast("long").as("cy"))
-    assert(SimilarityPipeline.gridImpliedCandidates(projC) > 8.0 * n)
   }
 
   test("q224 fp form: planted corpus takes the GRID branch losslessly; registered corpus takes the fallback — the whole decision integer-exact") {
-    // mirrors the float adaptive test for adaptiveNearDupPairsFp (the
-    // r9 registered form): same planted-anisotropy fixture, the exact
-    // integer threshold t = 4/5, and the integer histogram decision
+    // adaptiveNearDupPairsFp (the registered form) on a small
+    // clustered fixture: 10 random unit directions, 4 of them with a
+    // planted partner at cos ≈ 0.9; the exact integer threshold
+    // t = 4/5, and the integer histogram decision
     val dim = 64
     val rnd = new scala.util.Random(7)
     def unit(): Array[Double] = {
@@ -874,13 +617,19 @@ class SimilarityPipelineSpec extends SparkSpec {
     // exact threshold semantics: every emitted cos2_bp ≥ t²·10⁴ = 6400
     assert(rows.forall(_._4 >= 6400L), s"cos2_bp below threshold: ${rows.mkString(",")}")
     // the registered corpus run takes the FALLBACK branch and its
-    // empty answer is brute-force-correct (pinned by the float test)
+    // empty answer is CORRECT, not a silent blocking miss: brute-force
+    // cosine over all pairs finds no pair at 0.8 either
     val fpCorpus = SimilarityPipeline.adaptiveNearDupPairsFp(emb, tNum = 4, tDen = 5, iters = 6)
     assert(!fpCorpus.queryExecution.analyzed.toString.contains("sequence(-1, 1"),
       "isotropic corpus should take the sign-LSH fallback branch (fp)")
     assert(LlmQueries.q224.run(spark, sfDir).count() == 0)
-    // integer decision statistic agrees with the float one in kind:
-    // implied candidates on the isotropic corpus exceed the budget
+    val eC = emb.select(col("vec_id"), col("embedding"))
+    val bruteEmpty = eC.as("a").join(eC.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
+      .where(col("c") >= 0.8).count()
+    assert(bruteEmpty == 0, "corpus unexpectedly contains ≥0.8 pairs — emptiness pin stale")
+    // the decision statistic: implied candidates on the isotropic
+    // corpus exceed the linear budget
     val n = emb.count()
     val fpN = SimilarityPipeline.l2NormalizeFp(
       emb.select(col("vec_id"),
@@ -890,13 +639,11 @@ class SimilarityPipelineSpec extends SparkSpec {
     assert(SimilarityPipeline.gridImpliedCandidatesFp(cellsC) > 8L * n)
   }
 
-  test("pcaGridNearDupPairs survives a rank-deficient corpus: exact duplicates still pair (the NaN guard)") {
+  test("adaptiveNearDupPairsFp survives a rank-deficient corpus: exact duplicates still pair") {
     // 6 identical vectors + 2 mutually-orthogonal others: the
     // normalized corpus is (near-)rank-deficient, power iteration can
-    // degenerate, and an unguarded projection would NULL the cell keys
-    // and lose the EASIEST pairs. All C(6,2)=15 cos=1.0 pairs must
-    // surface.
-    import org.apache.spark.sql.functions.col
+    // degenerate, and a projection that lost rows would lose the
+    // EASIEST pairs. All C(6,2)=15 cos=1.0 pairs must surface.
     val dim = 64
     def vec(hot: Int): Seq[Float] = (0 until dim).map(i => if (i == hot) 1.0f else 0.0f)
     val rows = (0 until 6).map(i => (i.toLong, vec(0), 0)) ++
@@ -904,7 +651,7 @@ class SimilarityPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("q224degen").toString
     rows.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val emb2 = graft.ops.Tables.embeddings(spark, dir)
-    val got = SimilarityPipeline.pcaGridNearDupPairs(emb2, 0.9, iters = 4)
+    val got = SimilarityPipeline.adaptiveNearDupPairsFp(emb2, tNum = 9, tDen = 10, iters = 4)
       .select(col("va"), col("vb")).as[(Long, Long)].collect().toSet
     val want = (for { a <- 0 until 6; b <- a + 1 until 6 } yield (a.toLong, b.toLong)).toSet
     assert(got == want, s"degenerate corpus lost pairs: missing=${want -- got} extra=${got -- want}")

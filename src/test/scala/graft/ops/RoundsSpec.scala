@@ -48,8 +48,6 @@ class RoundsSpec extends SparkSpec {
     ("bfsHops", 9, () => GraphOps.bfsHops(graph, "a", "b", Seq(1L, 10L).toDF("v"), "v")),
     ("kCorePeel converged", 16, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 5)),
     ("kCorePeel bounded", 10, () => GraphOps.kCorePeel(graph, "a", "b", k = 2, rounds = 2)),
-    ("kmeansCentroids", 22, () =>
-      SimilarityPipeline.kmeansCentroids(Tables.embeddings(spark, sfDir), cells = 4, iters = 3)),
     ("kmeansCentroidsFp", 28, () => SimilarityPipeline.kmeansCentroidsFp(fp, cells = 4, iters = 3)),
     ("ivfAssignCellsFp", 57, () => SimilarityPipeline.ivfAssignCellsFp(fp, cells = 4, iters = 3)),
   )
@@ -76,12 +74,6 @@ class RoundsSpec extends SparkSpec {
     // seeded at one end, a path of n vertices takes n rounds (the last
     // one reaches nothing)
     assert(jobs(9) - jobs(6) == 3)
-  }
-
-  test("topTwoAxes: no superseded pin stays pinned") {
-    val cov = SimilarityPipeline.covariance(Tables.embeddings(spark, sfDir)).localCheckpoint(true)
-    val (_, leftover) = run(SimilarityPipeline.topTwoAxes(cov, iters = 7))
-    assert(leftover.isEmpty, s"topTwoAxes left ${leftover.size} persisted RDDs its result does not read")
   }
 
   for ((name, parentJobs, loop) <- loops)

@@ -351,4 +351,28 @@ class JsonlSourceSpec extends SparkSpec {
       JsonlPartitionSource.listSealed(root.toString,
         Array(org.apache.spark.sql.sources.In("customer_id", Array("c1")))).size)
   }
+
+  test("a run Spark lands under a minted id (partitionBy escapes ':') reads back and filters by that id") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("jsonl_minted").resolve("sink")
+    val id = "2024-02-01T07:00:00.000Z"
+    Seq(("c1-100", "10"), ("c1-200", "20")).toDF("campaign_id", "clicks")
+      .withColumn("source", lit("gads"))
+      .withColumn("customer_id", lit("c1"))
+      .withColumn("query_name", lit("campaign_daily"))
+      .withColumn("logical_date", lit("2024-02-01"))
+      .withColumn("run_id", lit(id))
+      .write.partitionBy(JsonlPartitionSource.PartitionCols: _*).json(root.toString)
+    val walk = Files.walk(root)
+    val runDirs = try walk.iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("run_id=")).toList
+      finally walk.close()
+    assert(runDirs.map(_.getFileName.toString) == List("run_id=2024-02-01T07%3A00%3A00.000Z"))
+    runDirs.foreach(d => Files.writeString(d.resolve("_SEAL.json"), """{"sealed":true}"""))
+    val df = graft.ops.Extraction.readSink(spark, root.toString)
+    assert(df.select("run_id").distinct().as[String].collect().toSeq == Seq(id))
+    // the pushed EqualTo prunes directories by their unescaped value
+    assert(df.where(col("run_id") === id).orderBy("campaign_id")
+      .select("campaign_id").as[String].collect().toSeq == Seq("c1-100", "c1-200"))
+  }
 }

@@ -8,4 +8,7 @@ import org.apache.spark.SparkContext
   */
 object ListenerBusShim {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners registered on the context's shared bus, all queues. */
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size()
 }
