@@ -6,6 +6,14 @@ import org.apache.spark.sql.SparkSession
   * the tools) and the spec suite — configured in one place:
   * `local[cores]` with as many shuffle partitions as cores, no UI, UTC
   * session time zone, 4m Tungsten pages and WARN logging.
+  *
+  * Lifetime: a thread that one of Spark's cached pools (shuffle
+  * exchange, broadcast) creates while a session is active inherits it
+  * as its active session, and keeps that session reachable until the
+  * idle thread exits. Through `Pin`'s weak-keyed clone cache it keeps
+  * the session's non-adaptive clone reachable too. This matters only
+  * to an application that creates many short-lived sessions; graft's
+  * mains and specs hold one.
   */
 object GraftSession {
 

@@ -17,11 +17,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * expressions instead emit a single fused Java loop via `doGenCode`,
   * participating in whole-stage codegen like any built-in, with an
   * interpreted `nullSafeEval` fallback that matches bit-for-bit
-  * (parity-tested against the HOF forms).
+  * (parity-tested against the HOF forms, the specs'
+  * `graft.functions.VectorOracles`).
   *
   * This is the preference order SURVEY.md §7.2 prescribes: compose
-  * built-ins first (done — the HOF forms), drop to a custom Expression
-  * only where the bench demands it (q29/q37 similarity scans).
+  * built-ins first (the HOF forms), drop to a custom Expression only
+  * where the bench demands it (q29/q37 similarity scans).
   */
 object VectorExpressions {
 

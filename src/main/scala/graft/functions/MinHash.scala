@@ -3,42 +3,23 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The hash families of graft's near-duplicate operators, plus the
-  * per-row SimHash oracle.
-  *
-  *  - '''portable family''': [[portableHash60]] / [[portableHash48]] (md5
-  *    prefixes) and the Carter–Wegman rehash [[cwRehash]]. Every step is
-  *    reproducible verbatim in DuckDB SQL, which gives the registered
-  *    MinHash-LSH, SimHash and KMV queries real oracles;
-  *  - '''[[simHash]]''': the per-row (HOF) xxhash64 SimHash, the parity
-  *    oracle of the relational [[graft.llm.TextPipeline.simHashDf]].
+/** The portable hash family of graft's near-duplicate operators:
+  * [[portableHash60]] / [[portableHash48]] (md5 prefixes) and the
+  * Carter–Wegman rehash [[cwRehash]]. Every step is reproducible
+  * verbatim in DuckDB SQL, which gives the registered MinHash-LSH,
+  * SimHash and KMV queries real oracles.
   *
   * The MinHash signatures and band keys themselves have one relational
   * form ([[graft.llm.TextPipeline.minHashSignatures]], `bandKeys` and
   * their portable twins) and one per-row form
   * ([[graft.streaming.StreamingIncrementalDedup]]'s `rowSignature` /
-  * `rowBandStructs`).
+  * `rowBandStructs`). SimHash has one form,
+  * [[graft.llm.TextPipeline.simHashPortableDf]].
   *
   * Determinism: xxhash64 and md5 are fixed algorithms with fixed seeds,
   * so hashes are stable across runs and clusters.
   */
 object MinHash {
-
-  /** 64-bit SimHash over a token array: per-token xxhash64, sum ±1 per
-    * bit position, sign → bit. Hamming-close simhashes ⇒ similar token
-    * multisets. Computed bit-serially with HOFs.
-    */
-  def simHash(tokens: Column): Column = {
-    val hashes = transform(tokens, t => xxhash64(t))
-    (0 until 64).map { bit =>
-      val votes = aggregate(
-        hashes,
-        lit(0L),
-        (acc, h) => acc + when(h.bitwiseAND(lit(1L << bit)) =!= 0L, 1L).otherwise(-1L),
-      )
-      when(votes > 0, lit(1L << bit)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-  }
 
   // ------------------------------------------------------------------
   // Portable (cross-engine) variants. xxhash64 exists only in Spark;

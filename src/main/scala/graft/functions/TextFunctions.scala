@@ -33,18 +33,6 @@ object TextFunctions {
     when(size(ws) >= k, array_distinct(grams)).otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct character n-grams of the lowercased text (language-ID
-    * features). `"abcd"` n=2 → `["ab","bc","cd"]`.
-    */
-  def charNgrams(text: Column, n: Int): Column = {
-    val t = lower(text)
-    val starts = sequence(lit(1), length(t) - lit(n - 1))
-    when(
-      length(t) >= n,
-      array_distinct(transform(starts, i => t.substr(i, lit(n)))),
-    ).otherwise(array().cast("array<string>"))
-  }
-
   /** Whitespace token count. */
   def tokenCountWs(text: Column): Column = size(words(text)).cast("long")
 
@@ -99,19 +87,6 @@ object TextFunctions {
     */
   def prefixFingerprint(text: Column, k: Int): Column =
     md5(concat_ws(" ", slice(split(lower(text), " "), 1, k)))
-
-  /** Polynomial rolling hash of the whole token stream (order-sensitive
-    * document fingerprint). Accumulates mod 1e9+7 so the fold never
-    * overflows a long even under ANSI arithmetic.
-    */
-  def rollingHash(text: Column): Column = {
-    val prime = lit(1000000007L)
-    aggregate(
-      words(text),
-      lit(7L),
-      (acc, w) => (acc * 31L + (crc32(w) % prime)) % prime,
-    )
-  }
 
   /** Tiny per-language stopword profiles for the n-gram/stopword
     * language-ID heuristic. Public, conventional closed-class words.

@@ -137,7 +137,8 @@ object LlmQueries {
   // the DuckDB oracle, so the SELECTION AND ORDER hash-match
   // cross-engine; the float cosine VALUES stay property-pinned
   // (SimilarityPipelineSpec pins fp-ranking ≡ float-cosine ranking on
-  // the corpus, VectorExpressionsSpec pins native ≡ HOF bit-for-bit).
+  // the corpus, VectorExpressionsSpec pins native ≡ its spec-side HOF
+  // oracle bit-for-bit).
   val q29: QuerySpec = QuerySpec(
     "q29_similarity_topk",
     (s, d) => {
@@ -263,9 +264,9 @@ object LlmQueries {
   //
   // Oracle-checked since round 7 via the PORTABLE 60-bit form
   // (md5-prefix token hashes; bit votes and sign assembly identical in
-  // DuckDB — see q31's note on why the hash swap is free). The
-  // xxhash64 64-bit form stays the documented 100 TB fast path,
-  // parity-pinned in MinHashSpec.
+  // DuckDB — see q31's note on why the hash swap is free). It is the
+  // one SimHash form; at 100 TB the per-token hash can go back to
+  // xxhash64 with the plan unchanged.
   val q32: QuerySpec = QuerySpec(
     "q32_simhash",
     (s, d) =>
@@ -475,9 +476,11 @@ object LlmQueries {
       (if (tn2 == 1) "" else s"$tn2 * ") + "CAST(na AS HUGEINT) * nb2"
   }
 
-  /** cos ≥ tNum/tDen over a scored pair. */
+  /** cos ≥ tNum/tDen over a scored pair, zero vectors excluded —
+    * SimilarityPipeline's `cosAtLeast`.
+    */
   private def cosAtLeastSql(tNum: Int, tDen: Int): String =
-    "dot_fp >= 0 AND " + cosCmpSql(tNum, tDen, ">=")
+    "dot_fp >= 0 AND na > 0 AND nb2 > 0 AND " + cosCmpSql(tNum, tDen, ">=")
 
   /** loNum/loDen ≤ cos < hiNum/hiDen over a scored pair. */
   private def cosInBandSql(loNum: Int, loDen: Int, hiNum: Int, hiDen: Int): String =
@@ -533,8 +536,7 @@ object LlmQueries {
 
   /** The semantic drop/hit tail over a `pairs` CTE of intra-cell pairs
     * (`pair`._1, `pair`._2, cell): score them in `fp` under aliases
-    * `as`, keep those that clear cos ≥ tNum/tDen with the zero-vector
-    * guard (CTE `kept`), and emit each `flagged` vector's minimal
+    * `as`, keep those that clear cos ≥ tNum/tDen (CTE `kept`), and emit each `flagged` vector's minimal
     * `witness` as (vec_id, `witnessAs`, cell, cos2_bp) —
     * SimilarityPipeline's `minimalWitness`.
     */
@@ -542,8 +544,7 @@ object LlmQueries {
       pair: (String, String), as: (String, String), flagged: String, witness: String,
       kept: String, witnessAs: String, tNum: Int, tDen: Int): String =
     scoredCteSql("scored", s"${pair._1}, ${pair._2}, cell", "pairs", "fp", pair, as) + ", " +
-      s"$kept AS (SELECT * FROM scored WHERE dot_fp >= 0 AND na > 0 AND nb2 > 0 " +
-      s"AND ${cosCmpSql(tNum, tDen, ">=")}) " +
+      s"$kept AS (SELECT * FROM scored WHERE ${cosAtLeastSql(tNum, tDen)}) " +
       s"SELECT vec_id, $witnessAs, cell, cos2_bp FROM (SELECT $flagged AS vec_id, $witness AS $witnessAs, " +
       "CAST(cell AS BIGINT) AS cell, " +
       s"$cos2BpSql, " +

@@ -21,10 +21,9 @@ import graft.ops.Pin.PinOps
   *  - fixed-point PCA ([[topTwoAxesFp]]) for projection and the
   *    adaptive grid/sign-LSH near-dup cascade.
   *
-  * Two float forms remain. [[bruteForceTopK]] is the exact reference
-  * the approximate forms' recall is measured against. The float
-  * sign-LSH [[annNearDupPairs]] ([[cellBits]]/[[withCells]]) is the
-  * path of `Multimodal.mediaNearDupPairs`.
+  * `Multimodal.mediaNearDupPairs` runs the same portable cascade over
+  * L2-normalized decoder embeddings. The exact float top-k that the
+  * approximate forms' recall is measured against lives with the specs.
   *
   * At 100 TB the same shapes hold: anchors/centroids broadcast,
   * candidate generation is an equijoin on (cell) or (band key) —
@@ -33,28 +32,11 @@ import graft.ops.Pin.PinOps
   */
 object SimilarityPipeline {
 
-  /** Exact top-k neighbors for each vector in `queries` (small,
-    * broadcast) over `corpus`. Output: (query_id, vec_id, score),
-    * k rows per query.
-    */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id"),
-        VectorFunctions.cosine(col("embedding"), col("q_emb")).as("score"),
-      )
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("vec_id"))
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
-  }
-
   // ------------------------------------------------------------------
   // Data-scaled sign-LSH coarse quantizer. Cells are sign buckets of
-  // `bits` random hyperplanes (deterministic, no fit pass, no driver
-  // state): float splitmix64 planes in [[withCells]], md5-derived
-  // planes with integer sign decisions in [[withCellsPortable]].
+  // `bits` md5-derived hyperplanes with integer sign decisions
+  // ([[withCellsPortable]]; deterministic, no fit pass, no driver
+  // state).
   // `cellBits` picks bits so the expected cell occupancy stays
   // ~`targetOccupancy` regardless of corpus size: cells ∝ N, so
   // per-cell candidate-pair counts stay FLAT as the corpus grows — the
@@ -86,10 +68,6 @@ object SimilarityPipeline {
     val occ2 = BigInt(targetOccupancy) * BigInt(targetOccupancy)
     (1 to 16).reverse.find(k => n2 >= occ2 * (BigInt(1) << (2 * k - 1))).getOrElse(1)
   }
-
-  /** Adds the quantizer assignment as a `cell` column. */
-  def withCells(corpus: DataFrame, bits: Int, dim: Int = 64, seed: Long = 42L): DataFrame =
-    corpus.withColumn("cell", VectorFunctions.signBucket(col("embedding"), dim, bits, seed))
 
   /** `cells = (vec_id, cell, carry…)` exploded to one row per bit-masked
     * band key: (carry…, m, key) with key = cell with bit m cleared. Two
@@ -133,9 +111,12 @@ object SimilarityPipeline {
     VectorFunctions.prodCmp3(col("dot_fp"), col("dot_fp"), tDen.toLong * tDen,
       col("na"), col("nb"), tNum.toLong * tNum)
 
-  /** cos ≥ tNum/tDen. */
-  private def cosAtLeast(tNum: Int, tDen: Int): Column =
-    col("dot_fp") >= 0 && cosCmp(tNum, tDen) >= 0
+  /** cos ≥ tNum/tDen. A zero vector has no cosine to anything, so
+    * positive norms are part of the rule: without them 0 ≥ 0 passes
+    * the cross-multiplied test vacuously and `cos2_bp` throws.
+    */
+  private[graft] def cosAtLeast(tNum: Int, tDen: Int): Column =
+    col("dot_fp") >= 0 && col("na") > 0 && col("nb") > 0 && cosCmp(tNum, tDen) >= 0
 
   /** loNum/loDen ≤ cos < hiNum/hiDen. lo > 0 ⇒ d ≥ 0 on every survivor,
     * so the upper test needs no sign branch.
@@ -619,36 +600,13 @@ object SimilarityPipeline {
       flagged: String, witness: String, witnessAs: String): DataFrame = {
     val w = Window.partitionBy(flagged).orderBy(asc(witness))
     pairs
-      // na/nb > 0 excludes zero quantized vectors: 0 ≥ 0 would pass
-      // the cross-multiplied test vacuously and the cos2_bp div by
-      // na·nb = 0 would throw under ANSI (r9-ADVICE); a zero vector
-      // has no cosine to anything, so it can never be a dup
-      .where(col("dot_fp") >= 0 && col("na") > 0 && col("nb") > 0 && cosCmp(tNum, tDen) >= 0)
+      .where(cosAtLeast(tNum, tDen))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .select(
         col(flagged).as("vec_id"), col(witness).as(witnessAs),
         col("cell").cast("long").as("cell"),
         VectorFunctions.cos2Bp(col("dot_fp"), col("na"), col("nb")).as("cos2_bp"))
-  }
-
-  /** Near-dup pairs under the sign-LSH quantizer: candidates = pairs
-    * whose cells agree on all bits or differ in exactly one (banded
-    * join on each bit-masked key), then exact cosine ≥ `threshold`
-    * verifies candidates only — same candidates-then-verify shape as
-    * [[TextPipeline.dedupCascade]].
-    */
-  def annNearDupPairs(corpus: DataFrame, threshold: Double, bits: Int, dim: Int = 64): DataFrame = {
-    val e = withCells(corpus, bits, dim).select(col("vec_id"), col("cell"), col("embedding"))
-    val cand = bandCollisions(bandKeys(e, bits, "vec_id"))
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
-      .distinct() // same-cell pairs collide on every masked key
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    cand
-      .join(emb.select(col("vec_id").as("va"), col("embedding").as("ea")), Seq("va"))
-      .join(emb.select(col("vec_id").as("vb"), col("embedding").as("eb")), Seq("vb"))
-      .select(col("va"), col("vb"), VectorFunctions.cosine(col("ea"), col("eb")).as("cos"))
-      .where(col("cos") >= threshold)
   }
 
   // ------------------------------------------------------------------
@@ -660,7 +618,10 @@ object SimilarityPipeline {
   // q37, q38, q217 and q258 run.
   // ------------------------------------------------------------------
 
-  /** [[withCells]] with md5-derived planes and integer sign decisions. */
+  /** Adds the quantizer assignment as a `cell` column:
+    * [[VectorFunctions.signBucketPortable]] over `bits` md5-derived
+    * planes.
+    */
   def withCellsPortable(corpus: DataFrame, bits: Int, dim: Int = 64): DataFrame =
     corpus.withColumn("cell", VectorFunctions.signBucketPortable(col("embedding"), dim, bits))
 

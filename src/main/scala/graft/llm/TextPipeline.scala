@@ -20,8 +20,7 @@ import graft.functions.MinHash
   *
   * The per-row (HOF) forms left are oracles or streaming twins, each
   * parity-tested against its relational form here:
-  * [[graft.functions.TextFunctions]] (shingles, language id),
-  * [[graft.functions.MinHash.simHash]] (SimHash) and
+  * [[graft.functions.TextFunctions]] (shingles, language id) and
   * [[graft.streaming.StreamingIncrementalDedup]] (MinHash signatures
   * and band keys of one row).
   */
@@ -220,25 +219,6 @@ object TextPipeline {
     }
   }
 
-  /** Most-selective banding geometry (largest rows-per-band, so random
-    * collisions ≈ j^r stay low) that still achieves `minRecall` for
-    * pairs at jaccard `jTarget`: returns (bands, rowsPerBand) with
-    * bands·rows ≤ k. bandingFor(0.8) = (16, 4); bandingFor(0.5) =
-    * (32, 2); bandingFor(0.9, minRecall = 0.99) = (9, 7).
-    */
-  def bandingFor(jTarget: Double, k: Int = 64, minRecall: Double = 0.999): (Int, Int) = {
-    require(jTarget > 0 && jTarget < 1 && minRecall > 0 && minRecall < 1)
-    (k to 1 by -1).view
-      .map(r => (k / r, r))
-      .collectFirst {
-        case (b, r) if b >= 1 && 1.0 - math.pow(1.0 - math.pow(jTarget, r), b) >= minRecall =>
-          (b, r)
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"no (bands, rows) within $k hashes reaches recall $minRecall at jaccard $jTarget; " +
-          "raise k or lower minRecall"))
-  }
-
   /** The composed near-dup pipeline — THE shape that survives 100 TB:
     * MinHash-LSH banding narrows the corpus to candidate pairs
     * (O(docs·bands) shuffle, no all-pairs anywhere), then exact
@@ -260,9 +240,10 @@ object TextPipeline {
     * measured at 16× (80k docs) 32×2 floods exact-verify with 65,903
     * candidates where 16×4 sends 4,101. If you need guaranteed recall
     * down AT the verify threshold itself (pairs at j ≈ threshold are
-    * must-keeps), compute the geometry with [[bandingFor]] — e.g.
-    * bandingFor(0.5) → 32×2 — and pay the verify bill; q30's full
-    * exact operator remains the uncompromising reference.
+    * must-keeps), pick the largest rows-per-band r with
+    * 1 − (1 − j^r)^(k/r) ≥ the recall target — 32×2 for j = 0.5 at
+    * recall 0.999 — and pay the verify bill; q30's full exact
+    * operator remains the uncompromising reference.
     */
   def dedupCascade(
       docs: DataFrame,
@@ -562,28 +543,17 @@ object TextPipeline {
         col("stopword_ratio") >= minStopwordRatio)
   }
 
-  /** SimHash per doc, relational form: per-token hash, per-bit ±1 vote
-    * sums in one 64-column aggregate, sign → bit. Matches
-    * [[graft.functions.MinHash.simHash]] bit-for-bit (parity-tested).
+  /** Portable 60-bit SimHash per doc (md5-prefix token hashes),
+    * relational: per-token hash, per-bit ±1 vote sums in one 60-column
+    * aggregate, sign → bit. Every step — tokenization, per-token hash,
+    * bit votes, sign assembly — is reproducible verbatim in DuckDB SQL,
+    * which is what buys q32 a real oracle.
     */
-  def simHashDf(docs: DataFrame): DataFrame =
-    simHashDfWith(docs, 64, xxhash64(_))
-
-  /** Portable 60-bit SimHash (md5-prefix token hashes): every step —
-    * tokenization, per-token hash, bit votes, sign assembly — is
-    * reproducible verbatim in DuckDB SQL, which is what buys q32 a
-    * real oracle. Same vote construction as [[simHashDf]], bits 0–59.
-    */
-  def simHashPortableDf(docs: DataFrame): DataFrame =
-    simHashDfWith(docs, 60, MinHash.portableHash60(_))
-
-  private def simHashDfWith(
-      docs: DataFrame,
-      bits: Int,
-      tokHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+  def simHashPortableDf(docs: DataFrame): DataFrame = {
+    val bits = 60
     val tok = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), tokHash(col("w")).as("h"))
+      .select(col("doc_id"), MinHash.portableHash60(col("w")).as("h"))
     val votes = (0 until bits).map { b =>
       sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1L).otherwise(-1L)).as(s"v$b")
     }
@@ -636,7 +606,7 @@ object TextPipeline {
     * expression) on the candidates only. The third
     * candidates-then-verify instance in the engine, beside
     * [[dedupCascade]] (set similarity) and
-    * [[graft.llm.SimilarityPipeline.annNearDupPairs]] (vector
+    * [[graft.llm.SimilarityPipeline.annNearDupPairsPortable]] (vector
     * similarity) — edit distance covers the typo/near-copy record
     * linkage case the other two miss.
     *

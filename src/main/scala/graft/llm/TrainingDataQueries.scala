@@ -305,8 +305,8 @@ object TrainingDataQueries {
   // threshold — a pair at j=0.5 is recovered with ~64% probability,
   // j=0.65 with ~96%, ≥99% from j≈0.71, and the near-dup clusters
   // this operator exists for (j≥0.8) with ~99.98%. The alternative
-  // that guarantees 99.9%
-  // at exactly 0.5 (`bandingFor(0.5)` = 32×2) admits RANDOM pairs at
+  // that guarantees 99.9% at exactly 0.5 (32 bands × 2 rows:
+  // 1 − (1 − 0.5²)³² ≈ 0.9999) admits RANDOM pairs at
   // j² per band and measurably floods the verify stage as the corpus
   // grows (SCALE_NOTES round-2 lesson: 65,903 vs 4,101 candidates at
   // 16×, identical recall on every tested corpus) — r=2 is not viable

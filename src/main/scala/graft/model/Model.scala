@@ -52,27 +52,12 @@ object PartitionState {
   val Pending = "pending"
   val Success = "success"
   val Failed = "failed"
-  val validStatuses: Set[String] = Set(Pending, Success, Failed)
 
   /** `[terminal]` marker semantics (reference cli.py:667-674): an error
     * message carrying this prefix is excluded from retry sweeps.
     */
   val TerminalMarker = "[terminal]"
 }
-
-/** Consumer-visible publication pointer (pointer_store.py:8-18): the
-  * atomic publish point — consumers resolve a logical partition to
-  * exactly one run_id through this table.
-  */
-final case class WarehousePointer(
-    source: String,
-    customerId: String,
-    queryName: String,
-    logicalDate: Date,
-    runId: String,
-    schemaVersion: String,
-    loadedAt: Timestamp,
-)
 
 /** Run identity (run_context.py:8-15): ISO-8601 UTC millisecond
   * timestamp minted once per execution attempt. Lexicographic order ==

@@ -350,12 +350,21 @@ object Multimodal {
 
   /** Composed pipeline: media near-duplicate pairs via decoded
     * embeddings — decode/feature-extract (one decoder per partition),
-    * then the ANN candidates-then-verify cascade from
-    * [[graft.llm.SimilarityPipeline.annNearDupPairs]] (sign-LSH cells
-    * sized to the corpus, banded hamming-≤1 candidate join, exact
-    * cosine verify on candidates only). This is image/audio dedup as a
-    * training-data pipeline runs it at 100 TB: payload bytes are
-    * dropped after feature extraction, and no stage compares all pairs.
+    * L2-normalize, then the portable sign-LSH cascade every registered
+    * near-dup query runs ([[graft.llm.SimilarityPipeline.portableVerifiedPairs]]:
+    * md5-plane cells sized to the corpus, banded hamming-≤1 candidate
+    * join, exact fixed-point verify on candidates only). This is
+    * image/audio dedup as a training-data pipeline runs it at 100 TB:
+    * payload bytes are dropped after feature extraction, and no stage
+    * compares all pairs.
+    *
+    * `threshold` is taken as the exact decimal it prints as (0.999 is
+    * 999/1000) and tested as cos ≥ tNum/tDen in integers. Cosine is
+    * scale-invariant, and unit length keeps every fixed-point dot
+    * inside int64 whatever the decoder's output scale. A zero
+    * embedding (a silent clip) has no cosine and pairs with nothing.
+    * Output (media_a, media_b, cos), `cos` computed from the pair's
+    * own fixed-point dot and norms.
     */
   def mediaNearDupPairs(
       media: Dataset[MediaRecord],
@@ -364,22 +373,32 @@ object Multimodal {
       embeddingDim: Int = 8,
   ): DataFrame = {
     import graft.llm.SimilarityPipeline
-    // Eagerly materialize the decoded features: the banded self-join +
-    // two verify joins would otherwise re-run the decode ~5×, and a
-    // non-bit-deterministic real decoder (GPU/ONNX reductions) would
-    // tear candidates vs verify across independent evaluations.
-    // pinLineage = the repo's standard one-materialization barrier
-    // (localCheckpoint, or a reliable checkpoint under Pin.Flag for
-    // spot/preemptible executors); blocks are freed by the
-    // ContextCleaner when the result is GC'd.
+    val t = java.math.BigDecimal.valueOf(threshold)
+    require(t.signum > 0 && t.compareTo(java.math.BigDecimal.ONE) <= 0, "threshold must be in (0, 1]")
+    val digits = math.max(0, t.scale)
+    require(digits <= 9, s"threshold $threshold has more than 9 decimal digits")
+    val tNum = t.movePointRight(digits).intValueExact
+    val tDen = math.pow(10, digits).toInt
+    // Eagerly materialize the normalized features: the banded
+    // self-join reads them twice, and a non-bit-deterministic real
+    // decoder (GPU/ONNX reductions) would tear the two sides across
+    // independent evaluations. pinLineage = the repo's standard
+    // one-materialization barrier (localCheckpoint, or a reliable
+    // checkpoint under Pin.Flag for spot/preemptible executors);
+    // blocks are freed by the ContextCleaner when the result is GC'd.
     val emb = decodeFeatures(media, mkDecoder)
-      .select(col("media_id").as("vec_id"), col("embedding"))
+      .select(col("media_id").as("vec_id"), col("embedding"),
+        sqrt(graft.functions.VectorFunctions.dot(col("embedding"), col("embedding"))).as("norm"))
+      .select(col("vec_id"),
+        transform(col("embedding"),
+          x => when(col("norm") > 0, x / col("norm")).otherwise(x).cast("float")).as("embedding"))
       .pinLineage()
     val n = emb.count() // index sizing over the checkpoint (same driver action as q37/q38)
     SimilarityPipeline
-      .annNearDupPairs(emb, threshold, SimilarityPipeline.cellBits(n), embeddingDim)
-      .withColumnRenamed("va", "media_a")
-      .withColumnRenamed("vb", "media_b")
+      .portableVerifiedPairs(emb, SimilarityPipeline.cellBits(n), embeddingDim,
+        SimilarityPipeline.cosAtLeast(tNum, tDen))
+      .select(col("va").as("media_a"), col("vb").as("media_b"),
+        (col("dot_fp") / (sqrt(col("na")) * sqrt(col("nb")))).as("cos"))
   }
 
   /** Repartition media by cumulative byte budget instead of row count:

@@ -37,9 +37,8 @@ object AnalyticQueries {
   // Scale: exact percentile buffers the per-group value multiset — memory
   // ∝ distinct values per group, fine for profiling runs and bounded
   // groups, wrong for arbitrary 100 TB groups. The production path at
-  // scale is `ApproxOps.percentiles` (GK-sketch `percentile_approx`,
-  // mergeable, bounded memory); this query is its exact twin and the
-  // oracle anchor the approx spec tests error bounds against.
+  // scale is Spark's GK-sketch `percentile_approx` (mergeable, bounded
+  // memory); this query is its exact twin.
   val q49: QuerySpec = QuerySpec(
     "q49_percentiles_exact",
     (s, d) =>
@@ -349,7 +348,7 @@ object AnalyticQueries {
   // count-distinct on (cohort, offset) — distinct-aggregation shuffles
   // (key, user) pairs, bounded by active users × weeks, not raw
   // events. At extreme user counts, countDistinct swaps for an HLL
-  // sketch (ApproxOps) with the same plan shape.
+  // sketch (`approx_count_distinct`) with the same plan shape.
   val q57: QuerySpec = QuerySpec(
     "q57_cohort_retention",
     (s, d) => {
@@ -584,7 +583,7 @@ object AnalyticQueries {
   //
   // Scale: the groupBy shuffles one row per key per mapper; the total
   // is a 1-row broadcast. For cardinalities where even key-counts are
-  // too big, the sketch path (ApproxOps / freqItems) finds the same
+  // too big, the sketch path (`freqItems`) finds the same
   // hitters with bounded memory; this exact form is its anchor.
   val q63: QuerySpec = QuerySpec(
     "q63_heavy_hitters",

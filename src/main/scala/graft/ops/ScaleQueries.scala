@@ -117,8 +117,8 @@ object ScaleQueries {
   // sides, and reported medians round to 6dp (q49's rule).
   //
   // Scale: two grouped exact percentiles (per-group value buffers —
-  // the q49 caveat: profiling-grade, with `ApproxOps.percentiles` as
-  // the sketch-backed 100 TB twin) plus broadcast joins of the 5-row
+  // the q49 caveat: profiling-grade, with Spark's `percentile_approx`
+  // as the sketch-backed 100 TB swap-in) plus broadcast joins of the 5-row
   // stats frames back onto the fact — the fact is scanned three times
   // (median, MAD, gate) but never shuffled: every join side that
   // moves is ≤ one row per group. At 100 TB persist the deviation
@@ -182,7 +182,7 @@ object ScaleQueries {
   // stats, then explodes to long form (the oracle's UNION ALL rescans
   // per column; the engine must not). The exact countDistincts expand
   // the aggregate per distinct column — the documented 100 TB swap-in
-  // is approx_count_distinct (ApproxOps), one pass, no expand,
+  // is approx_count_distinct, one pass, no expand,
   // mergeable sketches.
   val q93: QuerySpec = QuerySpec(
     "q93_column_profile",

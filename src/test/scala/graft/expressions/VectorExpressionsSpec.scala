@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.VectorFunctions
+import graft.functions.{VectorFunctions, VectorOracles}
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
@@ -16,9 +16,9 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(
         col("vec_id"),
         VectorFunctions.dot(col("embedding"), col("a")).as("d_native"),
-        VectorFunctions.dotHof(col("embedding"), col("a")).as("d_hof"),
+        VectorOracles.dotHof(col("embedding"), col("a")).as("d_hof"),
         VectorFunctions.cosine(col("embedding"), col("a")).as("c_native"),
-        VectorFunctions.cosineHof(col("embedding"), col("a")).as("c_hof"),
+        VectorOracles.cosineHof(col("embedding"), col("a")).as("c_hof"),
       )
       .collect()
     both.foreach { r =>
@@ -35,7 +35,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(
         col("vec_id"),
         VectorFunctions.dotFp(col("embedding"), col("a"), S).as("d_native"),
-        VectorFunctions.dotFpHof(col("embedding"), col("a"), S).as("d_hof"),
+        VectorOracles.dotFpHof(col("embedding"), col("a"), S).as("d_hof"),
       )
       .collect()
     both.foreach { r =>
@@ -77,7 +77,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(
         col("vec_id"),
         VectorFunctions.dotLong(col("q"), col("qa")).as("d_native"),
-        VectorFunctions.dotLongHof(col("q"), col("qa")).as("d_hof"))
+        VectorOracles.dotLongHof(col("q"), col("qa")).as("d_hof"))
       .collect()
       .foreach(r => assert(r.getLong(1) == r.getLong(2), s"dot_long mismatch at vec ${r.getLong(0)}"))
     // overflow parity: both paths fail LOUDLY through ANSI arithmetic
@@ -89,11 +89,11 @@ class VectorExpressionsSpec extends SparkSpec {
           .select(f(col("x"), col("y"))).collect()
       }.toString.toLowerCase.contains("overflow")
     assert(overflows(VectorFunctions.dotLong), "native must throw on overflow")
-    assert(overflows(VectorFunctions.dotLongHof), "HOF must throw on overflow")
+    assert(overflows(VectorOracles.dotLongHof), "HOF must throw on overflow")
     val empty = Seq((Seq.empty[Long], Seq.empty[Long])).toDF("x", "y")
       .select(
         VectorFunctions.dotLong(col("x"), col("y")).as("n"),
-        VectorFunctions.dotLongHof(col("x"), col("y")).as("h"))
+        VectorOracles.dotLongHof(col("x"), col("y")).as("h"))
       .head()
     assert(empty.getLong(0) == 0L && empty.getLong(1) == 0L)
     // DOCUMENTED DIVERGENCES from the HOF (r9-ADVICE): (1) a length
@@ -111,7 +111,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .toDF("x", "y")
       .select(
         VectorFunctions.dotLong(col("x"), col("y")).as("n"),
-        VectorFunctions.dotLongHof(col("x"), col("y")).as("h"))
+        VectorOracles.dotLongHof(col("x"), col("y")).as("h"))
       .head()
     assert(withNullEl.getLong(0) == 100L, "native skips null elements (partial sum)")
     assert(withNullEl.isNullAt(1), "HOF propagates NULL — the divergence this pin documents")
@@ -191,7 +191,7 @@ class VectorExpressionsSpec extends SparkSpec {
     // divergence in the round-half-away rule would fork the oracles
     emb.select(
         VectorFunctions.quantizeFp(col("embedding"), 10000000L).as("n"),
-        VectorFunctions.quantizeFpHof(col("embedding"), 10000000L).as("h"))
+        VectorOracles.quantizeFpHof(col("embedding"), 10000000L).as("h"))
       .collect()
       .foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
     // edges: empty array, exact .5 boundaries both signs, null array
@@ -203,7 +203,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .orderBy("tag")
       .select(
         VectorFunctions.quantizeFp(col("x"), 10L).as("n"),
-        VectorFunctions.quantizeFpHof(col("x"), 10L).as("h"))
+        VectorOracles.quantizeFpHof(col("x"), 10L).as("h"))
       .collect()
     assert(edge(0).getSeq[Long](0).isEmpty)
     assert(edge(1).getSeq[Long](0) == edge(1).getSeq[Long](1))

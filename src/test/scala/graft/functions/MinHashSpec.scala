@@ -51,20 +51,6 @@ class MinHashSpec extends SparkSpec {
       s"xxhash64 LSH missed too many exact pairs: $missed")
   }
 
-  test("simHash: identical token sets equal, near sets hamming-close, disjoint far") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta iota"),
-      (3L, "one two three four five six seven eight"),
-    ).toDF("id", "text")
-      .select(col("id"), simHash(split(col("text"), " ")).as("sh"))
-    val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(m(1L), m(2L)) < ham(m(1L), m(3L)))
-    assert(ham(m(1L), m(2L)) <= 16)
-  }
-
   test("simHashPortable: 60-bit range, identical sets equal, near sets closer than disjoint") {
     import spark.implicits._
     val docs = Seq(

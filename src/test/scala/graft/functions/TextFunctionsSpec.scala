@@ -22,11 +22,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(oneSeq(wordShingles(col("text"), 2), "x y x y x") == List("x y", "y x"))
   }
 
-  test("charNgrams") {
-    assert(oneSeq(charNgrams(col("text"), 2), "AbCd") == List("ab", "bc", "cd"))
-    assert(oneSeq(charNgrams(col("text"), 3), "ab") == Nil)
-  }
-
   test("token counts: whitespace vs BPE-ish regex") {
     assert(one[Long](tokenCountWs(col("text")), "hello world foo") == 3L)
     // "don't stop!" → [don]['][t][stop][!] for the regex tokenizer
@@ -46,13 +41,6 @@ class TextFunctionsSpec extends SparkSpec {
     val b = one[String](prefixFingerprint(col("text"), 4), "the quick brown fox DIFFERENT TAIL")
     assert(a == b)
     assert(a.matches("[0-9a-f]{32}"))
-  }
-
-  test("rollingHash is order-sensitive") {
-    val a = one[Long](rollingHash(col("text")), "a b c")
-    val b = one[Long](rollingHash(col("text")), "c b a")
-    assert(a != b)
-    assert(a == one[Long](rollingHash(col("text")), "a b c"))
   }
 
   test("langId identifies real multilingual prose") {

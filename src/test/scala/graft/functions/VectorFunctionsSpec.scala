@@ -13,7 +13,7 @@ class VectorFunctionsSpec extends SparkSpec {
       .select(
         dot(col("a"), col("b")).as("dot"),
         cosine(col("a"), col("b")).as("cos"),
-        l2Sq(col("a"), col("b")).as("l2sq"),
+        VectorOracles.l2Sq(col("a"), col("b")).as("l2sq"),
       ).head()
     (row.getDouble(0), row.getDouble(1), row.getDouble(2))
   }
@@ -36,7 +36,7 @@ class VectorFunctionsSpec extends SparkSpec {
       (1L, Seq.fill(8)(1f)),
       (2L, Seq.fill(8)(1f)),
       (3L, Seq.fill(8)(-1f)),
-    ).toDF("id", "v").select(col("id"), signBucket(col("v"), 8, 16).as("b"))
+    ).toDF("id", "v").select(col("id"), signBucketPortable(col("v"), 8, 16).as("b"))
     val buckets = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(buckets(1L) == buckets(2L))
     assert(buckets(1L) != buckets(3L))
@@ -44,7 +44,7 @@ class VectorFunctionsSpec extends SparkSpec {
 
   test("signBucket approximately preserves cosine neighborhoods on real embeddings") {
     val emb = graft.ops.Tables.embeddings(spark, sfDir).limit(100)
-    val withB = emb.select(col("vec_id"), signBucket(col("embedding"), 64, 12).as("b"))
+    val withB = emb.select(col("vec_id"), signBucketPortable(col("embedding"), 64, 12).as("b"))
     // buckets must be non-degenerate: more than one bucket, fewer than n
     val n = withB.count()
     val nb = withB.select("b").distinct().count()

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.VectorOracles
 
 class SimilarityPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -17,7 +18,7 @@ class SimilarityPipelineSpec extends SparkSpec {
   private val FloatKmeansRecall = 6.0 / 15
 
   test("bruteForceTopK returns k rows per query, scores descending, no self-match") {
-    val out = SimilarityPipeline.bruteForceTopK(emb, emb.where(col("vec_id") < 3), 5)
+    val out = VectorOracles.bruteForceTopK(emb, emb.where(col("vec_id") < 3), 5)
     val rows = out.as[(Long, Long, Double)].collect()
     assert(rows.length == 15)
     rows.groupBy(_._1).foreach { case (_, g) =>
@@ -25,28 +26,6 @@ class SimilarityPipelineSpec extends SparkSpec {
       assert(scores.sorted.reverse.toSeq == scores.toSeq)
     }
     assert(rows.forall(r => r._1 != r._2))
-  }
-
-  test("annNearDupPairs: only exact-cosine-verified pairs, subset of brute force, pinned recall") {
-    val bits = SimilarityPipeline.cellBits(emb.count())
-    val ann = SimilarityPipeline.annNearDupPairs(emb, 0.4, bits)
-      .as[(Long, Long, Double)].collect()
-    assert(ann.forall(_._3 >= 0.4))
-    assert(ann.map(p => (p._1, p._2)).distinct.length == ann.length, "banding must dedupe pairs")
-    // brute-force truth over all pairs ≥ 0.4
-    val e = emb.select(col("vec_id"), col("embedding"))
-    val all = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id"), col("b.vec_id"),
-        graft.functions.VectorFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
-      .where(col("c") >= 0.4)
-      .as[(Long, Long, Double)].collect()
-    val truth = all.map(p => (p._1, p._2)).toSet
-    val found = ann.map(p => (p._1, p._2)).toSet
-    assert(found.subsetOf(truth), s"false positives: ${found -- truth}")
-    if (truth.nonEmpty) {
-      val recall = (found intersect truth).size.toDouble / truth.size
-      assert(recall >= 0.4, s"near-dup recall dropped to $recall (truth=${truth.size})")
-    }
   }
 
   test("annTopKPortable: fp ranking agrees with float cosine over its own candidates, pinned recall") {
@@ -59,7 +38,7 @@ class SimilarityPipelineSpec extends SparkSpec {
     // the same set the float cosine would pick from the SAME candidate
     // pool (the integer key only replaces the ORDER carrier, never the
     // geometry)
-    val bf = SimilarityPipeline.bruteForceTopK(emb, queries, emb.count().toInt)
+    val bf = VectorOracles.bruteForceTopK(emb, queries, emb.count().toInt)
       .as[(Long, Long, Double)].collect()
     val bfMap = bf.map { case (q, v, s) => (q, v) -> s }.toMap
     val cands = SimilarityPipeline.annTopKPortable(emb, queries, emb.count().toInt, bits)
@@ -112,6 +91,19 @@ class SimilarityPipelineSpec extends SparkSpec {
     }
   }
 
+  test("annNearDupPairsPortable: zero vectors pair with nothing, the rest is unchanged") {
+    // a zero vector's sign bucket is all-ones, so two of them always
+    // collide; with no norm they have no cosine to clear
+    val corpus = emb.select("vec_id", "embedding")
+    val zeros = Seq(1000000L, 1000001L).map(id => (id, Array.fill(64)(0f))).toDF("vec_id", "embedding")
+    val bits = SimilarityPipeline.cellBits(corpus.count())
+    def pairs(c: org.apache.spark.sql.DataFrame) =
+      SimilarityPipeline.annNearDupPairsPortable(c, 2, 5, bits).as[(Long, Long, Long, Long)].collect().toSet
+    val want = pairs(corpus)
+    assert(want.nonEmpty)
+    assert(pairs(corpus.unionByName(zeros)) == want)
+  }
+
   test("kmeansTopKFp: integer ranking mirrors float cosine order, deterministic, recall agrees with float form") {
     val queries = emb.where(col("vec_id") < 5)
     val n = emb.count()
@@ -128,7 +120,7 @@ class SimilarityPipelineSpec extends SparkSpec {
     assert(runFp().sortBy(r => (r._1, r._2)).toSeq == fp.sortBy(r => (r._1, r._2)).toSeq)
     // the integer key resolves cos² at ~1e-18 — its order must agree
     // with float cosine up to double noise on every returned ranking
-    val bf = SimilarityPipeline.bruteForceTopK(emb, queries, n.toInt)
+    val bf = VectorOracles.bruteForceTopK(emb, queries, n.toInt)
       .as[(Long, Long, Double)].collect()
     val cosMap = bf.map { case (q, v, s) => (q, v) -> s }.toMap
     fp.groupBy(_._1).foreach { case (q, g) =>
@@ -545,7 +537,7 @@ class SimilarityPipelineSpec extends SparkSpec {
       val corpus = graft.ops.Tables.embeddings(spark, dir)
       val n = corpus.count()
       val bits = SimilarityPipeline.cellBits(n)
-      val perCell = SimilarityPipeline.withCells(corpus, bits)
+      val perCell = SimilarityPipeline.withCellsPortable(corpus, bits)
         .groupBy("cell").agg(count(lit(1)).as("c"))
         .select(sum(col("c") * (col("c") - 1) / 2).as("pairs"), count(lit(1)).as("cells"))
         .as[(Double, Long)].head()

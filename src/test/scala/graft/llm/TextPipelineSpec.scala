@@ -22,13 +22,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(relational == hof)
   }
 
-  test("simHashDf ≡ MinHash.simHash column form") {
-    val relational = TextPipeline.simHashDf(docs).as[(Long, Long)].collect().toMap
-    val hof = docs.select(col("doc_id"), MinHash.simHash(split(col("text"), " ")).as("sh"))
-      .as[(Long, Long)].collect().toMap
-    assert(relational == hof)
-  }
-
   test("langIdDf ≡ TextFunctions.langId on multilingual fixtures") {
     val fixtures = Seq(
       (0L, "the cat sat on the mat and it was happy"),
@@ -129,16 +122,6 @@ class TextPipelineSpec extends SparkSpec {
     // and the end-to-end answer still matches the exact operator (empty here)
     assert(TextPipeline.prefixFilterPairs(fixture, 3, 0.8).count() ==
       TextPipeline.exactJaccardPairs(fixture, 3, 0.8).count())
-  }
-
-  test("bandingFor: most-selective geometry meeting the recall target") {
-    import TextPipeline.bandingFor
-    assert(bandingFor(0.8) == (16, 4))
-    assert(bandingFor(0.5) == (32, 2))
-    val (b9, r9) = bandingFor(0.9, minRecall = 0.99)
-    assert(b9 * r9 <= 64 && 1.0 - math.pow(1.0 - math.pow(0.9, r9), b9) >= 0.99)
-    assert(r9 >= 4, s"0.9-target should allow a selective geometry, got ${(b9, r9)}")
-    intercept[IllegalArgumentException](bandingFor(0.05, k = 4))
   }
 
   test("pipeline queries leave no session-lifetime caches (unpersist discipline)") {

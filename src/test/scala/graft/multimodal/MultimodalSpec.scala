@@ -265,6 +265,41 @@ class MultimodalSpec extends SparkSpec {
     assert(found == Set((2L, 50L), (3L, 51L)), s"expected only planted dups, got $found")
   }
 
+  test("mediaNearDupPairs: silent clips pair with nothing") {
+    import MultimodalSpec.buildWav
+    val rnd = new scala.util.Random(11)
+    val silent = buildWav(4000, 1, Array.fill(2000)(0.toShort))
+    val tone = buildWav(4000, 1, Array.tabulate(2000)(_ => (rnd.nextInt(40000) - 20000).toShort))
+    val media = Seq(
+      MediaRecord(1L, "audio", "wav", 0, 0, silent),
+      MediaRecord(2L, "audio", "wav", 0, 0, silent.clone()),
+      MediaRecord(3L, "audio", "wav", 0, 0, tone),
+      MediaRecord(4L, "audio", "wav", 0, 0, tone.clone()))
+    val found = mediaNearDupPairs(spark.createDataset(media).repartition(2), 0.999, () => MediaDecoder.real(8))
+      .collect().map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
+    assert(found == Set((3L, 4L)), s"a zero embedding has no cosine, got $found")
+  }
+
+  test("mediaNearDupPairs: a decoder whose embeddings are scaled by 10⁴ finds the same planted pairs") {
+    import MultimodalSpec.{buildBmp, buildWav, scaled}
+    val rnd = new scala.util.Random(7)
+    val media = (0 until 10).map { i =>
+      if (i % 2 == 0)
+        MediaRecord(i.toLong, "audio", "wav", 0, 0,
+          buildWav(4000, 1, Array.tabulate(2000)(_ => (rnd.nextInt(40000) - 20000).toShort)))
+      else
+        MediaRecord(i.toLong, "image", "bmp", 0, 0,
+          buildBmp(6, 6, topDown = false, (_, _) => rnd.nextInt(256)))
+    }
+    val ds = spark.createDataset(media ++ Seq(media(2).copy(media_id = 50L), media(3).copy(media_id = 51L)))
+    def found(mk: () => MediaDecoder) = mediaNearDupPairs(ds.repartition(3), 0.999, mk)
+      .collect().map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
+    val plain = found(() => MediaDecoder.real(8))
+    assert(plain == Set((2L, 50L), (3L, 51L)))
+    assert(found(() => scaled(MediaDecoder.real(8), 1e4f)) == plain,
+      "cosine is scale-invariant, so the decoder's output scale must not move a pair")
+  }
+
   test("chunkAudio: hop-overlapping chunks cover the full duration, audio rows only") {
     val ds = spark.createDataset(fixture(30)).repartition(3)
     val chunks = chunkAudio(ds, chunkMs = 40, hopMs = 20, () => MediaDecoder.deterministicStub(4))
@@ -379,6 +414,14 @@ object MultimodalSpec {
   def fixedFrames(n: Int): Multimodal.MediaDecoder = new Multimodal.MediaDecoder {
     def decode(kind: String, format: String, bytes: Array[Byte]): (Int, Int, Int, Array[Float]) =
       (16, 16, n, Array.fill(8)(0f))
+  }
+
+  /** `inner` with every embedding component multiplied by `k`. */
+  def scaled(inner: Multimodal.MediaDecoder, k: Float): Multimodal.MediaDecoder = new Multimodal.MediaDecoder {
+    def decode(kind: String, format: String, bytes: Array[Byte]): (Int, Int, Int, Array[Float]) = {
+      val (w, h, frames, emb) = inner.decode(kind, format, bytes)
+      (w, h, frames, emb.map(_ * k))
+    }
   }
 
   /** Minimal canonical 16-bit PCM WAV: 44-byte header + interleaved

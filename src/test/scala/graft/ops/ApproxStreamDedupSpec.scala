@@ -8,30 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.streaming.Ev
 
-class ApproxOpsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("approxDistinct within 5% of exact on events") {
-    val ev = Tables.events(spark, sfDir)
-    val exact = ev.groupBy("event_type").agg(countDistinct("user_id").as("n"))
-      .as[(String, Long)].collect().toMap
-    val approx = ApproxOps.approxDistinct(ev, Seq("event_type"), "user_id", rsd = 0.02)
-      .as[(String, Long)].collect().toMap
-    exact.foreach { case (k, n) =>
-      assert(math.abs(approx(k) - n) <= math.max(2, (n * 0.05).toLong), s"$k: $n vs ${approx(k)}")
-    }
-  }
-
-  test("approxQuantiles brackets the exact median") {
-    val ev = Tables.events(spark, sfDir)
-    val med = ApproxOps.approxQuantiles(ev, Seq.empty, "value", Seq(0.25, 0.5, 0.75))
-      .head().getAs[scala.collection.Seq[Double]](0)
-    assert(med.length == 3 && med(0) <= med(1) && med(1) <= med(2))
-    val exactMid = ev.stat.approxQuantile("value", Array(0.5), 0.001)(0)
-    assert(math.abs(med(1) - exactMid) < exactMid * 0.1 + 1.0)
-  }
-}
-
 class StreamDedupSpec extends SparkSpec {
   import spark.implicits._
 
